@@ -66,7 +66,7 @@
 #                  table (vocabulary-bounded at any corpus scale) —
 #                  exact table equality: ranks, pairs, summed counts.
 #   --prune128-cert  the g >= 128 coarse level of assignCentroidPruned
-#                  (the compiled CoarsePruneExpr path past the inline-
+#                  (the compiled graft_coarse_prune kernel past the inline-
 #                  expression codegen cliff at c ~ 16k): (vec_id, cid)
 #                  bit-equality vs the flat broadcast-frame join plan at
 #                  c = 65,536 (g = 256) over a deterministic subsample,

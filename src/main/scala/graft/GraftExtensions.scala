@@ -1,451 +1,243 @@
 package graft
 
-import graft.expressions.{CosineSimilarity, CountInSet, DotProduct, MinHashSignature, RollingHashFingerprint, SimHash64, TopKSketch, WordShingles}
+import java.io.ByteArrayInputStream
+
+import scala.collection.immutable.ArraySeq
+
+import graft.expressions._
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /**
- * Session extensions registering graft's native codegen expressions as SQL
- * functions — the standard `spark.sql.extensions` injection path (no Spark
- * fork, works on any cluster that has the graft jar on the classpath):
- *
- *  - `graft_cosine(ARRAY<FLOAT|DOUBLE>, ARRAY<FLOAT|DOUBLE>) -> DOUBLE`
- *  - `graft_dot(ARRAY<FLOAT|DOUBLE>, ARRAY<FLOAT|DOUBLE>) -> DOUBLE`
- *
- * Activated via `GraftSession.configure` (`spark.sql.extensions=graft.GraftExtensions`).
+ * Session extensions registering every entry of [[GraftExtensions.table]]
+ * as a SQL function — the standard `spark.sql.extensions` injection path
+ * (no Spark fork, works on any cluster that has the graft jar on the
+ * classpath). Activated via `GraftSession.configure`
+ * (`spark.sql.extensions=graft.GraftExtensions`).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  /** Foldable-literal → Int with a usage error instead of the raw
-    * NPE (NULL literal) / ClassCastException (string literal) the bare
-    * `.eval().asInstanceOf[Number]` pattern produced. */
-  private def intLit(
-      e: org.apache.spark.sql.catalyst.expressions.Expression, usage: String): Int =
-    e.eval() match {
-      case n: Number => n.intValue()
-      case other => throw new IllegalArgumentException(
-        s"$usage — got ${if (other == null) "NULL" else other}")
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.table.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name), f.build _))
     }
+}
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(a, b) => CosineSimilarity(a, b)
-          case _ => throw new IllegalArgumentException("graft_cosine(vec_a, vec_b)")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(a, b) => DotProduct(a, b)
-          case _ => throw new IllegalArgumentException("graft_dot(vec_a, vec_b)")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(shingles) => MinHashSignature(shingles)
-          case Seq(shingles, n) if n.foldable =>
-            n.eval() match {
-              case i: Number => MinHashSignature(shingles, i.intValue())
-              case other => throw new IllegalArgumentException(
-                s"graft_minhash: numHashes must be an integer literal, got $other")
-            }
-          case _ => throw new IllegalArgumentException(
-            "graft_minhash(shingles[, numHashes]) — numHashes must be a literal")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(tokens) => SimHash64(tokens)
-          case _ => throw new IllegalArgumentException("graft_simhash(tokens)")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(text) => WordShingles(text)
-          case Seq(text, n) if n.foldable =>
-            WordShingles(text, intLit(n, "graft_shingles(text, n): n must be an integer literal"))
-          case _ => throw new IllegalArgumentException(
-            "graft_shingles(text[, n]) — n must be a literal")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKSketch].getName, "graft_topk"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(col) => TopKSketch(col)
-          case Seq(col, cap) if cap.foldable =>
-            TopKSketch(col, intLit(cap, "graft_topk(col, capacity): capacity must be an integer literal"))
-          case _ => throw new IllegalArgumentException(
-            "graft_topk(col[, capacity]) — capacity must be a literal")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_rollhash"),
-      new ExpressionInfo(classOf[RollingHashFingerprint].getName, "graft_rollhash"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(text) => RollingHashFingerprint(text)
-          case _ => throw new IllegalArgumentException("graft_rollhash(text)")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_zorder"),
-      new ExpressionInfo(classOf[graft.expressions.ZOrderCode].getName, "graft_zorder"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(x, y) => graft.expressions.ZOrderCode(x, y)
-          case _ => throw new IllegalArgumentException("graft_zorder(x, y)")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[graft.expressions.WinnowFingerprints].getName, "graft_winnow"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(text) => graft.expressions.WinnowFingerprints(text)
-          case Seq(text, k, w) if k.foldable && w.foldable =>
-            graft.expressions.WinnowFingerprints(text,
-              intLit(k, "graft_winnow(text, k, w): k must be an integer literal"),
-              intLit(w, "graft_winnow(text, k, w): w must be an integer literal"))
-          case _ => throw new IllegalArgumentException(
-            "graft_winnow(text[, k, w]) — k and w must be literals")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[graft.expressions.BloomMightContain].getName, "graft_bloom_contains"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(key, bloom) => graft.expressions.BloomMightContain(key, bloom)
-          case _ => throw new IllegalArgumentException("graft_bloom_contains(key, bloom)")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bpe_encode"),
-      new ExpressionInfo(classOf[graft.expressions.BpeEncodeDoc].getName, "graft_bpe_encode"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(text) => graft.expressions.BpeEncodeDoc(text)
-          case _ => throw new IllegalArgumentException("graft_bpe_encode(text)")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bpe_count"),
-      new ExpressionInfo(classOf[graft.expressions.BpeTokenCount].getName, "graft_bpe_count"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(text) => graft.expressions.BpeTokenCount(text)
-          case _ => throw new IllegalArgumentException("graft_bpe_count(text)")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_hashed_score"),
-      new ExpressionInfo(classOf[graft.expressions.HashedNgramScore].getName, "graft_hashed_score"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        def dblTable(e: org.apache.spark.sql.catalyst.expressions.Expression): IndexedSeq[Double] =
-          e.eval() match {
-            case a: ArrayData =>
-              // ADVICE r13: toDoubleArray() on an array with a NULL element
-              // throws a raw NPE/assertion — route it to the typed error.
-              var i = 0
-              while (i < a.numElements()) {
-                if (a.isNullAt(i)) throw new IllegalArgumentException(
-                  s"graft_hashed_score: weight table must be a non-null literal ARRAY<DOUBLE>, " +
-                    s"but element $i is NULL")
-                i += 1
-              }
-              a.toDoubleArray().toIndexedSeq
-            case other => throw new IllegalArgumentException(
-              s"graft_hashed_score: weight table must be a non-null literal ARRAY<DOUBLE>, got ${
-                if (other == null) "NULL" else other}")
-          }
-        children match {
-          case Seq(text, u, b) if u.foldable && b.foldable =>
-            graft.expressions.HashedNgramScore(text, dblTable(u), dblTable(b))
-          case _ => throw new IllegalArgumentException(
-            "graft_hashed_score(text, uni_weights, bi_weights) — weight tables must be literal arrays")
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bpe_pairs"),
-      new ExpressionInfo(classOf[graft.expressions.BpePairsUnder].getName, "graft_bpe_pairs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // the learned merge table arrives as a foldable ARRAY<STRING> of
-        // space-joined "left right" entries in rank order (symbols never
-        // contain a space, so the join is lossless)
-        def mergeTable(e: org.apache.spark.sql.catalyst.expressions.Expression): IndexedSeq[(String, String)] =
-          e.eval() match {
-            case a: ArrayData =>
-              (0 until a.numElements()).map { i =>
-                if (a.isNullAt(i)) throw new IllegalArgumentException(
-                  s"graft_bpe_pairs: merge table element $i is NULL")
-                val parts = a.getUTF8String(i).toString.split(' ')
-                if (parts.length != 2 || parts.exists(_.isEmpty))
-                  throw new IllegalArgumentException(
-                    s"graft_bpe_pairs: merge entry $i must be 'left right', got '${a.getUTF8String(i)}'")
-                (parts(0), parts(1))
-              }
-            case other => throw new IllegalArgumentException(
-              s"graft_bpe_pairs: merge table must be a non-null literal ARRAY<STRING>, got ${
-                if (other == null) "NULL" else other}")
-          }
-        children match {
-          case Seq(word, t) if t.foldable =>
-            graft.expressions.BpePairsUnder(word, mergeTable(t))
-          case _ => throw new IllegalArgumentException(
-            "graft_bpe_pairs(word, merges) — merge table must be a literal array")
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_coarse_prune"),
-      new ExpressionInfo(classOf[graft.expressions.CoarsePruneExpr].getName, "graft_coarse_prune"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // model artifacts arrive as foldable ARRAY<DOUBLE> literals (the
-        // graft_hashed_score pattern): flattened g×dim coarse centers,
-        // per-group ‖g‖², slack-inflated radii
-        def dblLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            what: String): IndexedSeq[Double] =
-          e.eval() match {
-            case a: ArrayData =>
-              var i = 0
-              while (i < a.numElements()) {
-                if (a.isNullAt(i)) throw new IllegalArgumentException(
-                  s"graft_coarse_prune: $what must be a non-null literal ARRAY<DOUBLE>, " +
-                    s"but element $i is NULL")
-                i += 1
-              }
-              a.toDoubleArray().toIndexedSeq
-            case other => throw new IllegalArgumentException(
-              s"graft_coarse_prune: $what must be a non-null literal ARRAY<DOUBLE>, got ${
-                if (other == null) "NULL" else other}")
-          }
-        children match {
-          case Seq(vec, cs, gg, rs) if cs.foldable && gg.foldable && rs.foldable =>
-            graft.expressions.CoarsePruneExpr(vec,
-              dblLit(cs, "flat centers"), dblLit(gg, "group norms"), dblLit(rs, "radii"))
-          case _ => throw new IllegalArgumentException(
-            "graft_coarse_prune(vec, flat_centers, group_norms, radii) — model args must be literal arrays")
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_centroid_argmin"),
-      new ExpressionInfo(classOf[graft.expressions.CentroidArgminExpr].getName,
-        "graft_centroid_argmin"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // same literal-model plumbing as graft_coarse_prune: flattened
-        // c×dim centroids + per-centroid ‖c‖², null-element-checked
-        def dblLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            what: String): IndexedSeq[Double] =
-          e.eval() match {
-            case a: ArrayData =>
-              var i = 0
-              while (i < a.numElements()) {
-                if (a.isNullAt(i)) throw new IllegalArgumentException(
-                  s"graft_centroid_argmin: $what must be a non-null literal ARRAY<DOUBLE>, " +
-                    s"but element $i is NULL")
-                i += 1
-              }
-              a.toDoubleArray().toIndexedSeq
-            case other => throw new IllegalArgumentException(
-              s"graft_centroid_argmin: $what must be a non-null literal ARRAY<DOUBLE>, got ${
-                if (other == null) "NULL" else other}")
-          }
-        children match {
-          case Seq(vec, cs, ccs) if cs.foldable && ccs.foldable =>
-            graft.expressions.CentroidArgminExpr(vec,
-              dblLit(cs, "flat centroids"), dblLit(ccs, "centroid norms"))
-          case _ => throw new IllegalArgumentException(
-            "graft_centroid_argmin(vec, flat_centroids, centroid_norms) — model args must be literal arrays")
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_residual"),
-      new ExpressionInfo(classOf[graft.expressions.ResidualExpr].getName,
-        "graft_residual"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // same literal-model plumbing as graft_centroid_argmin
-        def dblLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            what: String): IndexedSeq[Double] =
-          e.eval() match {
-            case a: ArrayData =>
-              var i = 0
-              while (i < a.numElements()) {
-                if (a.isNullAt(i)) throw new IllegalArgumentException(
-                  s"graft_residual: $what must be a non-null literal ARRAY<DOUBLE>, " +
-                    s"but element $i is NULL")
-                i += 1
-              }
-              a.toDoubleArray().toIndexedSeq
-            case other => throw new IllegalArgumentException(
-              s"graft_residual: $what must be a non-null literal ARRAY<DOUBLE>, got ${
-                if (other == null) "NULL" else other}")
-          }
-        children match {
-          case Seq(vec, cid, cs, d) if cs.foldable && d.foldable =>
-            val dim = d.eval() match {
-              case i: Int => i
-              case other => throw new IllegalArgumentException(
-                s"graft_residual: dim must be a literal INT, got ${
-                  if (other == null) "NULL" else other}")
-            }
-            graft.expressions.ResidualExpr(vec, cid, dblLit(cs, "flat centroids"), dim)
-          case _ => throw new IllegalArgumentException(
-            "graft_residual(vec, cid, flat_centroids, dim) — model args must be literals")
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[graft.expressions.PqEncodeExpr].getName,
-        "graft_pq_encode"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        def dblLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            what: String): IndexedSeq[Double] =
-          e.eval() match {
-            case a: ArrayData =>
-              var i = 0
-              while (i < a.numElements()) {
-                if (a.isNullAt(i)) throw new IllegalArgumentException(
-                  s"graft_pq_encode: $what must be a non-null literal ARRAY<DOUBLE>, " +
-                    s"but element $i is NULL")
-                i += 1
-              }
-              a.toDoubleArray().toIndexedSeq
-            case other => throw new IllegalArgumentException(
-              s"graft_pq_encode: $what must be a non-null literal ARRAY<DOUBLE>, got ${
-                if (other == null) "NULL" else other}")
-          }
-        def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            what: String): Int =
-          e.eval() match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              s"graft_pq_encode: $what must be a literal INT, got ${
-                if (other == null) "NULL" else other}")
-          }
-        children match {
-          case Seq(vec, cb, m, k) if cb.foldable && m.foldable && k.foldable =>
-            graft.expressions.PqEncodeExpr(vec,
-              dblLit(cb, "flat codebooks"), intLit(m, "m"), intLit(k, "ksub"))
-          case _ => throw new IllegalArgumentException(
-            "graft_pq_encode(vec, flat_codebooks, m, ksub) — model args must be literals")
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_adc"),
-      new ExpressionInfo(classOf[graft.expressions.AdcSumExpr].getName, "graft_adc"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        def dblLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            what: String): IndexedSeq[Double] =
-          e.eval() match {
-            case a: ArrayData =>
-              var i = 0
-              while (i < a.numElements()) {
-                if (a.isNullAt(i)) throw new IllegalArgumentException(
-                  s"graft_adc: $what must be a non-null literal ARRAY<DOUBLE>, " +
-                    s"but element $i is NULL")
-                i += 1
-              }
-              a.toDoubleArray().toIndexedSeq
-            case other => throw new IllegalArgumentException(
-              s"graft_adc: $what must be a non-null literal ARRAY<DOUBLE>, got ${
-                if (other == null) "NULL" else other}")
-          }
-        children match {
-          case Seq(codes, tab, k) if tab.foldable && k.foldable =>
-            val ks = k.eval() match {
-              case i: Int => i
-              case other => throw new IllegalArgumentException(
-                s"graft_adc: ksub must be a literal INT, got ${
-                  if (other == null) "NULL" else other}")
-            }
-            graft.expressions.AdcSumExpr(codes, dblLit(tab, "flat adc table"), ks)
-          case _ => throw new IllegalArgumentException(
-            "graft_adc(codes, flat_table, ksub) — table args must be literals")
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_adc_table"),
-      new ExpressionInfo(classOf[graft.expressions.PqTableExpr].getName,
-        "graft_adc_table"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // same literal-model plumbing as graft_pq_encode
-        def dblLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            what: String): IndexedSeq[Double] =
-          e.eval() match {
-            case a: ArrayData =>
-              var i = 0
-              while (i < a.numElements()) {
-                if (a.isNullAt(i)) throw new IllegalArgumentException(
-                  s"graft_adc_table: $what must be a non-null literal ARRAY<DOUBLE>, " +
-                    s"but element $i is NULL")
-                i += 1
-              }
-              a.toDoubleArray().toIndexedSeq
-            case other => throw new IllegalArgumentException(
-              s"graft_adc_table: $what must be a non-null literal ARRAY<DOUBLE>, got ${
-                if (other == null) "NULL" else other}")
-          }
-        def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-            what: String): Int =
-          e.eval() match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              s"graft_adc_table: $what must be a literal INT, got ${
-                if (other == null) "NULL" else other}")
-          }
-        children match {
-          case Seq(vec, cb, m, k) if cb.foldable && m.foldable && k.foldable =>
-            graft.expressions.PqTableExpr(vec,
-              dblLit(cb, "flat codebooks"), intLit(m, "m"), intLit(k, "ksub"))
-          case _ => throw new IllegalArgumentException(
-            "graft_adc_table(vec, flat_codebooks, m, ksub) — model args must be literals")
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_adc_dyn"),
-      new ExpressionInfo(classOf[graft.expressions.AdcDynExpr].getName,
-        "graft_adc_dyn"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        children match {
-          case Seq(codes, tab, k) if k.foldable =>
-            val ks = k.eval() match {
-              case i: Int => i
-              case other => throw new IllegalArgumentException(
-                s"graft_adc_dyn: ksub must be a literal INT, got ${
-                  if (other == null) "NULL" else other}")
-            }
-            graft.expressions.AdcDynExpr(codes, tab, ks)
-          case _ => throw new IllegalArgumentException(
-            "graft_adc_dyn(codes, tab, ksub) — ksub must be a literal INT")
-        }
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_clf_score"),
-      new ExpressionInfo(classOf[graft.expressions.ClfScoreExpr].getName, "graft_clf_score"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          case Seq(text) => graft.expressions.ClfScoreExpr(text)
-          case _ => throw new IllegalArgumentException("graft_clf_score(text)")
-        }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_count_in"),
-      new ExpressionInfo(classOf[CountInSet].getName, "graft_count_in"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        children match {
-          // second arg: a foldable array of string literals (the word set)
-          case Seq(text, set) if set.foldable && set.eval() != null =>
-            val words = set.eval().asInstanceOf[ArrayData]
-              .toArray[UTF8String](org.apache.spark.sql.types.StringType).map(_.toString).toSeq
-            CountInSet(text, words)
-          case _ => throw new IllegalArgumentException(
-            "graft_count_in(text, array('w1', ...)) — the word set must be a non-null literal array")
-        }))
+object GraftExtensions {
+
+  /** A literal model argument: its name in error messages, its SQL kind
+    * (INT: a positive integer of any integral type; ARRAY<DOUBLE>,
+    * ARRAY<STRING> or BINARY: non-NULL, no NULL element) and its value
+    * when omitted. */
+  final case class Arg(what: String, kind: DataType, default: Option[Int] = None)
+
+  private def posInt(what: String, default: Option[Int] = None): Arg = Arg(what, IntegerType, default)
+  private def doubles(what: String): Arg = Arg(what, ArrayType(DoubleType))
+  private def strings(what: String): Arg = Arg(what, ArrayType(StringType))
+
+  /** The one reader of literal model arguments, run by the function
+    * builder: the value of a foldable literal of `arg`'s kind, or an
+    * analysis-time "<fn>: <what> must be …" error. */
+  private def literal(fn: String, arg: Arg, e: Expression): Any = {
+    val want =
+      if (arg.kind == IntegerType) "a positive integer literal" else s"a non-null literal ${arg.kind.sql}"
+    def fail(detail: String = ""): Nothing =
+      throw new IllegalArgumentException(s"$fn: ${arg.what} must be $want$detail")
+    val v = if (e.foldable) e.eval() else null
+    (arg.kind, e.dataType, v) match {
+      case (IntegerType, ByteType | ShortType | IntegerType | LongType, n: java.lang.Number)
+          if n.longValue >= 1 && n.longValue <= Int.MaxValue => n.intValue
+      case (ArrayType(elem, _), ArrayType(t, _), a: ArrayData) if t == elem || t == NullType =>
+        (0 until a.numElements()).find(a.isNullAt).foreach(i => fail(s", but element $i is NULL"))
+        if (elem == DoubleType) a.toDoubleArray().toIndexedSeq
+        else IndexedSeq.tabulate(a.numElements())(a.getUTF8String(_).toString)
+      case (BinaryType, BinaryType, b: Array[Byte]) => ArraySeq.unsafeWrapArray(b)
+      case _ => fail()
+    }
   }
+
+  /** One `graft_*` SQL function: `data` leading column args, then the
+    * literal model args `model` — all given, or all omitted when every one
+    * has a default. */
+  sealed trait Fn {
+    def name: String
+    def usage: String
+    def data: Int
+    def model: Seq[Arg]
+    def cls: Class[_]
+    def make(data: Seq[Expression], model: Seq[Any]): Expression
+
+    final def build(args: Seq[Expression]): Expression = {
+      val (cols, lits) = args.splitAt(data)
+      val values =
+        if (cols.size < data) throw new IllegalArgumentException(usage)
+        else if (lits.size == model.size) model.zip(lits).map { case (a, e) => literal(name, a, e) }
+        else if (lits.isEmpty && model.forall(_.default.isDefined)) model.map(_.default.get)
+        else throw new IllegalArgumentException(usage)
+      make(cols, values)
+    }
+  }
+
+  /** A pass-through kernel, run by the generic [[Kernel]] node. `check`
+    * returns the type error for the data args, if any, as the words after
+    * the function name ("expects …, got …"); `row` builds the
+    * row function — a `FunctionN` over the N data values — from the model
+    * values and the data types; `nullable`: the row function itself may
+    * return NULL. */
+  final case class Kern(
+      name: String, usage: String, data: Int, model: Seq[Arg],
+      check: Seq[DataType] => Option[String], result: DataType, nullable: Boolean = false)(
+      val row: (Seq[Any], Seq[DataType]) => AnyRef) extends Fn {
+    def cls: Class[_] = classOf[Kernel]
+    def make(data: Seq[Expression], model: Seq[Any]): Expression = Kernel(name, data, model)
+  }
+
+  /** A function with its own expression class. */
+  final case class Own(name: String, usage: String, data: Int, model: Seq[Arg], cls: Class[_])(
+      mk: (Seq[Expression], Seq[Any]) => Expression) extends Fn {
+    def make(data: Seq[Expression], model: Seq[Any]): Expression = mk(data, model)
+  }
+
+  /** Type check: `ok` data arg types pass; others fail with
+    * "expects <what>, got <types>". */
+  private def expects(what: String)(
+      ok: PartialFunction[Seq[DataType], Unit]): Seq[DataType] => Option[String] = {
+    case ts if ok.isDefinedAt(ts) => None
+    case Seq(t) => Some(s"expects $what, got $t")
+    case ts => Some(s"expects $what, got ${ts.mkString("(", ", ", ")")}")
+  }
+  private val doc = expects("a STRING document") { case Seq(StringType) => }
+  private def vector(what: String = "an ARRAY<FLOAT|DOUBLE> vector") =
+    expects(what) { case Seq(ArrayType(FloatType | DoubleType, _)) => }
+
+  private def dbls(v: Any): Array[Double] = v.asInstanceOf[IndexedSeq[Double]].toArray
+  private def isFloat(t: DataType): Boolean = t.asInstanceOf[ArrayType].elementType == FloatType
+
+  /** Every `graft_*` SQL function. The first four generate their loops
+    * inline (a fused dot-and-norms pass over two vectors; a numHashes ×
+    * tokens minima loop; a 64-counter vote loop) and the fifth is an
+    * aggregate, so they keep their own classes; every other entry is a
+    * pass-through kernel whose per-row work is one call into a row
+    * method, and runs as a [[Kernel]]. */
+  val table: Seq[Fn] = Seq(
+    Own("graft_cosine", "graft_cosine(vec_a, vec_b)", 2, Nil, classOf[CosineSimilarity])(
+      (d, _) => CosineSimilarity(d(0), d(1))),
+    Own("graft_dot", "graft_dot(vec_a, vec_b)", 2, Nil, classOf[DotProduct])(
+      (d, _) => DotProduct(d(0), d(1))),
+    Own("graft_minhash", "graft_minhash(shingles[, numHashes])", 1,
+      Seq(posInt("numHashes", Some(64))), classOf[MinHashSignature])(
+      (d, m) => MinHashSignature(d.head, m.head.asInstanceOf[Int])),
+    Own("graft_simhash", "graft_simhash(tokens)", 1, Nil, classOf[SimHash64])(
+      (d, _) => SimHash64(d.head)),
+    Own("graft_topk", "graft_topk(col[, capacity])", 1,
+      Seq(posInt("capacity", Some(1024))), classOf[TopKSketch])(
+      (d, m) => TopKSketch(d.head, m.head.asInstanceOf[Int])),
+
+    Kern("graft_centroid_argmin", "graft_centroid_argmin(vec, flat_centroids, centroid_norms)", 1,
+      Seq(doubles("flat centroids"), doubles("centroid norms")),
+      vector(), IntegerType) {
+      case (Seq(cs, ccs), Seq(t)) => new CentroidArgmin(dbls(cs), dbls(ccs), isFloat(t))
+    },
+    Kern("graft_coarse_prune", "graft_coarse_prune(vec, flat_centers, group_norms, radii)", 1,
+      Seq(doubles("flat centers"), doubles("group norms"), doubles("radii")),
+      vector(), ArrayType(IntegerType, containsNull = false)) {
+      case (Seq(cs, gg, rs), Seq(t)) => new CoarsePrune(dbls(cs), dbls(gg), dbls(rs), isFloat(t))
+    },
+    Kern("graft_pq_encode", "graft_pq_encode(vec, flat_codebooks, m, ksub)", 1,
+      Seq(doubles("flat codebooks"), posInt("m"), posInt("ksub")),
+      vector(), ArrayType(IntegerType, containsNull = true)) {
+      case (Seq(cb, m: Int, k: Int), Seq(t)) => new PqEncode(dbls(cb), m, k, isFloat(t))
+    },
+    Kern("graft_adc_table", "graft_adc_table(vec, flat_codebooks, m, ksub)", 1,
+      Seq(doubles("flat codebooks"), posInt("m"), posInt("ksub")),
+      vector("an ARRAY<FLOAT|DOUBLE> probe vector"),
+      ArrayType(DoubleType, containsNull = true)) {
+      case (Seq(cb, m: Int, k: Int), Seq(t)) => new PqTable(dbls(cb), m, k, isFloat(t))
+    },
+    Kern("graft_adc", "graft_adc(codes, flat_table, ksub)", 1,
+      Seq(doubles("flat adc table"), posInt("ksub")),
+      expects("an ARRAY<INT> codes column") { case Seq(ArrayType(IntegerType, _)) => },
+      DoubleType, nullable = true) {
+      case (Seq(tab, k: Int), _) => new AdcSum(dbls(tab), k)
+    },
+    Kern("graft_adc_dyn", "graft_adc_dyn(codes, tab, ksub)", 2, Seq(posInt("ksub")),
+      expects("(ARRAY<INT> codes, ARRAY<DOUBLE> table)") {
+        case Seq(ArrayType(IntegerType, _), ArrayType(DoubleType, _)) =>
+      },
+      DoubleType, nullable = true) {
+      case (Seq(k: Int), _) => new AdcDyn(k)
+    },
+    Kern("graft_residual", "graft_residual(vec, cid, flat_centroids, dim)", 2,
+      Seq(doubles("flat centroids"), posInt("dim")),
+      expects("(ARRAY<FLOAT|DOUBLE> vector, INT cid)") {
+        case Seq(ArrayType(FloatType | DoubleType, _), IntegerType) =>
+      },
+      ArrayType(DoubleType, containsNull = true), nullable = true) {
+      case (Seq(cs, d: Int), t +: _) => new Residual(dbls(cs), d, isFloat(t))
+    },
+
+    Kern("graft_bpe_pairs", "graft_bpe_pairs(word, merges)", 1, Seq(strings("merge table")),
+      expects("a STRING word") { case Seq(StringType) => },
+      ArrayType(StringType, containsNull = false)) {
+      case (Seq(merges), _) => new BpePairs(merges.asInstanceOf[IndexedSeq[String]])
+    },
+    Kern("graft_bpe_encode", "graft_bpe_encode(text)", 1, Nil, doc,
+      ArrayType(StringType, containsNull = false)) {
+      (_, _) => (t: UTF8String) => BpeEncode.encodeDoc(t)
+    },
+    Kern("graft_bpe_count", "graft_bpe_count(text)", 1, Nil, doc, LongType) {
+      (_, _) => (t: UTF8String) => BpeEncode.tokenCount(t)
+    },
+    Kern("graft_clf_score", "graft_clf_score(text)", 1, Nil, doc, LongType) {
+      (_, _) => (t: UTF8String) => ClfScore.score(t)
+    },
+    Kern("graft_hashed_score", "graft_hashed_score(text, uni_weights, bi_weights)", 1,
+      Seq(doubles("uni weight table"), doubles("bi weight table")),
+      doc, DoubleType) {
+      case (Seq(u, b), _) =>
+        val (uni, bi) = (dbls(u), dbls(b))
+        require(uni.nonEmpty || bi.nonEmpty,
+          "graft_hashed_score: at least one of the weight tables must be non-empty")
+        (t: UTF8String) => HashedScore.score(t, uni, bi)
+    },
+    Kern("graft_rollhash", "graft_rollhash(text)", 1, Nil, doc, LongType) {
+      (_, _) => (t: UTF8String) => RollingHash.hash(t)
+    },
+    Kern("graft_winnow", "graft_winnow(text[, k, w])", 1,
+      Seq(posInt("k", Some(8)), posInt("w", Some(8))), doc, ArrayType(LongType, containsNull = false)) {
+      case (Seq(k: Int, w: Int), _) => (t: UTF8String) => Winnow.fingerprints(t, k, w)
+    },
+    Kern("graft_shingles", "graft_shingles(text[, n])", 1, Seq(posInt("n", Some(3))),
+      doc, ArrayType(StringType, containsNull = false)) {
+      case (Seq(n: Int), _) => (t: UTF8String) => Shingles.compute(t, n)
+    },
+    Kern("graft_count_in", "graft_count_in(tokens, array('w1', ...))", 1, Seq(strings("word set")),
+      expects("ARRAY<STRING> tokens") { case Seq(ArrayType(StringType | NullType, _)) => }, LongType) {
+      case (Seq(words), _) => new CountInSet(words.asInstanceOf[IndexedSeq[String]])
+    },
+
+    Kern("graft_zorder", "graft_zorder(x, y)", 2, Nil, {
+      case Seq(LongType, LongType) => None
+      case ts => Some(s"expects (BIGINT, BIGINT), got ${ts.mkString(" / ")}")
+    }, LongType) {
+      (_, _) => (x: Long, y: Long) => ZOrder.interleave(x, y)
+    },
+    // the serialized filter is parsed once per row function, never per
+    // row; a probe is only ever a PRE-filter ahead of an exact join (false
+    // positives by construction, no false negatives — see BloomPrune)
+    Kern("graft_bloom_contains", "graft_bloom_contains(key, bloom)", 1,
+      Seq(Arg("bloom filter", BinaryType)),
+      expects("a BIGINT key") { case Seq(LongType) => }, BooleanType) {
+      case (Seq(bytes), _) =>
+        val bloom = BloomFilter.readFrom(
+          new ByteArrayInputStream(bytes.asInstanceOf[ArraySeq[Byte]].toArray))
+        (key: Long) => bloom.mightContainLong(key)
+    })
+
+  /** The pass-through kernels by SQL name, for [[Kernel]]. */
+  lazy val kernels: Map[String, Kern] = table.collect { case k: Kern => k.name -> k }.toMap
 }

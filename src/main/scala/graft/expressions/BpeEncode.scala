@@ -1,10 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -32,9 +28,11 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * The merge table is [[graft.functions.BpeTokenizer.Merges]] — the same
  * object the DuckDB oracle generator reads, so engine and oracle cannot
- * drift. [[BpeTokenCount]] is the count-only variant q_pack_bpe consumes:
- * the packing stage needs per-doc token COUNTS, not the token arrays, so
- * it skips materializing the output entirely (no per-row array alloc).
+ * drift. [[encodeDoc]] is the row function of `graft_bpe_encode`;
+ * [[tokenCount]] (`graft_bpe_count`) is the count-only variant q_pack_bpe
+ * consumes: the packing stage needs per-doc token COUNTS, not the token
+ * arrays, so it skips materializing the output entirely (no per-row
+ * array alloc).
  *
  * Scale shape (unchanged from the HOF form, minus the constant factor):
  * a narrow per-row map, no shuffle, merge table ships as part of the
@@ -50,7 +48,7 @@ object BpeEncode {
     * `table`: split per code point, then each merge applied as one
     * left-to-right non-overlapping in-place pass. Returns (syms, n) —
     * the live prefix length n, the backing array may be longer. The
-    * table is a parameter so BPE TRAINING ([[BpePairsUnder]]) can walk
+    * table is a parameter so BPE TRAINING ([[BpePairs]]) can walk
     * the same loop under its growing learned table; the fixed-table
     * apply path passes [[merges]] and is bit-unchanged. */
   private[expressions] def wordSymbols(
@@ -100,8 +98,7 @@ object BpeEncode {
   }
 
   /** Walk the document's words (split-on-" +" semantics, limit −1) and
-    * fold each through [[encodeWord]]. Shared by both expressions and the
-    * generated code. */
+    * fold each through [[encodeWord]]. Shared by both row functions. */
   private def walk(text: UTF8String, out: java.util.ArrayList[UTF8String]): Long = {
     val s = text.toString
     val n = s.length
@@ -132,34 +129,32 @@ object BpeEncode {
 }
 
 /**
- * STRING word → ARRAY<STRING> of adjacent symbol pairs ("left right",
- * space-joined — symbols never contain a space, words being split on
- * runs of them, so the join is lossless) after encoding the word under a
- * LEARNED merge table that rides along as an expression reference. One
- * pair per adjacent POSITION — overlapping occurrences count, e.g.
- * "aaa" → [(a,a), (a,a)] — which is the Sennrich et al. 2016 `get_stats`
- * definition BPE training maximizes over. SQL name `graft_bpe_pairs`;
- * the per-iteration scoring pass of [[graft.functions.BpeTrain]].
+ * `graft_bpe_pairs`' row function: STRING word → ARRAY<STRING> of adjacent
+ * symbol pairs ("left right", space-joined — symbols never contain a
+ * space, words being split on runs of them, so the join is lossless)
+ * after encoding the word under a LEARNED merge table given as
+ * space-joined "left right" entries in rank order. One pair per adjacent
+ * POSITION — overlapping occurrences count, e.g. "aaa" → [(a,a), (a,a)] —
+ * which is the Sennrich et al. 2016 `get_stats` definition BPE training
+ * maximizes over; the per-iteration scoring pass of
+ * [[graft.functions.BpeTrain]].
  *
  * Input is a single WORD (the trainer's word-frequency table), not a
  * document — doc→word splitting happened once, in the fit's only
  * corpus-scale pass.
  */
-case class BpePairsUnder(child: Expression, table: IndexedSeq[(String, String)])
-    extends UnaryExpression {
+final class BpePairs(merges: IndexedSeq[String]) extends (UTF8String => Any) with Serializable {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bpe_pairs expects a STRING word, got ${child.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
+  private val tableArr: Array[(String, String, String)] =
+    merges.iterator.zipWithIndex.map { case (entry, i) =>
+      val parts = entry.split(' ')
+      require(parts.length == 2 && parts.forall(_.nonEmpty),
+        s"graft_bpe_pairs: merge entry $i must be 'left right', got '$entry'")
+      (parts(0), parts(1), parts(0) + parts(1))
+    }.toArray
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  def apply(word: UTF8String): Any = pairsRow(word)
 
-  @transient private lazy val tableArr: Array[(String, String, String)] =
-    table.map { case (a, b) => (a, b, a + b) }.toArray
-
-  /** Public for generated code. */
   def pairsRow(word: UTF8String): ArrayData = {
     val s = word.toString
     if (s.isEmpty) return new GenericArrayData(Array.empty[AnyRef])
@@ -173,62 +168,4 @@ case class BpePairsUnder(child: Expression, table: IndexedSeq[(String, String)])
     }
     new GenericArrayData(out)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    pairsRow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpePairs", this, classOf[BpePairsUnder].getName)
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.pairsRow($s);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** STRING → ARRAY<STRING>: the document's BPE token stream under the fixed
-  * merge table. SQL name `graft_bpe_encode`. */
-case class BpeEncodeDoc(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bpe_encode expects a STRING document, got ${child.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    BpeEncode.encodeDoc(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expressions.BpeEncode.encodeDoc($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** STRING → BIGINT: `size(graft_bpe_encode(text))` without materializing
-  * the token array. SQL name `graft_bpe_count`. */
-case class BpeTokenCount(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_bpe_count expects a STRING document, got ${child.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    BpeEncode.tokenCount(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expressions.BpeEncode.tokenCount($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

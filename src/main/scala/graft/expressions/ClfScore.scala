@@ -1,13 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Hashed n-gram linear classifier score (fastText shape) as ONE codegen
- * expression — the compiled form of `TextAnalysis.clfScore`'s HOF fold.
+ * Hashed n-gram linear classifier score (fastText shape) as ONE compiled
+ * loop — `graft_clf_score`'s row function, the compiled form of
+ * `TextAnalysis.clfScore`'s HOF fold.
  *
  * Semantics (bit-identical to the HOF form, pinned by ClassifierSpec):
  * whitespace tokens `w = split(text, " +")` (Java limit -1 — leading and
@@ -17,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * ([[RollingHash]]) and weight the Knuth multiplicative bucket formula
  * (`(h mod 4096)·2654435761 mod 1000003 − 500001`, exact in Long).
  *
- * WHY an expression and not the HOF: the `aggregate(transform(...))`
+ * WHY a compiled kernel and not the HOF: the `aggregate(transform(...))`
  * chain is interpreted Catalyst — per n-gram it allocates the bigram
  * string, boxes the accumulator, and walks a closure tree; on the full
  * corpus that made q_classifier the most expensive non-BPE query in the
@@ -65,26 +63,4 @@ object ClfScore {
     }
     sum
   }
-}
-
-/** STRING → LONG hashed-bigram classifier score (codegen'd). */
-case class ClfScoreExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType != StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_clf_score expects a STRING document, got ${child.dataType}")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    ClfScore.score(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expressions.ClfScore.score($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -38,7 +38,7 @@ object HashSeeds {
 
 /** MinHash signature: ARRAY<STRING> shingles → ARRAY<LONG> of `numHashes`
   * minima, one fused loop (shingles × hash functions). */
-case class MinHashSignature(child: Expression, numHashes: Int = 64, seed: Long = 42L)
+case class MinHashSignature(child: Expression, numHashes: Int, seed: Long = 42L)
     extends UnaryExpression {
 
   // analysis-time guard: getUTF8String on a non-string array element would

@@ -1,8 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -14,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * ([[RollingHash]]) into `weights.length` buckets, score =
  * Σ uni(bucket(h(tᵢ))) + Σ bi(bucket(h(tⱼ ⧺ " " ⧺ tⱼ₊₁))).
  *
- * This one expression is the per-document scoring pass for BOTH
- * bucket-table pipeline stages:
+ * `graft_hashed_score`'s row function is the per-document scoring pass
+ * for BOTH bucket-table pipeline stages:
  *  - DSIR importance weights (Xie et al., NeurIPS 2023): `uni`/`bi` =
  *    per-bucket log((target_count+1)/(target_total+B)) −
  *    log((raw_count+1)/(raw_total+B)) — the log-likelihood ratio of a
@@ -26,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * WHY this shape at 100 TB: the weight tables are ≤ B ≈ 4096 doubles —
  * model-frame artifacts collected once (the repo's documented bounded-
- * collect class) and embedded as expression references, so the scoring
+ * collect class) and embedded in the row function, so the scoring
  * pass is NARROW whole-stage codegen over the corpus: zero shuffles,
  * zero joins, no n-gram explode (the explode+join formulation multiplies
  * the shuffle by tokens-per-doc; the DuckDB oracle uses exactly that
@@ -59,38 +56,4 @@ object HashedScore {
     }
     sum
   }
-}
-
-/** STRING → DOUBLE trained hashed-n-gram score (codegen'd); `uni`/`bi`
-  * come in as foldable array literals and ride along as expression
-  * references (an empty table disables that n-gram order). */
-case class HashedNgramScore(child: Expression, uni: IndexedSeq[Double], bi: IndexedSeq[Double])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType != StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_hashed_score expects a STRING document, got ${child.dataType}")
-    else if (uni.isEmpty && bi.isEmpty)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "graft_hashed_score: at least one of the weight tables must be non-empty")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = DoubleType
-
-  @transient private lazy val uniArr: Array[Double] = uni.toArray
-  @transient private lazy val biArr: Array[Double]  = bi.toArray
-
-  /** Public for generated code. */
-  def scoreRow(text: UTF8String): Double = HashedScore.score(text, uniArr, biArr)
-
-  override def nullSafeEval(input: Any): Any = scoreRow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hashedScore", this, classOf[HashedNgramScore].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.scoreRow($s);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,8 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -39,26 +36,4 @@ object RollingHash {
 
   /** Shared by eval and generated code (one call per row; the loop JITs). */
   def hash(s: UTF8String): Long = hashCont(Seed, s.toString)
-}
-
-/** STRING → LONG rolling-hash fingerprint (codegen'd). */
-case class RollingHashFingerprint(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType != StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_rollhash expects a STRING document, got ${child.dataType}")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    RollingHash.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expressions.RollingHash.hash($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

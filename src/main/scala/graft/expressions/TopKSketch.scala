@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 case class TopKSketch(
     child: Expression,
-    capacity: Int = 1024,
+    capacity: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
 ) extends TypedImperativeAggregate[mutable.HashMap[String, Long]] {

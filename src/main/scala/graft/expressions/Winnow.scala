@@ -1,10 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -25,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * the sorted distinct fingerprint array (LongType elements).
  */
 object Winnow {
-  /** Shared by eval and generated code. */
+  /** `graft_winnow`'s row function. */
   def fingerprints(text: UTF8String, k: Int, w: Int): ArrayData = {
     val s = text.toString
     val n = s.length
@@ -65,27 +61,4 @@ object Winnow {
     while (it.hasNext) { arr(p) = it.next(); p += 1 }
     new GenericArrayData(arr)
   }
-}
-
-/** STRING → ARRAY<BIGINT> sorted distinct winnowing fingerprints. */
-case class WinnowFingerprints(child: Expression, k: Int = 8, w: Int = 8)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"graft_winnow expects a STRING document, got ${child.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    Winnow.fingerprints(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expressions.Winnow.fingerprints($s, $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
  *    the first shuffle.
  *  - Each iteration: encode every distinct word under the k merges
  *    learned so far and emit its adjacent symbol pairs — one compiled
- *    pass ([[graft.expressions.BpePairsUnder]], `graft_bpe_pairs`, the
- *    merge table riding as an expression reference) — then one
+ *    pass (`graft_bpe_pairs`, [[graft.expressions.BpePairs]], the
+ *    merge table a literal model argument of the kernel) — then one
  *    vocabulary-bounded partial aggregation Σ freq per pair and a
  *    1-row argmax collect. No corpus I/O, no join.
  *  - Pair statistics are per adjacent POSITION (overlapping occurrences

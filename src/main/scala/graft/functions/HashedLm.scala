@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
  * Hashed n-gram language-model fitting for the two trained-weight scoring
  * pipelines (the instantiation of [[TextAnalysis.clfScore]]'s promised
  * "swap in trained weights" path, scored by the compiled
- * `graft_hashed_score` — [[graft.expressions.HashedNgramScore]]):
+ * `graft_hashed_score` — [[graft.expressions.HashedScore]]):
  *
  *  - DSIR importance weights (Xie et al., NeurIPS 2023, "Data Selection
  *    for Language Models via Importance Resampling"): per-bucket

@@ -43,7 +43,7 @@ object TextAnalysis {
   )
 
   /** Occurrences of `markers` tokens in `text` — routed through the
-    * compiled `graft_count_in` ([[graft.expressions.CountInSet]]); the
+    * compiled `graft_count_in` kernel ([[graft.expressions.CountInSet]]); the
     * interpreted HOF form is kept for the spec cross-check. */
   private def markerHits(text: Column, markers: Seq[String]): Column =
     call_function("graft_count_in", tokens(text), typedLit(markers))
@@ -144,7 +144,7 @@ object TextAnalysis {
 
   /** Per-document classifier score: Σ weight over unigrams + bigrams, one
     * codegen-narrow pass, exact Long — routed through the compiled
-    * `graft_clf_score` ([[graft.expressions.ClfScoreExpr]]); the
+    * `graft_clf_score` kernel ([[graft.expressions.ClfScore]]); the
     * interpreted HOF form below is kept for the spec cross-check (the
     * markerHits / BPE-encode precedent: HOF is the definitional witness,
     * the expression is the production path). */

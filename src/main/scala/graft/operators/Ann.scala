@@ -185,7 +185,7 @@ object Ann {
   /** Nearest-centroid assignment: `cid` = argmin over C squared-L2
     * distances (‖v‖² is common and drops out of the argmin:
     * d_j = −2⟨v,c_j⟩ + ‖c_j‖²), as ONE compiled loop per row
-    * ([[graft.expressions.CentroidArgminExpr]], `graft_centroid_argmin`).
+    * (`graft_centroid_argmin`, [[graft.expressions.CentroidArgmin]]).
     * The former formulation — C inline distance expressions reduced by a
     * C-wide `array_position(ds, array_min(ds))` — computed the identical
     * values but generated whole-stage methods past HotSpot's JIT size
@@ -514,7 +514,7 @@ object Ann {
    * unchanged (filter nprobe cells, then ADC-rank inside them).
    */
   /** The ADC sum `Σ_s tab(s)(codes(s))` over a `codes` column as ONE
-    * compiled loop ([[graft.expressions.AdcSumExpr]], `graft_adc`): the
+    * compiled loop (`graft_adc`, [[graft.expressions.AdcSum]]): the
     * 0.0-seeded left fold matches the oracle's list_aggregate order
     * (m float adds, same sequence both engines). The former
     * zip_with+aggregate formulation was two INTERPRETED higher-order
@@ -600,7 +600,7 @@ object Ann {
   // ----- residual IVFADC (Jégou et al. 2011 §IV, the full refinement) ------
 
   /** The residual `v − centroid(cid)` as ONE compiled loop per row
-    * ([[graft.expressions.ResidualExpr]], `graft_residual`): float→double
+    * (`graft_residual`, [[graft.expressions.Residual]]): float→double
     * element promotion, NULL elements stay NULL (so the downstream encode
     * nulls exactly the subspaces it would null on the raw vector), NULL
     * vec/cid → NULL. Composes with `graft_pq_encode` inside one
@@ -1627,7 +1627,7 @@ object Ann {
    * plans — bit-equality certified by `Probe --semdedup-cert` legs 2–4.
    *
    * Plan shape: the coarse level is ONE compiled loop at every g
-   * ([[graft.expressions.CoarsePruneExpr]], `graft_coarse_prune`) — a
+   * (`graft_coarse_prune`, [[graft.expressions.CoarsePrune]]) — a
    * narrow per-row map with no shuffle, no interpreted HOF, and no
    * g-wide expression trees, so g is bounded only by the broadcastable
    * model size. An inline-expression form existed for g < 128 on the

@@ -41,9 +41,9 @@ object Dedup {
   }
 
   /** Distinct word n-gram shingles of `text` (default 3-word shingles),
-    * via the fused codegen expression `graft_shingles`
-    * ([[graft.expressions.WordShingles]]). Texts shorter than n words
-    * yield an empty array. */
+    * via the compiled `graft_shingles` kernel (an entry of
+    * [[graft.GraftExtensions.table]], [[graft.expressions.Shingles]]).
+    * Texts shorter than n words yield an empty array. */
   def shingles(text: Column, n: Int = 3): Column =
     call_function("graft_shingles", text, lit(n))
 

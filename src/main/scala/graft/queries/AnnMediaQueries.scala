@@ -263,7 +263,7 @@ object AnnMediaQueries {
   /** DuckDB replay of [[graft.operators.Ann.ivfPqResTopK]] — residual
     * IVFADC (Jégou §IV's full refinement): the shared preamble's cell
     * cut, then literal centroid SUBTRACTION (`v[i] − cv[i]` elementwise,
-    * the [[graft.expressions.ResidualExpr]] arithmetic — NULL elements
+    * the `graft_residual` ([[graft.expressions.Residual]]) arithmetic — NULL elements
     * propagate identically), the shared encode fragments over the
     * residual, a per-cell CASE of literal ADC tables (each recorded from
     * the engine's own probe-residual computation), the unrounded-adc

@@ -454,7 +454,7 @@ object TextQueries {
     // pair-count → global argmax → re-encode, run the scale-true way —
     // ONE corpus pass to the word-frequency table, then every iteration
     // is a compiled pair-emission pass (graft_bpe_pairs, the learned
-    // table riding as an expression reference) over the bounded distinct-
+    // table a literal model argument) over the bounded distinct-
     // word table plus a vocab-bounded partial agg and a 1-row collect.
     // Output is the ≤12-row trained merge table (rank, left, right,
     // pair_count) — a model artifact, scale-stable like every fit.

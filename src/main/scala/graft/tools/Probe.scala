@@ -849,7 +849,7 @@ object Probe {
       // g ≥ 128 coarse-level certificate (VERDICT r13 item 2, leg 5 of
       // the semdedup family): past c ≈ 16k, assignCentroidPruned's coarse
       // level switches from √c inline expressions to the ONE-compiled-
-      // loop CoarsePruneExpr (`graft_coarse_prune`) — this cert pins that
+      // loop kernel `graft_coarse_prune` — this cert pins that
       // regime. Model: c = 65,536 deterministic corpus vectors (k-means++
       // -style sampled centroids; quantizer QUALITY is irrelevant to the
       // equality, only g = ⌈√c⌉ = 256 ≥ 128 matters), vectors cast to

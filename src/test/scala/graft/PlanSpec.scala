@@ -83,18 +83,18 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_bloomjoin: bloom probe filters the fact side below the join") {
     val p = plan("q_bloomjoin")
-    assert(p.contains("bloommightcontain"), s"expected the bloom predicate:\n$p")
+    assert(p.contains("graft_bloom_contains"), s"expected the bloom predicate:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast dim join:\n$p")
     // the probe must run BEFORE the join: in the plan string the Filter
     // node carrying it appears below the join, above the lineitem scan
     val joinIdx  = p.indexOf("BroadcastHashJoin")
-    val bloomIdx = p.indexOf("bloommightcontain")
+    val bloomIdx = p.indexOf("graft_bloom_contains")
     assert(bloomIdx > joinIdx, s"bloom filter should sit under the join:\n$p")
   }
 
   test("q_zorder: codegen'd morton key feeding a partial aggregate") {
     val p = plan("q_zorder")
-    assert(p.toLowerCase.contains("zordercode"), s"expected the native zorder expression:\n$p")
+    assert(p.toLowerCase.contains("graft_zorder"), s"expected the native zorder expression:\n$p")
     assert(p.contains("partial_"), s"expected map-side partial agg:\n$p")
   }
 
@@ -222,7 +222,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_classifier: compiled scorer in a narrow pass — no joins, partial agg") {
     val p = plan("q_classifier")
-    assert(p.toLowerCase.contains("clfscoreexpr"),
+    assert(p.toLowerCase.contains("graft_clf_score"),
       s"expected the compiled graft_clf_score, not the HOF fold:\n$p")
     assert(!p.contains("Join"), s"classifier scoring must not join:\n$p")
     assert(p.contains("partial_"), s"expected map-side partial agg:\n$p")
@@ -234,7 +234,7 @@ class PlanSpec extends AnyFunSuite {
     // the pass a 100 TB corpus actually pays per document
     for (name <- Seq("q_dsir", "q_perplexity")) {
       val p = plan(name)
-      assert(p.toLowerCase.contains("hashedngramscore"),
+      assert(p.toLowerCase.contains("graft_hashed_score"),
         s"$name: expected the compiled graft_hashed_score:\n$p")
       assert(!p.contains("Join"), s"$name: scoring must not join or explode:\n$p")
       assert(!p.contains("Generate"), s"$name: no per-doc n-gram explode:\n$p")
@@ -249,22 +249,24 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), s"corpus must not shuffle on source:\n$p")
   }
 
-  test("no declared batch query plans a CartesianProduct") {
-    // the one plan shape that is ALWAYS wrong at 100 TB: every declared
-    // subquery/probe/cross pattern must come out as a broadcast (1-row
-    // BNLJ) or an equi-join, never a partition-cartesian. Streaming
-    // bodies are excluded (planning them runs the stream); every batch
-    // query's physical plan is swept. Each query plans inside its own Try
-    // — round 8 showed a single analysis-broken query (q_rangejoin)
-    // aborting the sweep and masking plan regressions across the other
-    // 140; now every failure is reported per-query and the cartesian
-    // check still runs over everything that DID plan.
-    val planned = SparkEntry.queries.keys.toSeq.sorted
+  // Every declared batch query's physical plan. Streaming bodies are
+  // excluded (planning them runs the stream). Each query plans inside its
+  // own Try — round 8 showed a single analysis-broken query (q_rangejoin)
+  // aborting the sweep and masking plan regressions across the other 140;
+  // now every failure is reported per-query and the checks still run over
+  // everything that DID plan.
+  private lazy val planned: Seq[(String, scala.util.Try[String])] =
+    SparkEntry.queries.keys.toSeq.sorted
       .filterNot(_.startsWith("q_stream"))
       .map { n =>
         n -> scala.util.Try(
           SparkEntry.queries(n)(spark, dir).queryExecution.executedPlan.toString)
       }
+
+  test("no declared batch query plans a CartesianProduct") {
+    // the one plan shape that is ALWAYS wrong at 100 TB: every declared
+    // subquery/probe/cross pattern must come out as a broadcast (1-row
+    // BNLJ) or an equi-join, never a partition-cartesian
     val broken = planned.collect { case (n, scala.util.Failure(e)) =>
       val msg = Option(e.getMessage).iterator
         .flatMap(_.linesIterator).nextOption().getOrElse("")
@@ -276,5 +278,38 @@ class PlanSpec extends AnyFunSuite {
     }
     val problems = broken ++ offenders
     assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("the batch queries whose plans run a pass-through kernel") {
+    // the query set a change to graft.expressions.Kernel or a kernel's row
+    // function must re-bench and re-verify (printed for
+    // SPARK_GRAFT_BENCH_ONLY and the Verify subset arguments)
+    val kernels = GraftExtensions.kernels.keys.toSeq.sorted
+    val users = planned.collect {
+      case (n, scala.util.Success(p)) if kernels.exists(k => p.contains(s"$k(")) => n
+    }
+    info(s"kernel queries (${users.size}): ${users.mkString(",")}")
+    assert(Set("q_ivf", "q_minhash_lsh", "q_zorder", "q_bloomjoin", "q_classifier")
+      .subsetOf(users.toSet), users.mkString(","))
+  }
+
+  test("graft_centroid_argmin (q_ivf) and graft_shingles (q_minhash_lsh) run in codegen stages") {
+    // the generic kernel node has no interpreted fallback: every plan line
+    // that evaluates it (scan DataFilters only feed stats pruning) sits in
+    // a *(n) WholeStageCodegen stage of the final adaptive plan, and with
+    // the codegen fallback off a compile failure would fail the query
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      for ((q, fn) <- Seq("q_ivf" -> "graft_centroid_argmin", "q_minhash_lsh" -> "graft_shingles")) {
+        val df = SparkEntry.queries(q)(spark, dir)
+        df.collect() // settles the final plan, where the codegen stages are
+        val p = df.queryExecution.executedPlan.toString
+        val uses = p.linesIterator.takeWhile(!_.contains("== Initial Plan =="))
+          .filter(l => l.contains(s"$fn(") && !l.contains("FileScan")).toSeq
+        assert(uses.nonEmpty, s"$q: expected $fn in the final plan:\n$p")
+        assert(uses.forall(_.matches("""[\s:+|-]*\*\(\d+\) .*""")),
+          s"$q: $fn evaluated outside whole-stage codegen:\n$p")
+      }
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 }

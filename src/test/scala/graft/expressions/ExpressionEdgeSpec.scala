@@ -100,4 +100,98 @@ class ExpressionEdgeSpec extends AnyFunSuite {
     val ci = intercept[Exception](one("graft_count_in(array(1L), array('a'))"))
     assert(ci.getMessage.contains("ARRAY<STRING>"))
   }
+
+  // One serialized bloom filter holding key 1, as a SQL binary literal.
+  private lazy val bloomHex: String = {
+    val bf  = org.apache.spark.util.sketch.BloomFilter.create(16)
+    bf.putLong(1L)
+    val out = new java.io.ByteArrayOutputStream()
+    bf.writeTo(out)
+    out.toByteArray.map(b => f"$b%02X").mkString("X'", "", "'")
+  }
+
+  // Per pass-through kernel: well-typed data args (SQL value, SQL type),
+  // the trailing literal model args, and a wrong-typed first data arg.
+  private lazy val kernelCases: Map[String, (Seq[(String, String)], String, String)] = Map(
+    "graft_adc" -> (Seq("array(0, 1)" -> "ARRAY<INT>"), ", array(0.5D, 1.5D, 2.5D, 3.5D), 2", "array('x')"),
+    "graft_adc_dyn" -> (Seq("array(0, 1)" -> "ARRAY<INT>",
+      "array(0.5D, 1.5D, 2.5D, 3.5D)" -> "ARRAY<DOUBLE>"), ", 2", "array('x')"),
+    "graft_adc_table" -> (Seq("array(1D)" -> "ARRAY<DOUBLE>"), ", array(0D, 1D), 1, 2", "array('x')"),
+    "graft_pq_encode" -> (Seq("array(1D)" -> "ARRAY<DOUBLE>"), ", array(0D, 1D), 1, 2", "array('x')"),
+    "graft_residual" -> (Seq("array(1D, 2D)" -> "ARRAY<DOUBLE>", "0" -> "INT"), ", array(0D, 1D), 2", "'x'"),
+    "graft_centroid_argmin" -> (Seq("array(1D, 2D)" -> "ARRAY<DOUBLE>"), ", array(0D, 1D), array(1D)", "'x'"),
+    "graft_coarse_prune" -> (Seq("array(1D, 2D)" -> "ARRAY<DOUBLE>"),
+      ", array(0D, 1D), array(1D), array(0.5D)", "'x'"),
+    "graft_bpe_pairs" -> (Seq("'abc'" -> "STRING"), ", array('a b')", "42"),
+    "graft_bpe_encode" -> (Seq("'a b'" -> "STRING"), "", "42"),
+    "graft_bpe_count" -> (Seq("'a b'" -> "STRING"), "", "42"),
+    "graft_clf_score" -> (Seq("'a b'" -> "STRING"), "", "42"),
+    "graft_hashed_score" -> (Seq("'a b'" -> "STRING"), ", array(1D, 2D), array(3D)", "42"),
+    "graft_rollhash" -> (Seq("'a b'" -> "STRING"), "", "42"),
+    "graft_winnow" -> (Seq("'abcdefghijkl'" -> "STRING"), ", 3, 2", "42"),
+    "graft_zorder" -> (Seq("1L" -> "BIGINT", "2L" -> "BIGINT"), "", "'x'"),
+    "graft_shingles" -> (Seq("'a b c d'" -> "STRING"), ", 3", "42"),
+    "graft_count_in" -> (Seq("array('a', 'b')" -> "ARRAY<STRING>"), ", array('a')", "array(1L)"),
+    // the bloom filter is a literal model arg: NULL there is an analysis error
+    "graft_bloom_contains" -> (Seq("1L" -> "BIGINT"), s", $bloomHex", "'x'"))
+
+  test("every pass-through kernel: NULL data in gives NULL out; a wrong type fails analysis naming it") {
+    val names = graft.GraftExtensions.kernels.keys.toSeq.sorted
+    assert(names.toSet === kernelCases.keySet, "every kernel table entry needs a case here")
+    for (fn <- names) {
+      val (data, model, wrong) = kernelCases(fn)
+      def call(args: Seq[String]) = s"$fn(${args.mkString(", ")}$model)"
+      // well-typed call: analyses and runs
+      one(call(data.map(_._1)))
+      for (i <- data.indices) {
+        // NULL literal (constant-folded, interpreted) and a NULL that only
+        // appears at run time (generated code over a range scan)
+        val typed = data.updated(i, s"CAST(NULL AS ${data(i)._2})" -> "")
+        assert(one(call(typed.map(_._1))) == null, s"$fn: NULL literal arg $i")
+        val rt = data.map(_._1).updated(i, s"if(id < 0, ${data(i)._1}, NULL)")
+        val got = spark.range(2).selectExpr(call(rt)).collect().map(_.get(0))
+        assert(got.forall(_ == null), s"$fn: run-time NULL arg $i gave ${got.toSeq}")
+      }
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT ${call(wrong +: data.tail.map(_._1))}"))
+      assert(err.getMessage.contains(fn), s"$fn: ${err.getMessage}")
+    }
+  }
+
+  // Integer model arguments: rejected at analysis (spark.sql analyses
+  // eagerly) unless a positive integral literal, BIGINT included.
+  private def analysisError(sql: String): String =
+    intercept[Exception](spark.sql(s"SELECT $sql")).getMessage
+
+  test("graft_shingles: n = 0 is rejected at analysis") {
+    assert(analysisError("graft_shingles('a b c', 0)")
+      .contains("graft_shingles: n must be a positive integer literal"))
+    assert(analysisError("graft_shingles('a b c', CAST(NULL AS INT))")
+      .contains("graft_shingles: n must be a positive integer literal"))
+    assert(analysisError("graft_shingles('a b c', 2.5D)")
+      .contains("graft_shingles: n must be a positive integer literal"))
+  }
+
+  test("graft_winnow: w = 0 is rejected at analysis") {
+    assert(analysisError("graft_winnow('abcdefghijkl', 3, 0)")
+      .contains("graft_winnow: w must be a positive integer literal"))
+  }
+
+  test("graft_minhash: a negative numHashes is rejected at analysis") {
+    assert(analysisError("graft_minhash(array('a', 'b'), -1)")
+      .contains("graft_minhash: numHashes must be a positive integer literal"))
+  }
+
+  test("BIGINT integer model arguments are accepted like INT ones (graft_pq_encode m, 1L)") {
+    val viaLong = one("graft_pq_encode(array(1D), array(0D, 1D), 1L, 2)")
+    assert(viaLong.asInstanceOf[scala.collection.Seq[_]] === Seq(1))
+    assert(viaLong === one("graft_pq_encode(array(1D), array(0D, 1D), 1, 2)"))
+    assert(one("graft_shingles('a b c', 3L)").asInstanceOf[scala.collection.Seq[_]] === Seq("a b c"))
+    assert(one("graft_adc(array(0, 1), array(0.5D, 1.5D, 2.5D, 3.5D), 2L)") === 4.0)
+  }
+
+  test("graft_count_in: a NULL word is rejected at analysis, naming the function") {
+    val msg = analysisError("graft_count_in(array('a', 'b'), array('a', NULL))")
+    assert(msg.contains("graft_count_in") && !msg.contains("INTERNAL_ERROR"), msg)
+  }
 }

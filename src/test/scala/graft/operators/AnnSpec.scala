@@ -459,7 +459,7 @@ class AnnSpec extends AnyFunSuite {
 
   test("g >= 128 compiled coarse level is bit-identical to the flat join plan") {
     // VERDICT r13 item 2 at spec scale: past c ≈ 16k the coarse level is
-    // the ONE-compiled-loop CoarsePruneExpr (graft_coarse_prune) instead
+    // the ONE-compiled-loop graft_coarse_prune kernel instead
     // of √c inline expressions. c = 16,384 ⇒ g = 128 routes through the
     // compiled branch; quantizer quality is irrelevant to the equality
     // (deterministic Gaussian centroids), only the regime switch is.
