@@ -53,24 +53,13 @@ private[queries] object StreamRun {
     * stage re-ships them inside its serialized task binary — the session
     * sinks hold ~1M rows at the sf1 rehearsal (2+ MiB task warnings, ×
     * every stage). Re-shipping via TorrentBroadcast sends the snapshot
-    * once per executor instead; rows materialize inside the tasks. Same
-    * pattern as [[graft.streaming.Ingest.distributedRecords]], generalized
-    * to any schema. Use for sink tables whose cardinality scales with the
-    * input (sessions, per-key updates); a few-row sink gains nothing. */
-  def detached(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val rows  = df.collect().toIndexedSeq
-    val bc    = spark.sparkContext.broadcast(rows)
-    val parts = math.max(1, math.min(rows.length / 8192 + 1, 32))
-    spark.createDataFrame(
-      spark.sparkContext
-        .parallelize(0 until parts, parts)
-        .flatMap { p =>
-          val a  = bc.value
-          val lo = (a.length.toLong * p / parts).toInt
-          val hi = (a.length.toLong * (p + 1) / parts).toInt
-          a.iterator.slice(lo, hi)
-        },
+    * once per executor instead; rows materialize inside the tasks
+    * ([[graft.streaming.Ingest.broadcastSlices]], as under
+    * [[graft.streaming.Ingest.logFrame]]), for any schema. Use for sink
+    * tables whose cardinality scales with the input (sessions, per-key
+    * updates); a few-row sink gains nothing. */
+  def detached(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      graft.streaming.Ingest.broadcastSlices(df.sparkSession, df.collect().toIndexedSeq)((_, r) => r),
       df.schema)
-  }
 }

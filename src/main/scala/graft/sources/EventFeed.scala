@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -68,9 +68,6 @@ object EventFeed {
     * record cap ([[graft.streaming.OffsetLog]]). */
   val DefaultMaxFeedRows: Long = 10L * 1000 * 1000
 
-  /** One materialized feed row: (event_id, ts_micros, user_id, event_type, value, props). */
-  type FeedRow = (Long, java.lang.Long, java.lang.Long, String, java.lang.Double, String)
-
   /** One-shot PREFETCH of [[load]], started on a daemon thread the moment
     * the source table is constructed (i.e. at `readStream.load()` time):
     * the feed collect is driver-blocking Spark work that is independent of
@@ -84,9 +81,9 @@ object EventFeed {
   def prefetch(
       path: String,
       startingTimestamp: Option[String],
-      maxFeedRows: Long): () => Array[FeedRow] = {
+      maxFeedRows: Long): () => FeedColumns = {
     val session = SparkSession.active // capture on the constructing thread
-    val fut = new java.util.concurrent.FutureTask[Array[FeedRow]](() => {
+    val fut = new java.util.concurrent.FutureTask[FeedColumns](() => {
       SparkSession.setActiveSession(session)
       load(path, startingTimestamp, maxFeedRows)
     })
@@ -110,7 +107,7 @@ object EventFeed {
   def load(
       path: String,
       startingTimestamp: Option[String],
-      maxFeedRows: Long = DefaultMaxFeedRows): Array[FeedRow] = {
+      maxFeedRows: Long = DefaultMaxFeedRows): FeedColumns = {
     val spark = SparkSession.active
     import org.apache.spark.sql.functions._
     var df = graft.Tables.readEvents(spark, path)
@@ -133,77 +130,177 @@ object EventFeed {
           "events table directly (graft.Tables.events) or raise the " +
           "'maxFeedRows' source option.")
     }
+    // collect in the columns' own encodings: `unix_micros` IS the µs value
+    // Spark's TimestampType holds and orders by, and a string cast to
+    // binary is its UTF-8 bytes, so no Timestamp or String object is built
+    // on the way in.
+    val rows = df
+      .select(col("event_id"), unix_micros(col("ts")), col("user_id"),
+        col("event_type").cast("binary"), col("value"), col("props").cast("binary"))
+      .collect()
     // sort DRIVER-side, not via orderBy().collect(): the rows are collected
     // either way (the whole point of this source is the single-node poll
     // emulation), and a distributed sort of a driver-bound result pays a
     // range-partitioning sampling pass plus a full shuffle per stream start.
-    // Identical order: ts is µs-precision on both paths (the getTime/getNanos
-    // fold below IS the µs value Spark's TimestampType comparator orders by),
-    // NULL ts sorts first exactly like Spark's asc_nulls_first default, and
-    // event_id breaks ties totally, so the permutation is unique.
-    val unsorted = df
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      .collect()
-      .map { r =>
-        (r.getLong(0),
-         if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getTimestamp(1).getTime * 1000 + r.getTimestamp(1).getNanos / 1000 % 1000),
-         if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2)),
-         r.getString(3),
-         if (r.isNullAt(4)) null else java.lang.Double.valueOf(r.getDouble(4)),
-         r.getString(5))
-      }
-    java.util.Arrays.sort(unsorted, new java.util.Comparator[FeedRow] {
-      override def compare(a: FeedRow, b: FeedRow): Int = {
+    // Identical order: NULL ts sorts first exactly like Spark's
+    // asc_nulls_first default, and event_id breaks ties totally, so the
+    // permutation is unique.
+    java.util.Arrays.sort(rows, new java.util.Comparator[Row] {
+      override def compare(a: Row, b: Row): Int = {
         val c =
-          if (a._2 == null && b._2 == null) 0
-          else if (a._2 == null) -1
-          else if (b._2 == null) 1
-          else java.lang.Long.compare(a._2.longValue(), b._2.longValue())
-        if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+          if (a.isNullAt(1) && b.isNullAt(1)) 0
+          else if (a.isNullAt(1)) -1
+          else if (b.isNullAt(1)) 1
+          else java.lang.Long.compare(a.getLong(1), b.getLong(1))
+        if (c != 0) c else java.lang.Long.compare(a.getLong(0), b.getLong(0))
       }
     })
-    unsorted
+    FeedColumns(rows)
   }
 }
 
+/** The materialized feed in replay order, column by column: `event_id` as a
+  * `long[]`; `ts` (µs), `user_id` and `value` as primitive arrays with a
+  * NULL mask each; `event_type` and `props` as UTF-8 bytes. This one object
+  * is what the stream broadcasts — Java serialization writes primitive
+  * arrays in bulk, where a boxed row per event costs one object graph per
+  * event — and readers build rows straight from it, strings as
+  * [[UTF8String]] views into the shared bytes. */
+final class FeedColumns private (
+    val eventId: Array[Long],
+    ts: Array[Long], tsNull: Array[Boolean],
+    userId: Array[Long], userIdNull: Array[Boolean],
+    eventType: Utf8Column,
+    value: Array[Double], valueNull: Array[Boolean],
+    props: Utf8Column
+) extends Serializable {
+
+  def length: Int = eventId.length
+
+  /** Row `i` in [[EventFeed.Schema]] order. */
+  def row(i: Int): InternalRow = new GenericInternalRow(Array[Any](
+    eventId(i),
+    if (tsNull(i)) null else ts(i),
+    if (userIdNull(i)) null else userId(i),
+    eventType(i),
+    if (valueNull(i)) null else value(i),
+    props(i)
+  ))
+}
+
+object FeedColumns {
+  /** Columns of `rows` = (event_id, ts µs, user_id, event_type bytes, value, props bytes). */
+  private[sources] def apply(rows: Array[Row]): FeedColumns = {
+    val n = rows.length
+    def longs(c: Int): (Array[Long], Array[Boolean]) = {
+      val v = new Array[Long](n); val nul = new Array[Boolean](n)
+      var i = 0
+      while (i < n) { if (rows(i).isNullAt(c)) nul(i) = true else v(i) = rows(i).getLong(c); i += 1 }
+      (v, nul)
+    }
+    val (ts, tsNull)     = longs(1)
+    val (user, userNull) = longs(2)
+    val value = new Array[Double](n); val valueNull = new Array[Boolean](n)
+    var i = 0
+    while (i < n) {
+      if (rows(i).isNullAt(4)) valueNull(i) = true else value(i) = rows(i).getDouble(4)
+      i += 1
+    }
+    new FeedColumns(Array.tabulate(n)(rows(_).getLong(0)), ts, tsNull, user, userNull,
+      Utf8Column(rows, 3), value, valueNull, Utf8Column(rows, 5))
+  }
+}
+
+/** One string column as UTF-8 in one buffer: row `i` is
+  * `bytes[ends(i-1), ends(i))` (from 0 for row 0), or NULL. */
+private[sources] final class Utf8Column(bytes: Array[Byte], ends: Array[Int], nulls: Array[Boolean])
+    extends Serializable {
+  def apply(i: Int): UTF8String =
+    if (nulls(i)) null
+    else {
+      val from = if (i == 0) 0 else ends(i - 1)
+      UTF8String.fromBytes(bytes, from, ends(i) - from)
+    }
+}
+
+private[sources] object Utf8Column {
+  /** Column `c` (binary) of `rows`. */
+  def apply(rows: Array[Row], c: Int): Utf8Column = {
+    val n     = rows.length
+    val ends  = new Array[Int](n)
+    val nulls = new Array[Boolean](n)
+    var total = 0L
+    var i     = 0
+    while (i < n) {
+      if (rows(i).isNullAt(c)) nulls(i) = true
+      else total += rows(i).getAs[Array[Byte]](c).length
+      require(total <= Int.MaxValue - 8,
+        s"eventfeed: column $c holds over 2 GiB of text — above one buffer")
+      ends(i) = total.toInt
+      i += 1
+    }
+    val bytes = new Array[Byte](total.toInt)
+    i = 0
+    while (i < n) {
+      if (!nulls(i)) {
+        val b = rows(i).getAs[Array[Byte]](c)
+        System.arraycopy(b, 0, bytes, ends(i) - b.length, b.length)
+      }
+      i += 1
+    }
+    new Utf8Column(bytes, ends, nulls)
+  }
+}
+
+/** The options that decide which rows [[EventFeed.load]] returns. */
+private[sources] final case class FeedSpec(path: String, startingTimestamp: Option[String], maxFeedRows: Long)
+
+private[sources] object FeedSpec {
+  def of(options: CaseInsensitiveStringMap): FeedSpec = FeedSpec(
+    Option(options.get("path")).getOrElse(
+      throw new IllegalArgumentException("eventfeed: 'path' option is required")),
+    Option(options.get("startingTimestamp")),
+    Option(options.get("maxFeedRows")).map(_.toLong).getOrElse(EventFeed.DefaultMaxFeedRows))
+}
+
 class EventFeedTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
+  private val spec = FeedSpec.of(options)
   // start the feed load NOW, on the thread constructing the table (i.e. at
   // readStream.load() time, with the caller's active session): by the time
   // the stream's first micro-batch needs rows, checkpoint init + WAL +
   // batch-0 planning have run CONCURRENTLY with the collect instead of
   // after it — see [[EventFeed.prefetch]]. One prefetch per table = per
   // stream start; a table whose stream never starts wastes one bounded load.
-  private val prefetched: () => Array[EventFeed.FeedRow] =
-    EventFeed.prefetch(
-      Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("eventfeed: 'path' option is required")),
-      Option(options.get("startingTimestamp")),
-      Option(options.get("maxFeedRows")).map(_.toLong).getOrElse(EventFeed.DefaultMaxFeedRows))
+  private val prefetched: () => FeedColumns =
+    EventFeed.prefetch(spec.path, spec.startingTimestamp, spec.maxFeedRows)
   override def name(): String = s"event_feed(${options.get("path")})"
   override def schema(): StructType = EventFeed.Schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+  // the prefetch was loaded with the TABLE's options: a scan whose options
+  // select other rows loads its own instead of serving stale ones
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
-      override def build(): Scan = new EventFeedScan(opts, Some(prefetched))
+      override def build(): Scan =
+        new EventFeedScan(opts, if (FeedSpec.of(opts) == spec) Some(prefetched) else None)
     }
 }
 
 class EventFeedScan(
     options: CaseInsensitiveStringMap,
-    prefetched: Option[() => Array[EventFeed.FeedRow]] = None) extends Scan {
+    prefetched: Option[() => FeedColumns] = None) extends Scan {
   override def readSchema(): StructType = EventFeed.Schema
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    val spec = FeedSpec.of(options)
     new EventFeedMicroBatchStream(
-      path = Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("eventfeed: 'path' option is required")),
+      path = spec.path,
       maxBatchSize =
         Option(options.get("maxBatchSize")).map(_.toInt).getOrElse(EventFeed.DefaultMaxBatchSize),
-      startingTimestamp = Option(options.get("startingTimestamp")),
-      maxFeedRows =
-        Option(options.get("maxFeedRows")).map(_.toLong).getOrElse(EventFeed.DefaultMaxFeedRows),
+      startingTimestamp = spec.startingTimestamp,
+      maxFeedRows = spec.maxFeedRows,
       prefetched = prefetched
     )
+  }
 }
 
 /** Stream offset = count of feed rows emitted so far (dense row index). */
@@ -216,21 +313,22 @@ class EventFeedMicroBatchStream(
     maxBatchSize: Int,
     startingTimestamp: Option[String],
     maxFeedRows: Long = EventFeed.DefaultMaxFeedRows,
-    prefetched: Option[() => Array[EventFeed.FeedRow]] = None
+    prefetched: Option[() => FeedColumns] = None
 ) extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
-  private lazy val rows: Array[EventFeed.FeedRow] =
+  private lazy val feed: FeedColumns =
     prefetched.map(_()).getOrElse(EventFeed.load(path, startingTimestamp, maxFeedRows))
 
   /** The materialized feed ships to executors ONCE via TorrentBroadcast
-    * (chunked through the block manager); partitions carry only [start,end)
-    * indices. Embedding row slices in the InputPartition instead would ride
-    * the task serialization path — ~4 MiB/task `TaskSetManager` warnings at
-    * sf0.1, and a per-task (not per-executor) transfer at scale. */
+    * (chunked through the block manager) as its primitive and UTF-8
+    * columns; partitions carry only [start,end) indices. Embedding row
+    * slices in the InputPartition instead would ride the task
+    * serialization path — ~4 MiB/task `TaskSetManager` warnings at sf0.1,
+    * and a per-task (not per-executor) transfer at scale. */
   @volatile private var bcShipped = false
-  private lazy val bcRows: org.apache.spark.broadcast.Broadcast[Array[EventFeed.FeedRow]] = {
+  private lazy val bcFeed: org.apache.spark.broadcast.Broadcast[FeedColumns] = {
     bcShipped = true
-    SparkSession.active.sparkContext.broadcast(rows)
+    SparkSession.active.sparkContext.broadcast(feed)
   }
 
   override def initialOffset(): Offset = FeedPosition(0L)
@@ -238,7 +336,7 @@ class EventFeedMicroBatchStream(
   override def commit(end: Offset): Unit = ()
   // release the whole-feed broadcast at stream stop instead of waiting for
   // the ContextCleaner to notice it via GC
-  override def stop(): Unit = if (bcShipped) bcRows.destroy()
+  override def stop(): Unit = if (bcShipped) bcFeed.destroy()
 
   // --- admission control: ≤ maxBatchSize rows per trigger (the 50-events
   // per-poll cap, `main.go:107` — same mechanism as Kafka
@@ -251,13 +349,13 @@ class EventFeedMicroBatchStream(
       case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows => r.maxRows()
       case _                                                            => maxBatchSize.toLong
     }
-    FeedPosition(math.min(rows.length.toLong, s + cap))
+    FeedPosition(math.min(feed.length.toLong, s + cap))
   }
 
-  override def reportLatestOffset(): Offset = FeedPosition(rows.length.toLong)
+  override def reportLatestOffset(): Offset = FeedPosition(feed.length.toLong)
 
   /** Trigger.AvailableNow: the bounded replay target is the full feed. */
-  override def prepareForTriggerAvailableNow(): Unit = { rows; () }
+  override def prepareForTriggerAvailableNow(): Unit = { feed; () }
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
@@ -267,29 +365,17 @@ class EventFeedMicroBatchStream(
     val s = start.asInstanceOf[FeedPosition].n.toInt
     val e = end.asInstanceOf[FeedPosition].n.toInt
     if (e <= s) Array.empty
-    else Array(EventFeedPartition(bcRows, s, e))
+    else Array(EventFeedPartition(bcFeed, s, e))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-      val p     = partition.asInstanceOf[EventFeedPartition]
-      val all   = p.rows.value
-      val start = p.start
-      val n     = p.end - p.start
+      val p   = partition.asInstanceOf[EventFeedPartition]
+      val all = p.feed.value
       new PartitionReader[InternalRow] {
-        private var i = -1
-        override def next(): Boolean = { i += 1; i < n }
-        override def get(): InternalRow = {
-          val r = all(start + i)
-          new GenericInternalRow(Array[Any](
-            r._1,
-            if (r._2 == null) null else r._2.longValue(),
-            if (r._3 == null) null else r._3.longValue(),
-            if (r._4 == null) null else UTF8String.fromString(r._4),
-            if (r._5 == null) null else r._5.doubleValue(),
-            if (r._6 == null) null else UTF8String.fromString(r._6)
-          ))
-        }
+        private var i = p.start - 1
+        override def next(): Boolean = { i += 1; i < p.end }
+        override def get(): InternalRow = all.row(i)
         override def close(): Unit = ()
       }
     }
@@ -297,7 +383,7 @@ class EventFeedMicroBatchStream(
 }
 
 case class EventFeedPartition(
-    rows: org.apache.spark.broadcast.Broadcast[Array[EventFeed.FeedRow]],
+    feed: org.apache.spark.broadcast.Broadcast[FeedColumns],
     start: Int,
     end: Int
 ) extends InputPartition

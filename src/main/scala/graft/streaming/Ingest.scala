@@ -1,11 +1,14 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.operators.EventLog
 import graft.sources.EventFeedProvider
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * EP3 — the ingestion pipeline (reference `cmd/server/main.go:63-162`),
@@ -129,7 +132,10 @@ object Ingest {
    * bounded replay to completion in rate-limited micro-batches) and return
    * the populated log. Records are the canonical serialized CloudEvents;
    * oversize records are rejected by the log exactly like memlog
-   * (`RecordTooLarge`), surfaced in `IngestResult.rejected`.
+   * (`RecordTooLarge`), surfaced in `IngestResult.rejected`. Every record
+   * that breaks `offset == event_id` — a rejected one, or one written at
+   * another offset (an id gap in the feed, or a record after a rejection)
+   * — counts in `IngestResult.keyGaps`.
    */
   def run(
       spark: SparkSession,
@@ -140,11 +146,15 @@ object Ingest {
       startingTimestamp: Option[String] = None
   ): IngestResult = {
     val enveloped  = EventLog.envelope(feed(spark, dir, maxBatchSize, startingTimestamp))
-    val serialized = EventLog.serialized(enveloped).select("offset", "value")
+    // the sink stores bytes: collect the JSON as its UTF-8 bytes (a string
+    // cast to binary) instead of decoding it to a String and back per record
+    val serialized = EventLog.serialized(enveloped)
+      .select(col("offset"), col("value").cast(BinaryType).as("value"))
 
     // the sink; bootstrapped lazily from the first observed event id (O2)
     var log: OffsetLog = null
     var rejected       = 0L
+    var keyGaps        = 0L
 
     val q = serialized.writeStream
       .trigger(Trigger.AvailableNow())
@@ -166,58 +176,80 @@ object Ingest {
         java.util.Arrays.sort(rows, java.util.Comparator.comparingLong(
           (r: org.apache.spark.sql.Row) => r.getLong(offIdx)))
         rows.foreach { r =>
+          val key = r.getLong(offIdx)
           if (log == null)
-            log = new OffsetLog(r.getLong(offIdx), segmentSize, maxRecordBytes)
-          log.write(r.getString(valIdx).getBytes("UTF-8")) match {
-            case Left(_)  => rejected += 1
-            case Right(_) => ()
+            log = new OffsetLog(key, segmentSize, maxRecordBytes)
+          log.write(r.getAs[Array[Byte]](valIdx)) match {
+            case Left(_)       => rejected += 1; keyGaps += 1
+            case Right(offset) => if (offset != key) keyGaps += 1
           }
         }
         ()
       }
       .start()
     q.awaitTermination()
-    IngestResult(if (log == null) new OffsetLog(0, segmentSize, maxRecordBytes) else log, rejected)
+    IngestResult(
+      if (log == null) new OffsetLog(0, segmentSize, maxRecordBytes) else log, rejected, keyGaps)
   }
 
   /** The retained log as a DataFrame of (offset, value) — the queryable sink
     * table every batch operator (range/point/page/watch replay) runs over.
-    * The snapshot ships via TorrentBroadcast and the rows materialize
-    * executor-side: `seq.toDF` would plant a LocalRelation whose rows ride
-    * inside every downstream stage's serialized task binary (the ~4 MiB
-    * `DAGScheduler` broadcast warnings at sf0.1), re-shipped per stage
-    * instead of once per executor. */
-  def logFrame(spark: SparkSession, log: OffsetLog): DataFrame =
-    distributedRecords(spark, log.snapshot.map { case (o, b) => (o, new String(b, "UTF-8")) })
+    * The stored bytes ship via TorrentBroadcast with only the first offset
+    * beside them (offsets are dense) and the rows materialize in the tasks
+    * as `(first + i, record i)`: no driver-side decode, and no object per
+    * record beyond the log's own. `seq.toDF` would instead plant a
+    * LocalRelation whose rows ride inside every downstream stage's
+    * serialized task binary (the ~4 MiB `DAGScheduler` broadcast warnings
+    * at sf0.1), re-shipped per stage instead of once per executor. */
+  def logFrame(spark: SparkSession, log: OffsetLog): DataFrame = {
+    val snap  = log.snapshot
+    val first = snap.headOption.fold(0L)(_._1)
+    import spark.implicits._
+    val bytes = scala.collection.immutable.ArraySeq.unsafeWrapArray(snap.iterator.map(_._2).toArray)
+    broadcastSlices(spark, bytes)((i, b) => (first + i, exactUtf8(b)))
+      .toDF("offset", "value")
+      .select(col("offset"), col("value").cast(StringType).as("value"))
+  }
 
-  /** Driver-resident (offset, value) records as a DISTRIBUTED frame: the
-    * array ships once per executor via TorrentBroadcast and rows
-    * materialize inside the tasks. Also used to detach memory-sink
-    * contents (q_stream_tail) from their MemoryPlan, whose embedded rows
-    * otherwise ride every downstream stage's task binary.
+  /** `b` when it is valid UTF-8, else the UTF-8 encoding of
+    * `new String(b, UTF_8)` — so a string cast of the result reads exactly
+    * what the JDK decodes, malformed input replaced, record by record. */
+  private def exactUtf8(b: Array[Byte]): Array[Byte] =
+    if (UTF8String.fromBytes(b).isValid) b else new String(b, UTF_8).getBytes(UTF_8)
+
+  /** Driver-resident (offset, value) records as a DISTRIBUTED frame (see
+    * [[broadcastSlices]]). Detaches memory-sink contents (q_stream_tail)
+    * from their MemoryPlan, whose embedded rows otherwise ride every
+    * downstream stage's task binary. */
+  def distributedRecords(spark: SparkSession, records: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    broadcastSlices(spark, records.toIndexedSeq)((_, r) => r).toDF("offset", "value")
+  }
+
+  /** Driver-resident `items` as an RDD: the sequence ships ONCE per
+    * executor via TorrentBroadcast and is index-sliced into
+    * `min(n / 8192 + 1, 32)` partitions, whose tasks yield `row(i, items(i))`
+    * for their slice — the tasks carry only their slice bounds.
     *
     * Broadcast lifecycle: unlike LogTail's per-micro-batch broadcasts
     * (destroyed eagerly at commit because the SOURCE holds them alive for
     * the stream's whole life), this handle's only reference is the
-    * returned frame's RDD lineage — when the caller drops the frame it
-    * becomes unreachable and the ContextCleaner reclaims it, the normal
-    * Spark lifecycle for per-frame broadcasts. Destroying it eagerly here
-    * would kill a frame the caller may still hold. */
-  def distributedRecords(spark: SparkSession, records: Seq[(Long, String)]): DataFrame = {
-    val snap = records.toIndexedSeq
-    import spark.implicits._
-    val bc    = spark.sparkContext.broadcast(snap)
-    val parts = math.max(1, math.min(snap.length / 8192 + 1, 32))
-    spark.createDataset(
-      spark.sparkContext
-        .parallelize(0 until parts, parts)
-        .flatMap { p =>
-          val a  = bc.value
-          val lo = (a.length.toLong * p / parts).toInt
-          val hi = (a.length.toLong * (p + 1) / parts).toInt
-          a.iterator.slice(lo, hi)
-        })
-      .toDF("offset", "value")
+    * returned RDD's lineage — when the caller drops it it becomes
+    * unreachable and the ContextCleaner reclaims it, the normal Spark
+    * lifecycle for per-frame broadcasts. Destroying it eagerly here would
+    * kill a frame the caller may still hold. */
+  def broadcastSlices[T, R: scala.reflect.ClassTag](spark: SparkSession, items: IndexedSeq[T])(
+      row: (Int, T) => R): org.apache.spark.rdd.RDD[R] = {
+    val bc    = spark.sparkContext.broadcast(items)
+    val parts = math.max(1, math.min(items.length / 8192 + 1, 32))
+    spark.sparkContext
+      .parallelize(0 until parts, parts)
+      .flatMap { p =>
+        val a  = bc.value
+        val lo = (a.length.toLong * p / parts).toInt
+        val hi = (a.length.toLong * (p + 1) / parts).toInt
+        Iterator.range(lo, hi).map(i => row(i, a(i)))
+      }
   }
 
   /** Parse stored CloudEvent bytes back to typed columns (O12 / §1.2). */
@@ -227,4 +259,6 @@ object Ingest {
         Map("timestampFormat" -> EventLog.JsonTimestampFormat)))
 }
 
-final case class IngestResult(log: OffsetLog, rejected: Long)
+/** A drained replay: the log, the records it rejected as oversize, and the
+  * records that break `offset == event_id` (rejected ones included). */
+final case class IngestResult(log: OffsetLog, rejected: Long, keyGaps: Long = 0L)

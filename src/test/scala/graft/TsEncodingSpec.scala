@@ -112,10 +112,11 @@ class TsEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("EventFeed.load yields identical replay rows for all three encodings") {
     for ((enc, dir) <- fixtures) {
       val feed = graft.sources.EventFeed.load(s"$dir/events.parquet", None)
-      val got  = feed.map(r => (r._1, r._2.longValue())).sortBy(_._1).toSeq
+      val rows = (0 until feed.length).map(feed.row)
+      val got  = rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       assert(got === expectedUs, s"$enc: feed instants diverge")
       // replay order is (ts, event_id): the pre-1970 and epoch rows lead
-      assert(feed.map(_._1).toSeq === Seq(2L, 3L, 0L, 1L), s"$enc: replay order")
+      assert(feed.eventId.toSeq === Seq(2L, 3L, 0L, 1L), s"$enc: replay order")
     }
   }
 
