@@ -25,7 +25,7 @@
 #    only 5-row/1-row global aggregates; curate's dedup state holds the
 #    5M distinct norms ACROSS EXECUTOR state partitions, ~the exact-dedup
 #    state cost at any scale), so all three join the sweep below;
-#    Probe --stream-cert additionally pins filewin's stream/batch
+#    q_stream_filewin's `stream` certificate additionally pins its stream/batch
 #    bit-equality over the slice's full events directory.
 #  - quadratic DuckDB oracles (q_minhash_lsh, q_minhash_lsh_gb, q_neardup,
 #    q_dupgroups, q_dedup_incr, q_dedup_keep, q_embdup, q_editdist,
@@ -113,7 +113,7 @@ SUBSET=$SUBSET,q_tempmix
 # Round 14: perceptual dHash of every asset (5M-row output, linear
 # byte-replay oracle — the q_media_resize cost class), strict
 # row-compare. q_bpe_train has no SQL oracle by declared contract; its
-# factor-1000 witness is `Probe --bpe-cert` (distributed trainer vs the
+# factor-1000 witness is its `bpe` certificate (distributed trainer vs the
 # definitional single-node loop over the collected word-frequency table).
 SUBSET=$SUBSET,q_phash
 # Round 14: product-quantization ANN, its persisted serving pair, and the
@@ -152,7 +152,7 @@ DIGEST=$DIGEST,q_dsir,q_perplexity
 # the definitional span window over 225M raw-string span rows — the very
 # plan that does not fit one box at this scale (it joins the quadratic-
 # oracle exclusion class above); their factor-1000 witness is
-# `Probe --substr-cert` (per-span-class dual-plan marking digests, full
+# q_substrdedup's `substr` certificate (per-span-class dual-plan marking digests, full
 # coverage, + global token conservation) and the full sf10 sweep.
 DIGEST=$DIGEST,q_bpe_encode
 # Round 15 (VERDICT r14 task 4): q_mediadup joins the sweep — its oracle

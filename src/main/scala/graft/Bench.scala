@@ -310,14 +310,14 @@ object Bench {
     if (contended)
       System.err.println(f"[bench] ambient load $loadAmbient%.2f > $maxLoad%.2f: " +
         s"marking run contended, writing $fullName (BENCH_FULL.json untouched)")
+    // into the working directory only: a run from a second checkout (the
+    // parent side of an A/B) must not overwrite the first one's records
     def writeFile(name: String, line: String): Boolean =
-      Seq(s"/root/repo/$name", name).exists { path =>
-        try {
-          val out = new java.io.PrintWriter(path)
-          try out.println(line) finally out.close()
-          true
-        } catch { case _: Throwable => false }
-      }
+      try {
+        val out = new java.io.PrintWriter(name)
+        try out.println(line) finally out.close()
+        true
+      } catch { case _: Throwable => false }
     if (!writeFile(fullName, fullLine))
       System.err.println(s"[bench] WARN: could not write $fullName")
 

@@ -1,27 +1,51 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 /**
  * Per-JVM scratch directories with RECURSIVE cleanup on exit.
  * `File.deleteOnExit` only removes empty directories, so every layout
  * query that writes a dataset copy (bucketed/partitioned/clustered/format
- * round-trips) would otherwise leak a copy per invocation — bench runs
- * each query twice (warmup + timed) and an iteration loop of repeated
- * runs fills /tmp. All scratch dirs live under one root that a shutdown
- * hook deletes bottom-up.
+ * round-trips) and every bounded streaming replay's checkpoint would
+ * otherwise leak a tree per invocation — bench runs each query twice
+ * (warmup + timed) and an iteration loop of repeated runs fills /tmp and
+ * /dev/shm. Every such directory lives under one of two [[Root]]s that a
+ * shutdown hook deletes bottom-up: datasets under the temp dir,
+ * checkpoints on tmpfs.
  */
 object ScratchDirs {
 
-  private lazy val root: Path = {
-    val r = Files.createTempDirectory("graft-scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(r)))
-    r
+  /** A lazily created directory under `parent` (the JVM temp dir when
+    * None), deleted recursively by [[clean]] and at JVM exit. */
+  private[graft] final class Root(parent: Option[Path], prefix: String) {
+    lazy val path: Path = {
+      val r = parent.fold(Files.createTempDirectory(prefix))(Files.createTempDirectory(_, prefix))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => clean()))
+      r
+    }
+
+    /** A fresh directory under this root. */
+    def dir(prefix: String): String = Files.createTempDirectory(path, prefix).toString
+
+    def clean(): Unit = deleteRecursively(path)
   }
 
-  /** A fresh directory under the self-cleaning root. */
-  def dir(prefix: String): String =
-    Files.createTempDirectory(root, prefix).toString
+  /** `/dev/shm` when it is a writable directory, else None (temp dir). */
+  private[graft] def tmpfs: Option[Path] =
+    Some(Paths.get("/dev/shm")).filter(p => Files.isDirectory(p) && Files.isWritable(p))
+
+  private val datasets = new Root(None, "graft-scratch")
+
+  /** Checkpoints prefer tmpfs: the HDFS-backed state store writes
+    * per-partition delta files + commit logs EVERY micro-batch, and
+    * fsync-ing those to disk dominated the streaming bench. */
+  private val checkpoints = new Root(tmpfs, "graft-ckpt-root")
+
+  /** A fresh directory under the self-cleaning dataset root. */
+  def dir(prefix: String): String = datasets.dir(prefix)
+
+  /** A fresh directory under the self-cleaning (tmpfs) checkpoint root. */
+  def checkpoint(prefix: String): String = checkpoints.dir(prefix)
 
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 

@@ -4,22 +4,11 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * `--certs <sfDir> [cert...]` instead checks the registry's scale
+  * certificates (every one, or the named ones) on the slice at `sfDir`. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      s"usage: graft.Verify <sfDir> <outDir> [queryName...]  (got ${args.length} args)")
-    val Array(sfDir, outDir) = args.take(2)
-    // optional extra args: restrict to the named queries (local iteration;
-    // the driver always calls with exactly two args → full dump)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // The driver's pandas/DuckDB compare reads each dump as a directory
-    // glob, so the single-file layout is tidiness, not a contract. For
-    // scale-sweep dumps of 100M+-row row-preserving outputs the coalesce(1)
-    // write is a single-threaded bottleneck — set SPARK_GRAFT_VERIFY_COALESCE=0
-    // to write with the plan's own partitioning (digest-mode sweeps do).
-    val coalesce1 = sys.env.getOrElse("SPARK_GRAFT_VERIFY_COALESCE", "1") != "0"
+  private def session(cpus: String): SparkSession = {
     val spark = GraftSession
       .configure(
         SparkSession.builder()
@@ -27,6 +16,36 @@ object Verify {
           .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    if (args.headOption.contains("--certs")) {
+      require(args.length >= 2, "usage: graft.Verify --certs <sfDir> [cert...]")
+      val all = SparkEntry.registry.flatMap(_.certs)
+      val named = args.drop(2).toSet
+      val unknown = named -- all.map(_.name)
+      require(unknown.isEmpty, s"unknown certificate(s) ${unknown.mkString(", ")}; " +
+        s"the registry holds: ${all.map(_.name).mkString(", ")}")
+      val spark = session(cpus)
+      try queries.Cert.run(spark, args(1), all.filter(c => named.isEmpty || named(c.name)))
+      finally spark.stop()
+      return
+    }
+    require(args.length >= 2,
+      s"usage: graft.Verify <sfDir> <outDir> [queryName...]  (got ${args.length} args)")
+    val Array(sfDir, outDir) = args.take(2)
+    // optional extra args: restrict to the named queries (local iteration;
+    // the driver always calls with exactly two args → full dump)
+    val only = args.drop(2).toSet
+    // The driver's pandas/DuckDB compare reads each dump as a directory
+    // glob, so the single-file layout is tidiness, not a contract. For
+    // scale-sweep dumps of 100M+-row row-preserving outputs the coalesce(1)
+    // write is a single-threaded bottleneck — set SPARK_GRAFT_VERIFY_COALESCE=0
+    // to write with the plan's own partitioning (digest-mode sweeps do).
+    val coalesce1 = sys.env.getOrElse("SPARK_GRAFT_VERIFY_COALESCE", "1") != "0"
+    val spark = session(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

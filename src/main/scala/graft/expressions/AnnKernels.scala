@@ -40,7 +40,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
  * least value — i.e. the first attained minimum. Ties between duplicate
  * centroids therefore keep the lowest cid, the rule every oracle replay
  * and [[graft.operators.Ann.assignCentroidJoin]]'s `min(cid)` pass share
- * (`Probe --semdedup-cert` leg 1 pins the two plans' equality at scale).
+ * (q_semdedup's `semdedup` certificate pins the two plans' equality at scale).
  *
  * c is bounded by broadcastable model size, not codegen width; element
  * access has no per-element null test — a NULL element reads as 0, the

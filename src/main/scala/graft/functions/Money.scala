@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
  * carry). Summing cents as longs is order-independent integer arithmetic —
  * the same exactness DECIMAL(18,2) partial aggregates give, at roughly
  * 30% less aggregate cost at sf1 and ~2.4× at the factor-100 slice
- * (Probe --money-sums; the DECIMAL hot path carries scale-check logic the
+ * (VERDICT r09 item 4; the DECIMAL hot path carries scale-check logic the
  * long path doesn't). One final double division restores the output
  * schema; the DuckDB oracles keep their DECIMAL formulation, and both
  * paths hash identically because each converts the SAME exact rational to

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
  * SQL-portable oracle, so their correctness contract is the accuracy /
  * mergeability bound each sketch publishes — checked against EXACT linear
  * aggregates over the same data. SketchSpec asserts these at the driver
- * SFs and `Probe --sketch-cert` asserts the same code at ScaleUp slices
+ * SFs and q_approxd's `sketch` certificate asserts the same code at ScaleUp slices
  * (the factor-1000 witness the sf100 sweep's rows-only exclusion lacked):
  * every check below is a constant number of linear, fully distributed
  * passes — no driver materialization beyond the per-group summary rows.

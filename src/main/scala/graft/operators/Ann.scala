@@ -196,7 +196,7 @@ object Ann {
     * reference semantics bit-for-bit — same dot fold, first minimum under
     * the SQL double ordering, duplicate-centroid ties to the lowest cid,
     * NULL vector → NULL cid — pinned by AnnSpec's inline-formulation
-    * equality spec and `Probe --semdedup-cert` leg 1 at scale. */
+    * equality spec and q_semdedup's `semdedup` certificate at scale. */
   def assignCentroid(
       emb: DataFrame, centroids: Array[Array[Double]],
       vecCol: String = "embedding"): DataFrame = {
@@ -1111,7 +1111,7 @@ object Ann {
    * Recall improves as shards shrink (each local search covers a smaller
    * graph; at the limit shards·k ≥ n it is exhaustive), so `maxShardRows`
    * is ALSO the recall dial. The defaults are set from the factor-100
-   * rehearsal (200k vectors, Probe --nsw-recall): (m=8, ef=48, 8192-row
+   * rehearsal (200k vectors, EVIDENCE_r10.md): (m=8, ef=48, 8192-row
    * shards) decayed to mean recall@10 = 0.61; (m=12, ef=96, 4096-row
    * shards) measured 80/80 hits across 8 probes — and builds faster,
    * because construction beams converge on the smaller graphs.
@@ -1460,7 +1460,7 @@ object Ann {
     * plan while c is codegen-viable, the broadcast-model-frame JOIN plan
     * ([[assignCentroidJoin]]) in the large-c regime SemDeDup actually
     * runs at (c ∝ n). The two plans score bit-identical distances with
-    * the same tie rule (AnnSpec + `Probe --semdedup-cert` pin it), so the
+    * the same tie rule (AnnSpec + the `semdedup` certificate pin it), so the
     * switch is a physical-plan choice, never a semantic one.
     *
     * NULL-embedding rows are excluded HERE, before either path (ADVICE
@@ -1484,7 +1484,7 @@ object Ann {
         Seq(idCol))
     else
       // c ∝ n regime: two-level triangle-inequality pruning — exact, and
-      // bit-identical to the flat plans (Probe --semdedup-cert legs 2-4)
+      // bit-identical to the flat plans (the `semdedup` certificate)
       nn.join(
         assignCentroidPruned(nn, centroids, idCol, vecCol),
         Seq(idCol))
@@ -1624,7 +1624,7 @@ object Ann {
    * surviving candidate set always contains the exact winner; the
    * survivors are then scored with the IDENTICAL −2⟨v,c⟩ + ‖c‖² codegen
    * fold and the identical two-pass dmin/lowest-cid tie rule as the flat
-   * plans — bit-equality certified by `Probe --semdedup-cert` legs 2–4.
+   * plans — bit-equality certified by q_semdedup's `semdedup` certificate.
    *
    * Plan shape: the coarse level is ONE compiled loop at every g
    * (`graft_coarse_prune`, [[graft.expressions.CoarsePrune]]) — a
@@ -1638,8 +1638,8 @@ object Ann {
    * the compiled loop is now the only form (see withCands below for the
    * numbers). The fine level re-scores survivors exactly, so the
    * assignment is bit-identical to the flat plans regardless of coarse
-   * form (`Probe --semdedup-cert` legs 2–4; `--prune128-cert` at
-   * g = 256). The fine level is a broadcast hash join on gid over only
+   * form (q_semdedup's `semdedup` certificate; its `prune128`
+   * certificate at g = 256). The fine level is a broadcast hash join on gid over only
    * the surviving groups' members. Per-row work drops from c dot
    * products (twice) to g + (surviving members) ≈ O(√c) for a
    * well-spread quantizer; worst case (all centroids coincident)
@@ -1682,7 +1682,7 @@ object Ann {
     // the survivor-gid array directly from the identical bound math; the
     // fine level re-scores survivors exactly, so assignment stays
     // bit-identical to the flat plans (AnnSpec pruned-vs-flat equalities,
-    // `Probe --semdedup-cert` legs 2-4, `--prune128-cert` at g = 256).
+    // q_semdedup's `semdedup` and `prune128` (g = 256) certificates).
     def withCands(df: DataFrame): DataFrame = {
       val flat = centers.flatten.toSeq
       val ggs  = centers.map(gc => gc.map(x => x * x).sum).toSeq

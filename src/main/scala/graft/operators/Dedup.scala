@@ -250,7 +250,7 @@ object Dedup {
    * the whole corpus quadratically) — the stop-fingerprint guard that
    * bounds every join bucket at scale. Shared base of [[windupPairs]] and
    * [[windupPairsViaBuckets]]; exposed so a caller comparing both plans
-   * (Probe --windup-cert) can cache ONE fingerprint table under them.
+   * (q_windup's `windup` certificate) can cache ONE fingerprint table under them.
    */
   def rareFingerprints(
       docs: DataFrame, idCol: String, textCol: String, maxDf: Int = 50): DataFrame = {
@@ -373,7 +373,7 @@ object Dedup {
    * witness, not the scale path. Production = [[substrDedupAgg]].
    */
   /** Definitional dup marking: row_number over the span key. Factored out
-    * so `Probe --substr-cert` can certify the MARKING stage — the only
+    * so q_substrdedup's `substr` certificate can certify the MARKING stage — the only
     * place the two plans differ (the removal tail below is shared code) —
     * per span class at factor 1000, where the full window sort does not
     * fit one box's disk. Span classes (xxhash64(span) mod m) are CLOSED

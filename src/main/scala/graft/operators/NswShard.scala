@@ -135,27 +135,14 @@ private[operators] object NswShard {
     probeSearch(items, vecs, norms, adj, probe, k, ef)
   }
 
-  /** Beam-search a PREBUILT shard graph (items in the build's insertion
-    * order — sorted by id; `adj` in local indices with construction-order
-    * edges). The no-build counterpart of [[searchTopK]]: given the same
-    * graph it returns the same rows. */
-  def searchPrebuilt(
-      items: Array[(Long, Array[Double])],
-      adj: Array[Array[Int]],
-      probe: Array[Double],
-      k: Int, ef: Int): Seq[(Long, Double)] = {
-    val vecs  = items.map(_._2)
-    val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-    probeSearch(items, vecs, norms, adj.map(_.toSeq), probe, k, ef)
-  }
-
-  /** [[searchPrebuilt]] over a TOMBSTONED shard graph: deleted nodes stay
-    * fully traversable (their edges keep the graph navigable — the
-    * standard mark-and-filter HNSW delete), they are only excluded from
-    * the EMITTED results. The beam explores with the same width as the
-    * unmasked search, so an all-false mask returns bit-identical rows to
-    * [[searchPrebuilt]] — which is what lets [[Ann.nswQueryIndex]] route
-    * every index through this one code path. */
+  /** Beam-search a PREBUILT, possibly TOMBSTONED shard graph (items in the
+    * build's insertion order — sorted by id; `adj` in local indices with
+    * construction-order edges). Deleted nodes stay fully traversable
+    * (their edges keep the graph navigable — the standard mark-and-filter
+    * HNSW delete), they are only excluded from the EMITTED results. The
+    * beam explores with the same width as [[searchTopK]], so an all-false
+    * mask over the same graph returns bit-identical rows — which is what
+    * lets [[Ann.nswQueryIndex]] route every index through this one path. */
   def searchPrebuiltMasked(
       items: Array[(Long, Array[Double])],
       adj: Array[Array[Int]],

@@ -20,6 +20,32 @@ import org.apache.spark.sql.functions._
  */
 object AdvancedQueries {
 
+  // q_approxd / q_hll / q_approxq have no SQL-portable oracle at ANY scale
+  // (engine-specific binary sketches), so their witness is the accuracy /
+  // mergeability contract each sketch publishes, checked against exact
+  // aggregates on the slice through the SketchChecks code SketchSpec pins.
+  private val sketchCert = Cert("sketch") { (spark, dir, check) =>
+    import graft.functions.SketchChecks
+    val ev = Tables.events(spark, dir).cache()
+    // default rsd 0.05 → 3-sigma bound 0.15 (the bound SketchSpec pins)
+    val d = SketchChecks.approxDistinct(ev, "user_id")
+    check(Holds("approxd", d.relErr <= 0.15,
+      f"exact=${d.exact} approx=${d.approx} rel_err=${d.relErr}%.4f (bound 0.15)"))
+    // lgK 12 → rsd ~0.0163, 3-sigma 0.05 on BOTH build paths; the union is
+    // lossless at the register level, but the HIP and composite estimators
+    // may split slightly (HllCheck scaladoc), so each is bounded, not equal
+    val h = SketchChecks.hllMerge(ev, "user_id", col("ts").cast("date"))
+    val hll = f"global=${h.global} merged=${h.merged} exact=${h.exact} daily_buckets=${h.buckets}"
+    check(Holds("hll-merged", h.relErr <= 0.05, f"$hll rel_err=${h.relErr}%.4f (bound 0.05)"))
+    check(Holds("hll-global", h.globalRelErr <= 0.05,
+      f"global_rel_err=${h.globalRelErr}%.4f (bound 0.05)"))
+    check(Holds("hll-split", h.splitRel <= 0.05, f"split=${h.splitRel}%.4f (bound 0.05)"))
+    val qs = SketchChecks.percentileRanks(
+      ev, "event_type", "value", accuracy = 1000, ps = Seq(0.5, 0.9))
+    check(Holds("approxq", qs.nonEmpty && qs.forall(_.ok(0.001)),
+      qs.map(q => f"${q.group}@${q.p}=${q.value}%.4f[${q.lt},${q.le}]/${q.n}").mkString(" ")))
+  }
+
   val all: Seq[Declared] = Seq(
     // as-of join: each purchase sees the user's most recent prior click.
     // Oracle = naive range-join + max; Spark = single-window union pass.
@@ -252,7 +278,7 @@ object AdvancedQueries {
 
     // approximate distinct (HLL++) — engine-specific sketch, rows-only check;
     // the exact counterpart q_distinct is oracle-checked
-    Declared("q_approxd", None) { (spark, dir) =>
+    Declared("q_approxd", None, Seq(sketchCert)) { (spark, dir) =>
       Tables.events(spark, dir)
         .agg(approx_count_distinct(col("user_id")).as("approx_users"))
     },

@@ -396,6 +396,124 @@ object AnnMediaQueries {
     Seq("q_ivf", "q_ivf_idx", "q_semdedup", "q_pq", "q_pq_idx", "q_ivfpq",
       "q_ivfpq_res", "q_ivfpq_idx", "q_ivfpq_res_idx", "q_knn_pq")
 
+  // q_semdedup at SemDeDup's published scale regime (c ∝ n with cluster
+  // size held constant), where the literal-centroid oracle replay is out
+  // of envelope. Four legs on the slice:
+  //  1. assignment duality at c=64: the c-inline-expression plan vs the
+  //     broadcast-model-frame join plan, (vec_id, cid) bit-equality;
+  //  2. the keep-first drop set at c = n/512 from the production
+  //     cluster-local LEFT SEMI plan vs a typed flatMapGroups per-cell pair
+  //     scan (no Catalyst join — a per-cell loop replaying graft_cosine's
+  //     fold order: dot/na/nb in one pass, denom = sqrt(na)*sqrt(nb));
+  //  3. a driver-side argmin replay of a ~1/997 id sample at scale-c (same
+  //     fold order as graft_dot, d = −2·dot + ‖c‖², strict `<` so ties keep
+  //     the lowest cid) against the join plan's mapping — legs 1 and 2
+  //     both consume the join plan at scale-c, so a large-c argmin bug
+  //     would be invisible to them;
+  //  4. the production two-level pruned assignment vs the flat join plan
+  //     over the full corpus.
+  private val semdedupCert = Cert("semdedup") { (spark, dir, check) =>
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, dir).cache()
+    val n   = emb.count()
+    val cs64 = Ann.ivfFit(emb, c = 64, iters = 3)
+    check(Same("assign-c64", Ann.assignCentroid(emb, cs64).select("vec_id", "cid"),
+      Ann.assignCentroidJoin(emb, Ann.semModelDF(spark, cs64))))
+
+    val c   = math.max(16, (n / 512).toInt)
+    val tau = SemTau
+    val cs  = Ann.ivfFit(emb, c = c, iters = 3)
+    val prod = Ann.semDedupDropped(emb, cs, tau)
+    val indep = Ann.assignCentroidJoin(emb, Ann.semModelDF(spark, cs))
+      .join(emb, Seq("vec_id"))
+      .select(col("cid"), col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .as[(Int, Long, Array[Double])]
+      .groupByKey(_._1)
+      .flatMapGroups { (cid, it) =>
+        val xs = it.map { case (_, id, v) => (id, v) }.toArray.sortBy(_._1)
+        val out = Array.newBuilder[(Int, Long)]
+        var j = 1
+        while (j < xs.length) {
+          var i = 0; var hit = false
+          while (i < j && !hit) {
+            val a = xs(i)._2; val b = xs(j)._2
+            var dot = 0.0; var na = 0.0; var nb = 0.0; var k = 0
+            while (k < a.length) {
+              val x = a(k); val y = b(k)
+              dot += x * y; na += x * x; nb += y * y; k += 1
+            }
+            val denom = math.sqrt(na) * math.sqrt(nb)
+            if (denom != 0.0 && dot / denom >= tau) hit = true
+            i += 1
+          }
+          if (hit) out += ((cid, xs(j)._1))
+          j += 1
+        }
+        out.result().iterator
+      }
+      .toDF("cid", "vb")
+    check(Same(s"dedup-c$c", prod, indep))
+    val nDrop = prod.count()
+    check(Holds("drops", nDrop < n, s"n=$n drops=$nDrop tau=$tau"))
+
+    val sample = emb.where(col("vec_id") % 997 === 0)
+    val ccs = cs.map(cv => cv.map(x => x * x).sum)
+    val replay = sample
+      .select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
+      .collect()
+      .map { r =>
+        val v = r.getSeq[Double](1).toArray
+        var bestD = Double.PositiveInfinity; var bestC = -1; var j = 0
+        while (j < cs.length) {
+          val cv = cs(j)
+          var dot = 0.0; var k = 0
+          while (k < v.length) { dot += v(k) * cv(k); k += 1 }
+          val d = -2.0 * dot + ccs(j)
+          if (d < bestD) { bestD = d; bestC = j }
+          j += 1
+        }
+        r.getLong(0) -> bestC
+      }.toMap
+    val joinSample = Ann.assignCentroidJoin(sample, Ann.semModelDF(spark, cs))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val mismatches = replay.count { case (id, cid) => !joinSample.get(id).contains(cid) }
+    check(Holds("argmin-replay",
+      replay.nonEmpty && replay.size == joinSample.size && mismatches == 0,
+      s"c=$c sample=${replay.size} join_rows=${joinSample.size} mismatches=$mismatches"))
+
+    check(Same("two-level", Ann.assignCentroidPruned(emb, cs),
+      Ann.assignCentroidJoin(emb, Ann.semModelDF(spark, cs))))
+  }
+
+  // The g >= 128 coarse level of Ann.assignCentroidPruned (semDedupDropped's
+  // assignment): past c ≈ 16k the coarse level switches from √c inline
+  // expressions to the one compiled `graft_coarse_prune` loop, and only a
+  // factor-1000 slice has the c = 65,536 corpus centroids (g = 256) this
+  // needs — smaller slices are refused. (vec_id, cid) bit-equality against
+  // the flat join plan over a 1/32 subsample (the flat plan scores
+  // n_sub × c rows), then a full-corpus pruned run must assign every
+  // non-null vector.
+  private val prune128Cert = Cert("prune128") { (spark, dir, check) =>
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+      .cache()
+    val cs = emb.where(col("vec_id") % 25 === 0)
+      .orderBy("vec_id")
+      .limit(65536)
+      .select("embedding")
+      .collect().map(_.getSeq[Double](0).toArray)
+    val g = math.ceil(math.sqrt(cs.length.toDouble)).toInt
+    check(Holds("coarse-level", g >= 128,
+      s"c=${cs.length} g=$g (needs g >= 128: run it on the factor-1000 slice)"))
+    val sub = emb.where(col("vec_id") % 32 === 0).cache()
+    check(Same("pruned-vs-flat", Ann.assignCentroidPruned(sub, cs),
+      Ann.assignCentroidJoin(sub, Ann.semModelDF(spark, cs))))
+    // both assignment plans emit no row for a NULL vector
+    val nVec = emb.where(col("embedding").isNotNull).count()
+    val nFull = Ann.assignCentroidPruned(emb, cs).count()
+    check(Holds("full-corpus", nFull == nVec, s"n_vec=$nVec full_pruned_rows=$nFull"))
+  }
+
   /** `def`, not `val`: q_ivf's oracle is assembled from the model the run
     * records, so the registry must be re-materialized when Verify asks for
     * `SparkEntry.oracleSql` AFTER the query loop (the only evaluation-order
@@ -782,8 +900,8 @@ object AnnMediaQueries {
     // broadcast model frame instead of c inline expressions) the stage is
     // LINEAR in corpus size — the at-scale answer to q_embdup's honest
     // but quadratic exact all-pairs. The two assignment plans' bit-
-    // equality at factor 1000 is certified by `Probe --semdedup-cert`.
-    Declared("q_semdedup", semOracleSql) { (spark, dir) =>
+    // equality at factor 1000 is certified by the `semdedup` certificate.
+    Declared("q_semdedup", semOracleSql, Seq(semdedupCert, prune128Cert)) { (spark, dir) =>
       val emb       = Tables.embeddings(spark, dir)
       val centroids = Ann.ivfFit(emb, c = SemC, iters = 3)
       semCentroids = Some(centroids)

@@ -27,8 +27,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    columns by name before hashing),
  *  - identical column types where the engines' defaults diverge (e.g.
  *    DuckDB `length()` is BIGINT, Spark's is INT → cast to long).
+ *
+ * `certs` are the query's scale certificates ([[Cert]]): the witnesses that
+ * still run where the oracle cannot (`graft.Verify --certs`).
  */
 final case class Declared(
     name: String,
-    oracle: Option[String]
+    oracle: Option[String],
+    certs: Seq[Cert] = Nil
 )(val run: (SparkSession, String) => DataFrame)

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.Similarity
 import graft.operators.Dedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -73,6 +74,136 @@ object DedupQueries {
       |       md5(coalesce(array_to_string(list_transform(kept, p -> w[p + 1]), ' '), '')) AS fp
       |FROM k ORDER BY doc_id""".stripMargin
 
+  private def lshPairs(docs: DataFrame): DataFrame =
+    Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.8)
+  private def lshPairsViaBuckets(docs: DataFrame): DataFrame =
+    Dedup.minhashLshPairsViaBuckets(docs, "doc_id", "text", threshold = 0.8)
+
+  // q_minhash_lsh (and q_neardup / q_minhash_lsh_gb, same pair set): above
+  // sf10 the exact all-pairs oracle cannot run, so the witness is
+  // bit-equality between two structurally independent pair derivations —
+  // the band self-JOIN production plan and the bucket-AGGREGATION plan.
+  // Shared code stops at the per-doc signature, so a defect in either
+  // pair generator breaks the equality with near-certainty.
+  private val lshCert = Cert("lsh") { (spark, dir, check) =>
+    val docs = Tables.documents(spark, dir)
+    check(Same("pairs", lshPairs(docs), lshPairsViaBuckets(docs)))
+  }
+
+  // q_dupgroups: the recursive-CTE oracle stops at sf10, but the
+  // min-label-propagation output is self-certifying — a converged labeling
+  // gives both endpoints of EVERY edge the same component (under-merge
+  // shows here; over-merge is impossible, a label only flows along edges)
+  // and each component's label is its min member id. Linear, any scale.
+  private val ccCert = Cert("cc") { (spark, dir, check) =>
+    val pairs = lshPairs(Tables.documents(spark, dir)).select("da", "db").cache()
+    val nPairs = pairs.count()
+    check(Holds("pairs", nPairs > 0L, s"pairs=$nPairs"))
+    val labels = Dedup.connectedComponents(pairs).cache()
+    val edgeViolations = pairs.union(pairs.select(col("db"), col("da"))).toDF("u", "v")
+      .join(labels.select(col("id").as("u"), col("component").as("cu")), "u")
+      .join(labels.select(col("id").as("v"), col("component").as("cv")), "v")
+      .where(col("cu") =!= col("cv")).count()
+    check(Holds("edges", edgeViolations == 0L,
+      s"nodes=${labels.count()} edge_violations=$edgeViolations"))
+    val minViolations = labels.groupBy("component").agg(min("id").as("mn"))
+      .where(col("component") =!= col("mn")).count()
+    check(Holds("min-label", minViolations == 0L,
+      s"components=${labels.select("component").distinct().count()} " +
+        s"minlabel_violations=$minViolations"))
+  }
+
+  // q_dedup_keep: the keeper SET from the band self-JOIN pair plan vs the
+  // same set from the bucket-AGGREGATION pair plan — one anti-join past
+  // the lsh certificate's pair set — and real drops must exist.
+  private val keepCert = Cert("keep") { (spark, dir, check) =>
+    val docs = Tables.documents(spark, dir)
+    val ids = docs.select("doc_id").cache()
+    def keepers(pairs: DataFrame) =
+      ids.join(pairs.select(col("db").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+    val viaJoin = keepers(lshPairs(docs))
+    check(Same("keepers", viaJoin, keepers(lshPairsViaBuckets(docs))))
+    val (nKeep, nDocs) = (viaJoin.count(), ids.count())
+    check(Holds("drops", nKeep < nDocs, s"docs=$nDocs keepers=$nKeep"))
+  }
+
+  // q_dedup_incr: the incremental survivor set via the production
+  // CROSS-SIDE banding vs the same set from the full-corpus bucket-plan
+  // pair set RESTRICTED to (incoming x existing) — the restriction path
+  // never runs the between-join code at all.
+  private val incrCert = Cert("incr") { (spark, dir, check) =>
+    val docs     = Tables.documents(spark, dir).cache()
+    val incoming = docs.where(col("doc_id") % 10 === 0)
+    val existing = docs.where(col("doc_id") % 10 =!= 0)
+    def survivors(dups: DataFrame) =
+      incoming.join(dups, Seq("doc_id"), "left_anti").select("doc_id", "lang")
+    val dupsProd = Dedup.minhashLshPairsBetween(incoming, existing, "doc_id", "text")
+      .select(col("da").as("doc_id")).distinct()
+    // full-corpus pairs have da < db; a cross-side pair surfaces with its
+    // incoming id on EITHER column, so take both orientations
+    val full = lshPairsViaBuckets(docs)
+    val dupsIndep = full
+      .where(col("da") % 10 === 0 && col("db") % 10 =!= 0).select(col("da").as("doc_id"))
+      .unionByName(full
+        .where(col("db") % 10 === 0 && col("da") % 10 =!= 0).select(col("db").as("doc_id")))
+      .distinct()
+    val sProd = survivors(dupsProd)
+    check(Same("survivors", sProd, survivors(dupsIndep)))
+    val (nSurv, nIn) = (sProd.count(), incoming.count())
+    check(Holds("drops", nSurv < nIn, s"incoming=$nIn survivors=$nSurv"))
+  }
+
+  // q_substrdedup / q_substrdedup_win: the DuckDB replay windows over every
+  // span occurrence (quadratic memory in the hot-span case) and stops at
+  // sf10. The two plans differ ONLY in dup MARKING (removeSpans is shared),
+  // so the witness is marking equality at full coverage. The definitional
+  // window marking does not fit one box's disk at factor 1000, and span
+  // classes (xxhash64(span) mod 16) are CLOSED under marking, so it runs as
+  // 16 sequential class-restricted jobs whose dup-row digests (count +
+  // sum(xxhash64), the check.py DIGEST idiom) SUM to the global window
+  // digest — compared with the production agg marking's one digest. A full
+  // production run then pins exact corpus token conservation.
+  private val substrCert = Cert("substr") { (spark, dir, check) =>
+    val docs = Tables.documents(spark, dir)
+    def dupDigest(marked: DataFrame): (Long, java.math.BigDecimal) = {
+      val r = marked.where(col("__dup")).agg(
+        count(lit(1)),
+        coalesce(sum(xxhash64(col("doc_id"), col("pos")).cast("decimal(38,0)")),
+          lit(java.math.BigDecimal.ZERO))).first()
+      (r.getLong(0), r.getDecimal(1))
+    }
+    // a leg's shuffle files are reclaimed only after its RDDs are GC'd —
+    // on a barely-pressured large heap that never happens by itself, and
+    // the legs' accumulated shuffles overflowed the disk; nudge after each
+    // leg and give the cleaner as long as the leg took, up to 4 s
+    var legStart = System.nanoTime()
+    def reclaim(): Unit = {
+      System.gc()
+      Thread.sleep(math.min(4000L, (System.nanoTime() - legStart) / 1000000L))
+      legStart = System.nanoTime()
+    }
+    val segsAll = Dedup.spanRows(docs, "doc_id", "text", 10)
+    val (nA, hA) = dupDigest(Dedup.markDupAgg(segsAll, "doc_id"))
+    reclaim()
+    val classes = 16
+    val (nW, hW) = (0 until classes).foldLeft((0L, java.math.BigDecimal.ZERO)) {
+      case ((n, h), cls) =>
+        val segs = segsAll.where(pmod(xxhash64(col("span")), lit(classes)) === cls)
+        val (nc, hc) = dupDigest(Dedup.markDupWin(segs, "doc_id"))
+        reclaim()
+        (n + nc, h.add(hc))
+    }
+    check(Holds("marking-duality", nA > 0L && nA == nW && hA.compareTo(hW) == 0,
+      s"agg_dups=$nA win_dups=$nW digest_agg=$hA digest_win=$hW"))
+    val prod = Dedup.substrDedupAgg(docs, "doc_id", "text")
+      .agg(count(lit(1)), sum(expr("toks_kept + toks_dropped")), sum("toks_dropped"))
+      .first()
+    val toks = docs.select(size(split(col("text"), " +")).cast("long").as("t"))
+      .agg(sum("t")).first().getLong(0)
+    check(Holds("conservation", prod.getLong(1) == toks && prod.getLong(2) > 0L,
+      s"docs=${prod.getLong(0)} dropped_tokens=${prod.getLong(2)} corpus_tokens=$toks"))
+  }
+
   val all: Seq[Declared] = Seq(
     // exact n-gram Jaccard near-dup pairs (the small-corpus ground truth)
     Declared("q_neardup", Some(exactPairsSql)) { (spark, dir) =>
@@ -82,7 +213,7 @@ object DedupQueries {
 
     // MinHash-LSH + exact verify — SAME oracle as q_neardup: the scale path
     // must find exactly the pairs the exact path finds
-    Declared("q_minhash_lsh", Some(exactPairsSql)) { (spark, dir) =>
+    Declared("q_minhash_lsh", Some(exactPairsSql), Seq(lshCert)) { (spark, dir) =>
       Dedup.minhashLshPairs(Tables.documents(spark, dir), "doc_id", "text", threshold = 0.8)
         .orderBy("da", "db")
     },
@@ -107,7 +238,8 @@ object DedupQueries {
         s"""WITH pairs AS ($exactPairsSql)
            |SELECT count(*) AS kept FROM documents
            |WHERE doc_id NOT IN (SELECT db FROM pairs)""".stripMargin
-      )
+      ),
+      Seq(keepCert)
     ) { (spark, dir) =>
       val docs  = Tables.documents(spark, dir)
       val drop  = Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.8)
@@ -135,7 +267,8 @@ object DedupQueries {
            |  SELECT reach.node, e.d FROM reach JOIN edges e ON e.s = reach.r)
            |SELECT node AS doc_id, min(r) AS group_id
            |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
-      )
+      ),
+      Seq(ccCert)
     ) { (spark, dir) =>
       val pairs = Dedup.minhashLshPairs(
         Tables.documents(spark, dir), "doc_id", "text", threshold = 0.8)
@@ -255,7 +388,8 @@ object DedupQueries {
           |SELECT doc_id, lang FROM documents
           |WHERE doc_id % 10 = 0 AND doc_id NOT IN (SELECT da FROM dup)
           |ORDER BY doc_id""".stripMargin
-      )
+      ),
+      Seq(incrCert)
     ) { (spark, dir) =>
       val docs     = Tables.documents(spark, dir)
       val incoming = docs.where(col("doc_id") % 10 === 0)
@@ -366,7 +500,8 @@ object DedupQueries {
     // oracle replays the whole thing, fingerprint included.
     Declared(
       "q_substrdedup",
-      Some(substrDedupOracleSql)
+      Some(substrDedupOracleSql),
+      Seq(substrCert)
     ) { (spark, dir) =>
       Dedup.substrDedupAgg(Tables.documents(spark, dir), "doc_id", "text", k = 10)
         .orderBy("doc_id")
@@ -376,7 +511,7 @@ object DedupQueries {
     // (row_number over the span key) — the q_linededup/q_linededup_agg
     // dual-plan pattern: both plans hash-check against ONE oracle at
     // driver SFs, and their bit-equality is re-certified at factor 1000
-    // by Probe --substr-cert where the oracle cannot run.
+    // by q_substrdedup's `substr` certificate where the oracle cannot run.
     Declared(
       "q_substrdedup_win",
       Some(substrDedupOracleSql)

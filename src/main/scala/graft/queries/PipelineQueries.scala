@@ -40,6 +40,94 @@ object PipelineQueries {
         md5(concat_ws(" ", slice(col("w"), col("col") + 1, lit(window)))).as("fp"))
   }
 
+  // q_curate: the chain's LSH stage has a quadratic oracle, so at factor
+  // 1000 the flagship is certified STAGE by STAGE — each stage's output
+  // derived twice through structurally disjoint plans (window vs agg exact
+  // dedup; band self-JOIN vs bucket AGGREGATION drops; broadcast+count vs
+  // shuffle-merge+countDistinct contamination; compiled expressions vs
+  // built-in SQL text quality/split; distributed prefix sum vs a per-split
+  // window packing), each consuming the PREVIOUS stage's certified output.
+  // Everything is linear and distributed except the pack stage's witness
+  // window (one partition per split — the certificate's oracle).
+  private val curateCert = Cert("curate") { (spark, dir, check) =>
+    val docs = Tables.documents(spark, dir).cache()
+    // exact-dedup keepers: window rn=1 (production) vs groupBy(fp) → min id
+    val fp = TextAnalysis.normalizedFingerprint(col("text"))
+    val kept0 = docs.withColumn("rn", row_number().over(Window.partitionBy(fp).orderBy("doc_id")))
+      .where(col("rn") === 1).select("doc_id")
+    check(Same("exact-dedup", kept0,
+      docs.groupBy(fp.as("fp")).agg(min("doc_id").as("doc_id")).select("doc_id")))
+
+    val drops = Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.8)
+      .select(col("db").as("doc_id")).distinct()
+    check(Same("lsh-drops", drops,
+      Dedup.minhashLshPairsViaBuckets(docs, "doc_id", "text", threshold = 0.8)
+        .select(col("db").as("doc_id")).distinct()))
+
+    // (doc_id, s) is distinct by construction, so count = countDistinct
+    val sh = docs.select(col("doc_id"), explode(Dedup.shingles(col("text"))).as("s"))
+    val bench = sh.where(col("doc_id") % 97 === 0).select("s").distinct()
+    val probe = sh.where(col("doc_id") % 97 =!= 0)
+    val contam = probe.join(broadcast(bench), Seq("s"))
+      .groupBy("doc_id").agg(count(lit(1)).as("ns"))
+      .where(col("ns") >= 3).select("doc_id")
+    check(Same("contam", contam, probe.join(bench.hint("SHUFFLE_MERGE"), Seq("s"))
+      .groupBy("doc_id").agg(countDistinct(col("s")).as("ns"))
+      .where(col("ns") >= 3).select("doc_id")))
+
+    // set algebra over the certified inputs, re-derived in another order
+    val kept1 = kept0
+      .join(drops, Seq("doc_id"), "left_anti")
+      .join(contam, Seq("doc_id"), "left_anti")
+      .where(col("doc_id") % 97 =!= 0)
+    check(Same("survivors", kept1, kept0.where(col("doc_id") % 97 =!= 0)
+      .join(contam.unionByName(drops).distinct(), Seq("doc_id"), "left_anti")))
+
+    val kd = docs.join(kept1, Seq("doc_id"))
+    val qProd = kd
+      .withColumn("len_score", TextAnalysis.lengthScore(col("n_chars")))
+      .withColumn("stop_ratio", TextAnalysis.stopwordRatio(col("text")))
+      .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")))
+      .where(col("len_score") >= 0.2 && col("stop_ratio") > 0)
+      .withColumn("p", substring(md5(col("doc_id").cast("string")), 1, 2))
+      .withColumn("split",
+        when(col("p") < "e6", "train").when(col("p") < "f3", "val").otherwise("test"))
+      .select("doc_id", "split", "n_tokens")
+    check(Same("quality", qProd, kd
+      .where(expr("least(n_chars / 500.0, 1.0) >= 0.2 AND " +
+        "size(filter(split(text, ' +'), t -> t IN ('the','a','of','and','to'))) > 0"))
+      .withColumn("n_tokens", expr("cast(size(split(text, ' +')) as long)"))
+      .withColumn("split", expr(
+        "CASE WHEN substring(md5(cast(doc_id as string)), 1, 2) < 'e6' THEN 'train' " +
+        "WHEN substring(md5(cast(doc_id as string)), 1, 2) < 'f3' THEN 'val' " +
+        "ELSE 'test' END"))
+      .select("doc_id", "split", "n_tokens")))
+    val nSplits = qProd.select("split").distinct().count()
+    check(Holds("splits", nSplits == 3L,
+      s"docs=${docs.count()} kept0=${kept0.count()} kept1=${kept1.count()} " +
+        s"quality=${qProd.count()} splits=$nSplits"))
+
+    val packProd = Seq("train", "val", "test")
+      .map(sp => Pack.assignBins(
+        qProd.where(col("split") === sp), "doc_id", "n_tokens", budget = 2048L))
+      .reduce(_ unionByName _)
+      .select("split", "doc_id", "bin")
+    val wsp = Window.partitionBy("split").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    check(Same("pack", packProd, qProd
+      .withColumn("start_off", coalesce(sum("n_tokens").over(wsp), lit(0L)))
+      .select(col("split"), col("doc_id"), expr("start_off div 2048").as("bin"))))
+
+    // the flagship's 3-row output via two aggregation paths
+    val tok = packProd.join(qProd.select("doc_id", "n_tokens"), Seq("doc_id"))
+    check(Same("final",
+      tok.groupBy("split").agg(count(lit(1)).as("docs"),
+        sum("n_tokens").as("tokens"), countDistinct(col("bin")).as("bins")),
+      tok.groupBy("split", "bin").agg(count(lit(1)).as("d"), sum("n_tokens").as("t"))
+        .groupBy("split").agg(sum("d").as("docs"), sum("t").as("tokens"),
+          count(lit(1)).as("bins"))))
+  }
+
   val all: Seq[Declared] = Seq(
     // Sliding-window document chunking (context-window prep for training /
     // RAG): 64-token chunks on a 32-token stride, fingerprinted per chunk.
@@ -320,7 +408,8 @@ object PipelineQueries {
           |SELECT split, count(*) AS docs, CAST(sum(n_tokens) AS BIGINT) AS tokens,
           |       CAST(count(DISTINCT start_off // 2048) AS BIGINT) AS bins
           |FROM o GROUP BY split ORDER BY split""".stripMargin
-      )
+      ),
+      Seq(curateCert)
     ) { (spark, dir) =>
       val docs = Tables.documents(spark, dir)
       val wfp = Window

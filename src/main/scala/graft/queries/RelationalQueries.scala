@@ -38,8 +38,8 @@ object RelationalQueries {
     // not determinism). Long-cents partial aggregation is exact integer
     // arithmetic, so the sum is order-independent at any realistic scale
     // (envelope documented in graft.functions.Money) and ~30%-2.4×
-    // cheaper than the DECIMAL(18,2) formulation it replaced (Probe
-    // --money-sums; VERDICT r09 item 4). The DuckDB oracles keep the
+    // cheaper than the DECIMAL(18,2) formulation it replaced (VERDICT r09
+    // item 4; MoneySpec pins the equality). The DuckDB oracles keep the
     // DECIMAL formulation — both convert the same exact rational to its
     // nearest double, so hashes are unchanged. Same treatment in
     // q_joinfact/q_skewjoin (shared logical query) and the wide-sum q1

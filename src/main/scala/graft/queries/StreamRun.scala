@@ -27,7 +27,7 @@ private[queries] object StreamRun {
   /** Suppress the trailing NO-DATA micro-batch for replays where that batch
     * provably emits nothing (round 16: it cost a full batch cycle — ~0.5 s
     * of planning + state-store commit across every partition — per query at
-    * the bench SF, measured in `Probe --join-floor` as a rows=0 batch).
+    * the bench SF, measured as a rows=0 batch; VERDICT.md round 16).
     * The no-data batch exists to act on a watermark advance after the last
     * data batch; it changes OUTPUT only for operators that EMIT on
     * watermark closure (append-mode windows/sessions, outer-join

@@ -32,6 +32,65 @@ object StreamingQueries {
         .repartition(4).write.parquet(d)
     }
 
+  /** The events landing directory a file-source certificate streams, and
+    * its part-file count: a slice's own `events.parquet` directory, or the
+    * 4-drop staged copy when the slice holds a single file. */
+  private def certEvents(spark: org.apache.spark.sql.SparkSession, dir: String): (String, Long) = {
+    import java.nio.file.{Files, Paths}
+    val own = s"$dir/events.parquet"
+    val path = if (Files.isDirectory(Paths.get(own))) own else stagedEvents4(spark, dir)
+    val ls = Files.list(Paths.get(path))
+    try (path, ls.filter(_.toString.endsWith(".parquet")).count()) finally ls.close()
+  }
+
+  // q_stream_filewin: the EventFeed replays stop at the sf10 sweep (the
+  // harness is driver-materialized by design); the at-scale ingestion path
+  // is the FILE source running the identical FileStreams code. ~4
+  // admission-capped micro-batches (cross-batch window state) must
+  // BIT-equal the batch plan over the same files: every aggregated
+  // quantity is an exact integer, so equality holds at any batching.
+  private val streamCert = Cert("stream") { (spark, dir, check) =>
+    val (evPath, nFiles) = certEvents(spark, dir)
+    val fpt = math.max(1L, (nFiles + 3) / 4).toInt
+    val (got, batches) = graft.streaming.FileStreams.hourlyProfileStream(
+      spark, evPath, fpt, graft.ScratchDirs.dir("graft-streamcert"))
+    check(Holds("batches", nFiles < 2 || batches >= 2, s"files=$nFiles batches=$batches"))
+    check(Same("profile", got,
+      graft.streaming.FileStreams.hourlyProfileBatch(spark, evPath)))
+  }
+
+  // q_stream_filejoin: stream-stream JOIN state at scale. Inner leg: two
+  // admission-capped file streams (~8 micro-batches, fully time-unordered
+  // arrival) must emit the batch join's pair set exactly — a dropped
+  // partner, a duplicate emission or an eviction bug flips a row. Outer
+  // leg: LEFT OUTER null-extension on watermark closure. `delay` spans the
+  // whole event-time range (keep-all state) and a sentinel drop advances
+  // the final watermark past every real click's partner window, so the
+  // closed region (c_ts <= maxReal) must BIT-equal the batch LEFT OUTER
+  // join over the same landing files.
+  private val streamjoinCert = Cert("streamjoin") { (spark, dir, check) =>
+    import graft.streaming.FileStreams
+    val (evPath, nFiles) = certEvents(spark, dir)
+    val fpt = math.max(1L, (nFiles + 7) / 8).toInt
+    val (got, batches) = FileStreams.attributionJoinStream(
+      spark, evPath, fpt, graft.ScratchDirs.dir("graft-streamjoincert"))
+    check(Holds("batches", nFiles < 2 || batches >= 2, s"files=$nFiles batches=$batches"))
+    check(Same("inner-pairs", got, FileStreams.attributionJoinBatch(spark, evPath)))
+    spark.catalog.clearCache()
+    val mm = graft.Tables.readEvents(spark, evPath).agg(min(col("ts")), max(col("ts"))).first()
+    val delaySec = (mm.getTimestamp(1).getTime - mm.getTimestamp(0).getTime) / 1000 + 3600
+    val landing = graft.ScratchDirs.dir("graft-outerjoin-landing")
+    val (maxReal, sentinel) = FileStreams.sentineledLanding(
+      spark, evPath, landing, offsetSeconds = delaySec + 8 * 3600)
+    val (gotO, batchesO) = FileStreams.attributionJoinOuterStream(spark, landing, fpt,
+      graft.ScratchDirs.dir("graft-outerjoincert"), s"$delaySec seconds", maxReal)
+    val expO = FileStreams.attributionJoinOuterBatch(spark, landing, maxReal).cache()
+    val nNull = expO.where(col("p_ts").isNull).count()
+    check(Holds("outer-closure", (nFiles < 2 || batchesO >= 2) && nNull > 0L,
+      s"batches=$batchesO null_extended=$nNull sentinel=$sentinel"))
+    check(Same("outer-rows", gotO, expO))
+  }
+
   val all: Seq[Declared] = Seq(
     // EP3 end-to-end: feed → envelope → serialize → offset-log sink; then
     // read the log BACK through from_json. offset == event_id proves the
@@ -135,7 +194,7 @@ object StreamingQueries {
     // state ∝ windows × types, results landing DISTRIBUTED via foreachBatch
     // parquet — no driver materialization anywhere, which is what lets the
     // identical code run as the factor-1000 streaming certificate
-    // (`Probe --stream-cert` over a ScaleUp slice the EventFeed replay
+    // (the `stream` certificate, over a ScaleUp slice the EventFeed replay
     // envelope cannot hold). Exact quantities only (count + integer cents),
     // so stream/batch equality is bit-equality at any batching.
     Declared(
@@ -144,7 +203,8 @@ object StreamingQueries {
         """SELECT date_trunc('hour', ts) AS w, event_type, count(*) AS n,
           |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
           |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-      )
+      ),
+      Seq(streamCert)
     ) { (spark, dir) =>
       // stage the driver's single events file as 4 drops so the file
       // source replays a real multi-batch discovery (2 files/trigger);
@@ -173,7 +233,7 @@ object StreamingQueries {
     // state + once-each pair emission under adversarial arrival order. The
     // oracle is the plain batch join; output carries the raw purchase value
     // (no arithmetic → bit-identical doubles). Same code runs at factor
-    // 1000 as `Probe --streamjoin-cert`.
+    // 1000 as the `streamjoin` certificate.
     Declared(
       "q_stream_filejoin",
       Some(
@@ -185,7 +245,8 @@ object StreamingQueries {
           |FROM c JOIN p ON c.user_id = p.user_id
           | AND p.p_ts >= c.c_ts AND p.p_ts <= c.c_ts + INTERVAL '6 hours'
           |ORDER BY 1, 2, 3""".stripMargin
-      )
+      ),
+      Seq(streamjoinCert)
     ) { (spark, dir) =>
       val stage = stagedEvents4(spark, dir)
       val out = graft.ScratchDirs.dir("graft-filejoin-out")

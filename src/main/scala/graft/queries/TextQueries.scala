@@ -26,6 +26,77 @@ object TextQueries {
     s"CASE $whens ELSE 'und' END"
   }
 
+  // q_windup: the fingerprint self-join oracle is quadratic in DuckDB and
+  // stops at sf10; the witness is bit-equality between the production
+  // self-join plan and the bucket-aggregation derivation (groupBy fp →
+  // sorted collect_list → HOF pair expansion → per-pair count), both over
+  // ONE cached fingerprint table. The rare filter (df ≤ 50) bounds every
+  // bucket, so neither plan meets a degenerate bucket.
+  private val windupCert = Cert("windup") { (spark, dir, check) =>
+    val fr = graft.operators.Dedup.rareFingerprints(
+      Tables.documents(spark, dir).where(col("n_chars") >= 15), "doc_id", "text").cache()
+    check(Same("pairs", graft.operators.Dedup.windupPairsFrom(fr),
+      graft.operators.Dedup.windupPairsViaBucketsFrom(fr)))
+  }
+
+  // q_bpe_train: the distributed trainer vs the definitional single-node
+  // Sennrich loop run driver-side over the COLLECTED word-frequency table
+  // (vocabulary-bounded at any corpus scale). Exact equality of ranks,
+  // pairs AND summed pair counts pins the whole-corpus word count and the
+  // distributed argmax/tie path in one check.
+  private val bpeCert = Cert("bpe") { (spark, dir, check) =>
+    import org.apache.spark.unsafe.types.UTF8String
+    val docs = Tables.documents(spark, dir)
+    val got  = graft.functions.BpeTrain.fitMerges(docs, "text", 12)
+    val wf = docs.select(explode(split(col("text"), " +")).as("w"))
+      .where(col("w") =!= "")
+      .groupBy("w").agg(count(lit(1)).as("f"))
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    // definitional loop (mirrors BpeTrainSpec.referenceFit, from freqs)
+    val freq = scala.collection.mutable.Map.empty[List[String], Long]
+    wf.foreach { case (w, f) =>
+      val syms = w.codePoints().toArray.toList.map(Character.toChars(_).mkString)
+      freq(syms) = freq.getOrElse(syms, 0L) + f
+    }
+    def binLt(a: String, b: String): Boolean =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+    val want = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
+    var k = 1
+    var done = false
+    while (k <= 12 && !done) {
+      val stats = scala.collection.mutable.Map.empty[(String, String), Long]
+      freq.foreach { case (syms, f) =>
+        syms.zip(syms.drop(1)).foreach(p => stats(p) = stats.getOrElse(p, 0L) + f)
+      }
+      if (stats.isEmpty) done = true
+      else {
+        val (bl, br) = stats.keys.reduceLeft { (p, q) =>
+          val (cp, cq) = (stats(p), stats(q))
+          if (cp > cq) p else if (cq > cp) q
+          else if (binLt(p._1, q._1)) p else if (binLt(q._1, p._1)) q
+          else if (binLt(p._2, q._2)) p else q
+        }
+        want += ((k, bl, br, stats((bl, br))))
+        val merged = freq.toSeq.map { case (syms, f) =>
+          val buf = scala.collection.mutable.ListBuffer.empty[String]
+          syms.foreach { s =>
+            if (buf.nonEmpty && buf.last == bl && s == br) { buf.remove(buf.length - 1); buf += (bl + br) }
+            else buf += s
+          }
+          (buf.toList, f)
+        }
+        freq.clear()
+        merged.foreach { case (syms, f) => freq(syms) = freq.getOrElse(syms, 0L) + f }
+        k += 1
+      }
+    }
+    val eq = got == want.toList
+    check(Holds("merge-table", eq,
+      s"vocab=${wf.length} merges=${got.length} " +
+        (if (eq) s"top=${got.headOption.map(m => s"${m._2}+${m._3}:${m._4}").getOrElse("-")}"
+         else s"got=$got want=${want.toList}")))
+  }
+
   val all: Seq[Declared] = Seq(
     // token counting: whitespace tokens + BPE-ish subword pieces
     Declared(
@@ -234,7 +305,8 @@ object TextQueries {
           |FROM f a JOIN rare USING (fp) JOIN f b ON a.fp = b.fp AND a.doc_id < b.doc_id
           |GROUP BY 1, 2 HAVING count(*) >= 5
           |ORDER BY da, db""".stripMargin
-      )
+      ),
+      Seq(windupCert)
     ) { (spark, dir) =>
       graft.operators.Dedup.windupPairs(
         Tables.documents(spark, dir).where(col("n_chars") >= 15), "doc_id", "text")
@@ -467,7 +539,7 @@ object TextQueries {
     // Sennrich loop on the same corpus, the operand invariant, and an
     // exact reproduction of the in-repo BpeTokenizer.Merges table from a
     // corpus engineered to rank those 12 merges.
-    Declared("q_bpe_train", None) { (spark, dir) =>
+    Declared("q_bpe_train", None, Seq(bpeCert)) { (spark, dir) =>
       graft.functions.BpeTrain.fitMergesDF(Tables.documents(spark, dir), "text", 12)
     },
 

@@ -16,8 +16,8 @@ import org.apache.spark.sql.streaming.Trigger
  * source lists files, executors read them, `foreachBatch` writes the
  * complete aggregate back out as parquet. This is the path that carries the
  * streaming registry's semantics to ScaleUp slices the replay envelope
- * cannot hold — the factor-1000 streaming certificate (`Probe
- * --stream-cert`) and the q_stream_filewin registry query both run THIS
+ * cannot hold — the factor-1000 streaming certificate (q_stream_filewin's
+ * `stream` certificate) and the q_stream_filewin registry query both run THIS
  * code, so the certificate certifies exactly what the query ships.
  *
  * Every aggregated quantity is an exact integer (row count + integer cents,
@@ -139,8 +139,8 @@ object FileStreams {
    * Watermarked EVICTION semantics are oracle-checked at driver SFs by the
    * q_stream_join/outer/fullouter/semijoin replay family; what THIS path
    * certifies at scale is cross-batch join state + exactly-once pair
-   * emission under adversarial arrival order ([[graft.tools.Probe]]
-   * `--streamjoin-cert`: bit-equality with the batch join).
+   * emission under adversarial arrival order (q_stream_filejoin's
+   * `streamjoin` certificate: bit-equality with the batch join).
    */
   def attributionJoinStream(
       spark: SparkSession,
@@ -200,7 +200,7 @@ object FileStreams {
 
   /**
    * Streaming side of the LEFT OUTER duality — the null-extension-on-
-   * watermark-closure path (`Probe --streamjoin-cert`'s outer leg; the
+   * watermark-closure path (the `streamjoin` certificate's outer leg; the
    * inner leg above deliberately runs watermark-FREE).
    *
    * Watermark strategy, honest about ScaleUp arrival order: slice part

@@ -31,41 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object Ingest {
 
-  /** Ephemeral checkpoint dir for bounded replays. Prefers tmpfs
-    * (`/dev/shm`) — the HDFS-backed state store writes per-partition delta
-    * files + commit logs EVERY micro-batch, and fsync-ing those to disk
-    * dominated the streaming bench. Durable pipelines point this at a real
-    * DFS; the state machinery exercised is identical. */
-  def ephemeralCheckpoint(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(CheckpointRoot.root, prefix)
-    dir.toString
-  }
-
-  /** Self-cleaning root for all ephemeral checkpoints: on tmpfs when
-    * available, recursively deleted on JVM exit. `File.deleteOnExit` only
-    * removes EMPTY dirs, so the per-query scheme left every checkpoint
-    * tree behind — hundreds of runs accumulated thousands of shm entries
-    * per session. */
-  private object CheckpointRoot {
-    lazy val root: java.nio.file.Path = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val r =
-        if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-          java.nio.file.Files.createTempDirectory(shm, "graft-ckpt-root")
-        else java.nio.file.Files.createTempDirectory("graft-ckpt-root")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => delete(r)))
-      r
-    }
-    private def delete(p: java.nio.file.Path): Unit = {
-      try {
-        if (java.nio.file.Files.isDirectory(p)) {
-          val s = java.nio.file.Files.list(p)
-          try s.forEach(c => delete(c)) finally s.close()
-        }
-        java.nio.file.Files.deleteIfExists(p)
-      } catch { case _: Throwable => () }
-    }
-  }
+  /** Ephemeral checkpoint dir for bounded replays, under the self-cleaning
+    * checkpoint root ([[graft.ScratchDirs.checkpoint]]: tmpfs when
+    * available, deleted at JVM exit). Durable pipelines point this at a
+    * real DFS; the state machinery exercised is identical. */
+  def ephemeralCheckpoint(prefix: String): String = graft.ScratchDirs.checkpoint(prefix)
 
   /** CloudEvent envelope schema for parsing stored bytes back (§1.2). */
   def envelopeSchema(dataSchema: StructType): StructType = StructType(Seq(

@@ -55,17 +55,19 @@ object Watch {
   ): Session = {
     val start = startingOffset.getOrElse(log.range.latest + 1)
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]
-    val q = tail(spark, name, log, startingOffset, maxBatchSize).writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
-      .option("checkpointLocation", Ingest.ephemeralCheckpoint(s"graft-watch-session-$name"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.orderBy("offset").collect()
-          .foreach(r => buf.add((r.getLong(0), r.getString(1))))
-        ()
-      }
-      .start()
-    val finished = q.awaitTermination(maxDurationMs)
-    if (!finished) q.stop()
+    // the session owns its registry entry: removed once its query stopped
+    val finished = try {
+      val q = tail(spark, name, log, startingOffset, maxBatchSize).writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+        .option("checkpointLocation", Ingest.ephemeralCheckpoint(s"graft-watch-session-$name"))
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.orderBy("offset").collect()
+            .foreach(r => buf.add((r.getLong(0), r.getString(1))))
+          ()
+        }
+        .start()
+      try q.awaitTermination(maxDurationMs) finally q.stop()
+    } finally OffsetLogRegistry.remove(name)
     // in-order delivery ⇒ the buffer is a dense prefix; cursor = last + 1
     val records = buf.toArray(Array.empty[(Long, String)]).toSeq.sortBy(_._1)
     Session(records, records.lastOption.map(_._1 + 1).getOrElse(start), expired = !finished)

@@ -54,7 +54,7 @@ class AqeSpec extends AnyFunSuite {
     // on the join back (segments ⋈ first-occurrence winners on `seg`)
     // being AQE-skew-splittable when a hot boilerplate line concentrates
     // one join key — this pins that the executed plan actually splits.
-    // Synthetic hot-line frame (the Probe --linedup-skew shape): segment 0
+    // Synthetic hot-line frame (PLANS.md's line-dedup skew shape): segment 0
     // is unique per doc, segment 1 is IDENTICAL in every doc, so one `seg`
     // key holds half of all rows. Broadcast is disabled on both planners
     // (a broadcast join would sidestep skew rather than split it), and the

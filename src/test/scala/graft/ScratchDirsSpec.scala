@@ -27,6 +27,25 @@ class ScratchDirsSpec extends AnyFunSuite {
     assert(builds === 2)
   }
 
+  test("checkpoints land under the tmpfs root and the shared cleanup removes them") {
+    val tmpfs = ScratchDirs.tmpfs
+    // the production root: every ephemeral checkpoint sits on tmpfs when
+    // it is writable, else under the JVM temp dir beside the datasets
+    val ckpt = Paths.get(graft.streaming.Ingest.ephemeralCheckpoint("scratchspec-ckpt"))
+    assert(Files.isDirectory(ckpt))
+    tmpfs.foreach(t => assert(ckpt.startsWith(t), s"$ckpt is not under $t"))
+    // a private root of the SAME class (the production one is deleted only
+    // at exit): a checkpoint tree under it goes with one clean()
+    val root = new ScratchDirs.Root(tmpfs, "graft-scratchspec-root")
+    val d = Paths.get(root.dir("ckpt"))
+    Files.createDirectories(d.resolve("offsets"))
+    Files.writeString(d.resolve("offsets/0"), "v1")
+    tmpfs.foreach(t => assert(d.startsWith(t)))
+    assert(d.startsWith(root.path))
+    root.clean()
+    assert(!Files.exists(d) && !Files.exists(root.path))
+  }
+
   test("cached keys with path characters stay distinct after sanitizing") {
     val a = ScratchDirs.cached("k-/root/testdata/sf0.01") { p =>
       Files.createDirectories(Paths.get(p))

@@ -87,7 +87,7 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("sketch contracts hold through the shared SketchChecks (--sketch-cert path)") {
-    // the SAME code `Probe --sketch-cert` runs at ScaleUp slices — pinned
+    // the SAME code q_approxd's `sketch` certificate runs at ScaleUp slices — pinned
     // here at a driver SF so the certificate and the spec cannot drift
     import graft.functions.SketchChecks
     val ev = Tables.events(spark, dir)

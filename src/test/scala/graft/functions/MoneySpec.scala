@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.TestSpark
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,6 +46,25 @@ class MoneySpec extends AnyFunSuite {
       df.agg(Money.sumDiscounted(col("p"), col("d")).as("s")).collect()
     }
     assert(isOverflow(e), s"expected an ANSI overflow error, got: $e")
+  }
+
+  test("TPC-H Q1 money sums equal the DECIMAL(18,2) formulation on lineitem") {
+    // the same filter/group shape and rounding as q_tpch1's two money
+    // columns: the integer-cents path must reproduce the DECIMAL values
+    val base = graft.Tables.lineitem(spark, "/root/testdata/sf0.01")
+      .filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02 00:00:00")))
+    val price = col("l_extendedprice").cast("decimal(18,2)")
+    val disc  = col("l_discount").cast("decimal(18,2)")
+    def sums(basePrice: Column, discPrice: Column) =
+      base.groupBy("l_returnflag", "l_linestatus")
+        .agg(round(basePrice, 4).as("b"), round(discPrice, 4).as("d"))
+        .orderBy("l_returnflag", "l_linestatus")
+        .collect().map(_.toSeq).toSeq
+    val decimal = sums(sum(price).cast("double"), sum(price * (lit(1) - disc)).cast("double"))
+    val cents = sums(Money.sumMoney(col("l_extendedprice")),
+      Money.sumDiscounted(col("l_extendedprice"), col("l_discount")))
+    assert(decimal.nonEmpty)
+    assert(cents === decimal)
   }
 
   test("in-envelope sums stay exact against the DECIMAL formulation") {

@@ -112,6 +112,31 @@ class AnnSpec extends AnyFunSuite {
     assert(a.head._1 === 0L && a.head._2 === 1.0)
   }
 
+  test("NSW recall holds across graph parameters and shard caps") {
+    // the (m, ef, maxShardRows) grid the q_hnsw parameter choice was made
+    // from: a shard cap below the corpus size forces more, smaller graphs,
+    // and the planted-cluster recall floor must hold for every setting
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val rows = for {
+      c <- 0 until 20
+      center = Array.fill(64)(rnd.nextGaussian().toFloat)
+      m <- 0 until 10
+    } yield ((c * 10 + m).toLong, center.map(x => x + 0.01f * rnd.nextGaussian().toFloat).toSeq)
+    val emb = rows.toDF("vec_id", "embedding").cache()
+    val probes = Seq(0L, 55L, 111L, 190L)
+    val exact = probes.map(p =>
+      Ann.bruteForceTopK(emb, p, 10).collect().map(_.getLong(0)).toSet)
+    for ((m, ef, maxRows) <- Seq((12, 128, 8192L), (16, 160, 64L), (8, 48, 32L))) {
+      val hits = probes.zip(exact).map { case (p, ex) =>
+        Ann.nswTopK(emb, p, 10, m = m, ef = ef, maxShardRows = maxRows)
+          .collect().map(_.getLong(0)).count(ex)
+      }
+      val mean = hits.sum / (10.0 * hits.length)
+      assert(mean >= 0.9, s"m=$m ef=$ef maxShardRows=$maxRows recall@10 $mean ($hits)")
+    }
+  }
+
   test("NSW index: persist/reload reproduces the fresh build's answers exactly") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)

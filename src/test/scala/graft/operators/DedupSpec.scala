@@ -74,7 +74,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("windup dual plans agree: fingerprint self-join == bucket aggregation") {
-    // unit-level pin of the Probe --windup-cert construction (the
+    // unit-level pin of q_windup's `windup` certificate construction (the
     // factor-1000 witness for q_windup's quadratic-oracle exclusion):
     // the rare-filtered shared-fingerprint pair counts must be identical
     // through the self-join and the collect_list strict-suffix expansion

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * The stream/batch duality contract behind q_stream_filewin and the
- * factor-1000 streaming certificate (`Probe --stream-cert`): the hourly
+ * factor-1000 streaming certificate (q_stream_filewin's `stream`): the hourly
  * exact-quantity profile computed through the file streaming source (real
  * multi-batch admission, cross-batch window state) must BIT-equal the
  * batch plan over the same files — the aggregates are exact integers

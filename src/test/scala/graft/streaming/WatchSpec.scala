@@ -143,6 +143,17 @@ class WatchSpec extends AnyFunSuite {
     assert(s2.nextOffset === 8L)
   }
 
+  test("session unregisters its log once the query has stopped") {
+    import graft.sources.OffsetLogRegistry
+    val log = new OffsetLog(0, 1000)
+    (0 until 3).foreach(i => log.write(bytes(i)))
+    // delivery is the timeout test's concern; this one pins ownership
+    Watch.session(spark, "w_session_owned", log,
+      startingOffset = Some(0L), maxDurationMs = 1000)
+    val e = intercept[IllegalArgumentException](OffsetLogRegistry.get("w_session_owned"))
+    assert(e.getMessage.contains("w_session_owned"))
+  }
+
   test("a replay batch fans out into bounded input partitions") {
     import graft.sources.{LogCursor, LogTail, LogTailMicroBatchStream, LogTailPartition, OffsetLogRegistry}
     // the factor-100 failure mode: one admitted batch (paced to N/2 rows)
