@@ -120,31 +120,43 @@ object Ann {
   def ivfFit(
       emb: DataFrame, c: Int, iters: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      fitSample: Int = 4096): Array[Array[Double]] = {
+      fitSample: Int = 4096): Array[Array[Double]] =
+    withTrainSample(emb, c, fitSample, idCol, vecCol)(ivfFitFromTrain(_, c, iters, idCol, vecCol))
+
+  /** Size of the training sample for a fit of `k` centroids: `fitSample`,
+    * raised to 32 points per centroid; 0 = train on everything. The sample
+    * must GROW with k (ADVICE r11): a flat 4096-row cap under SemDeDup's
+    * c ∝ n regime could land below c rows (binomial sampling) and the
+    * init would silently return fewer than c centroids — the model
+    * shrinks and nothing errors. 32 training points per centroid keeps the
+    * fit bounded (n/16 at c = n/512) while making a short sample
+    * statistically impossible; the require after the init fails loudly
+    * if it happens anyway. */
+  private def trainSize(fitSample: Int, k: Int): Long =
+    if (fitSample > 0) math.max(fitSample.toLong, 32L * k) else 0L
+
+  /** Runs `fit` over the persisted training sample of a fit of `k`
+    * centroids — the null-free rows hash-strided on the id down to about
+    * [[trainSize]] rows — and unpersists it after. */
+  private def withTrainSample[A](
+      emb: DataFrame, k: Int, fitSample: Int, idCol: String, vecCol: String)(
+      fit: DataFrame => A): A = {
     // null-safe init (ADVICE r12): NULL embeddings belong to no cluster —
     // semAssigned already excludes them from Lloyd iterations, so init and
     // the count that sizes the stride must see the same null-free frame
-    // (a NULL among the c lowest ids would NPE the init collect below).
-    val nonNull = emb.filter(col(vecCol).isNotNull)
-    val n = nonNull.count()
-    // the sample must GROW with c (ADVICE r11): a flat 4096-row cap under
-    // SemDeDup's c ∝ n regime could land below c rows (binomial sampling)
-    // and the init below would silently return fewer than c centroids —
-    // the model shrinks and nothing errors. 32 training points per
-    // centroid keeps the fit bounded (n/16 at c = n/512) while making a
-    // short sample statistically impossible; the require after the init
-    // fails loudly if it happens anyway.
-    val effSample = if (fitSample > 0) math.max(fitSample.toLong, 32L * c) else 0L
+    // (a NULL among the c lowest ids would NPE the init collect).
+    val nonNull   = emb.filter(col(vecCol).isNotNull)
+    val effSample = trainSize(fitSample, k)
     // stride 1 (effSample ≤ n < 2·effSample) would "sample" every row
     // through a useless predicate — treat it like the under-cap case. The
     // strided sample size is approximate (~binomial around effSample), not
     // an exact cut; quantizer fit only needs the order of magnitude.
-    val stride = if (effSample > 0) n / effSample else 0L
+    val stride = if (effSample > 0) nonNull.count() / effSample else 0L
     val train =
       (if (stride < 2) nonNull
        else nonNull.filter(pmod(xxhash64(col(idCol)), lit(stride)) === 0))
         .persist()
-    try ivfFitFromTrain(train, c, iters, idCol, vecCol)
+    try fit(train)
     finally train.unpersist(blocking = false)
   }
 
@@ -349,15 +361,7 @@ object Ann {
     // subspace fit sees byte-identical training data and the books are
     // bit-identical to the per-subspace-ivfFit formulation — AnnSpec's
     // determinism and driver-replay specs pin it).
-    val nonNull   = emb.filter(col(vecCol).isNotNull)
-    val n         = nonNull.count()
-    val effSample = if (fitSample > 0) math.max(fitSample.toLong, 32L * ksub) else 0L
-    val stride    = if (effSample > 0) n / effSample else 0L
-    val train =
-      (if (stride < 2) nonNull
-       else nonNull.filter(pmod(xxhash64(col(idCol)), lit(stride)) === 0))
-        .persist()
-    try {
+    withTrainSample(emb, ksub, fitSample, idCol, vecCol) { train =>
       // materialize the shared cache ONCE before fanning out, so the m
       // concurrent fits read computed blocks instead of racing the first
       // cache fill (block-level locking makes the race correct but
@@ -374,20 +378,15 @@ object Ann {
       // the driver calls them sequentially); results are assembled BY
       // INDEX and each fit's math is untouched, so the books are
       // bit-identical to the sequential formulation at any pool size.
-      parallelTabulate(m) { s =>
+      // (at most 8 concurrent: tiny driver-side jobs, where more adds
+      // scheduler contention, not throughput)
+      graft.Par.tabulate(m, maxPool = 8) { s =>
         ivfFitFromTrain(
           train.select(col(idCol), slice(col(vecCol), s * dsub + 1, dsub).as(vecCol)),
           c = ksub, iters = iters, idCol = idCol, vecCol = vecCol)
       }
-    } finally train.unpersist(blocking = false)
+    }
   }
-
-  /** `Array.tabulate(n)(f)` with the n independent bodies overlapped on a
-    * bounded thread pool — see [[graft.Par.tabulate]] (≤8 concurrent —
-    * tiny driver-side jobs; more adds scheduler contention, not
-    * throughput). Order-deterministic, sequential error contract. */
-  private def parallelTabulate[A: scala.reflect.ClassTag](n: Int)(f: Int => A): Array[A] =
-    graft.Par.tabulate(n, maxPool = 8)(f)
 
   /**
    * Fit the IVF coarse quantizer AND the PQ subspace codebooks from ONE
@@ -413,29 +412,22 @@ object Ann {
     val dim = firstVectorDim(emb, vecCol)
     require(dim % m == 0, s"PQ m=$m must divide the vector dim $dim")
     val dsub = dim / m
-    val effC = if (fitSample > 0) math.max(fitSample.toLong, 32L * c) else 0L
-    val effK = if (fitSample > 0) math.max(fitSample.toLong, 32L * ksub) else 0L
+    val effC = trainSize(fitSample, c)
+    val effK = trainSize(fitSample, ksub)
     require(effC == effK,
       s"ivfPqFit shares one sample across both fits, so their effective " +
         s"sample sizes must coincide (got $effC for c=$c vs $effK for " +
         s"ksub=$ksub); raise fitSample above 32*max(c, ksub) or fit separately")
-    val nonNull = emb.filter(col(vecCol).isNotNull)
-    val n       = nonNull.count()
-    val stride  = if (effC > 0) n / effC else 0L
-    val train =
-      (if (stride < 2) nonNull
-       else nonNull.filter(pmod(xxhash64(col(idCol)), lit(stride)) === 0))
-        .persist()
-    try {
+    withTrainSample(emb, c, fitSample, idCol, vecCol) { train =>
       train.count() // materialize once before the fan-out (pqFit's rule)
-      val all = parallelTabulate(m + 1) { i =>
+      val all = graft.Par.tabulate(m + 1, maxPool = 8) { i =>
         if (i == 0) ivfFitFromTrain(train, c, iters, idCol, vecCol)
         else ivfFitFromTrain(
           train.select(col(idCol), slice(col(vecCol), (i - 1) * dsub + 1, dsub).as(vecCol)),
           c = ksub, iters = iters, idCol = idCol, vecCol = vecCol)
       }
       (all(0), all.drop(1))
-    } finally train.unpersist(blocking = false)
+    }
   }
 
   /** Dimensionality of the first non-null vector (pushed-limit 1-row scan). */

@@ -4,7 +4,7 @@ import java.util
 import java.util.concurrent.ConcurrentHashMap
 
 import graft.operators.EventLog.OutOfRange
-import graft.streaming.OffsetLog
+import graft.streaming.{Ingest, OffsetLog}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -32,9 +32,10 @@ import org.apache.spark.unsafe.types.UTF8String
  *    of the reference's reconnect-with-offset pattern).
  *
  * Records are (offset, value) with value = the stored CloudEvent bytes —
- * the same line-framed payload EP1 writes to the wire. Logs are addressed
- * through [[OffsetLogRegistry]] (in-process serving construct, like the
- * log itself).
+ * the same line-framed payload EP1 writes to the wire, decoded by
+ * [[graft.streaming.Ingest.exactUtf8]] as in the sink table. Logs are
+ * addressed through [[OffsetLogRegistry]] (in-process serving construct,
+ * like the log itself).
  */
 object OffsetLogRegistry {
   private val logs = new ConcurrentHashMap[String, OffsetLog]()
@@ -120,7 +121,7 @@ class LogTailMicroBatchStream(
   // most recently planned batch (a completed batch is never re-run within
   // the query); stop drains the rest.
   private val shipped =
-    new java.util.ArrayDeque[org.apache.spark.broadcast.Broadcast[Array[(Long, String)]]]()
+    new java.util.ArrayDeque[org.apache.spark.broadcast.Broadcast[LogTailRecords]]()
 
   override def deserializeOffset(json: String): Offset = LogCursor(json.toLong)
   override def commit(end: Offset): Unit = synchronized {
@@ -153,14 +154,16 @@ class LogTailMicroBatchStream(
     val e = end.asInstanceOf[LogCursor].next
     if (e <= s) Array.empty
     else {
-      // snapshot the records driver-side (the log is an in-process serving
-      // structure; a purged offset inside the window is skipped, mirroring
-      // the page scan's skip semantics server.go:236-238), then ship the
-      // batch via TorrentBroadcast — the partition descriptor stays tiny
-      // instead of dragging up-to-maxBatchSize records through task
-      // serialization (~4 MiB/task warnings at sf0.1)
-      val rows = (s until e).flatMap(o => log.read(o).toOption.map(b => (o, new String(b, "UTF-8"))))
-      val bc = org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(rows.toArray)
+      // the window's retained records from one view of the log (a purged
+      // start is skipped, as the page scan skips it, server.go:236-238):
+      // their stored bytes plus the first offset ship via TorrentBroadcast
+      // — the partition descriptor stays tiny instead of dragging
+      // up-to-maxBatchSize records through task serialization (~4 MiB/task
+      // warnings at sf0.1), and nothing is decoded driver-side
+      val window = log.view.from(s)
+      val bytes  = Array.tabulate(math.min(window.length.toLong, e - window.first).toInt)(window.bytes)
+      val bc = org.apache.spark.sql.SparkSession.active.sparkContext
+        .broadcast(LogTailRecords(window.first, bytes))
       synchronized { shipped.addLast(bc) }
       // split the batch into bounded index slices over the ONE broadcast:
       // a single partition serializes the whole admitted batch through one
@@ -169,7 +172,7 @@ class LogTailMicroBatchStream(
       // of parallelism. Slice count scales with the batch, not with
       // cluster size — small live batches stay one task, big replay
       // batches fan out.
-      val n = rows.length
+      val n = bytes.length
       (0 until n by LogTail.SliceRows)
         .map(from => LogTailPartition(bc, from, math.min(n, from + LogTail.SliceRows)): InputPartition)
         .toArray
@@ -178,24 +181,25 @@ class LogTailMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-      val p     = partition.asInstanceOf[LogTailPartition]
-      val slice = p.rows.value
+      val p    = partition.asInstanceOf[LogTailPartition]
+      val recs = p.rows.value
       new PartitionReader[InternalRow] {
         private var i = p.from - 1
         override def next(): Boolean = { i += 1; i < p.until }
-        override def get(): InternalRow = {
-          val (o, v) = slice(i)
-          new GenericInternalRow(Array[Any](o, UTF8String.fromString(v)))
-        }
+        override def get(): InternalRow = new GenericInternalRow(Array[Any](
+          recs.first + i, UTF8String.fromBytes(Ingest.exactUtf8(recs.bytes(i)))))
         override def close(): Unit = ()
       }
     }
   }
 }
 
+/** One planned batch: the stored bytes of the dense offsets from `first`. */
+final case class LogTailRecords(first: Long, bytes: Array[Array[Byte]])
+
 /** An index slice `[from, until)` into the batch's shared broadcast. */
 case class LogTailPartition(
-    rows: org.apache.spark.broadcast.Broadcast[Array[(Long, String)]],
+    rows: org.apache.spark.broadcast.Broadcast[LogTailRecords],
     from: Int,
     until: Int
 ) extends InputPartition

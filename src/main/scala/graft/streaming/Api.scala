@@ -55,15 +55,12 @@ object Api {
     }
 
   /** O9 — `readEvents` (`server.go:211-267`): the last ≤pageSize records in
-    * ascending offset order; purged offsets inside the window are skipped
-    * (`server.go:236-238`); empty log → 204. */
+    * ascending offset order; empty log → 204. */
   def getEvents(log: OffsetLog): Response[Seq[(Long, Array[Byte])]] = {
-    val r = log.range
+    val v = log.view
+    val r = v.range
     if (r.isEmpty) NoContent
-    else {
-      val start = EventLog.getStart(r.earliest, r.latest, PageSize)
-      Ok((start to r.latest).flatMap(o => log.read(o).toOption.map(o -> _)))
-    }
+    else Ok(v.from(EventLog.getStart(r.earliest, r.latest, PageSize)))
   }
 
   /**

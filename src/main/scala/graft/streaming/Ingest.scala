@@ -172,10 +172,10 @@ object Ingest {
     * serialized task binary (the ~4 MiB `DAGScheduler` broadcast warnings
     * at sf0.1), re-shipped per stage instead of once per executor. */
   def logFrame(spark: SparkSession, log: OffsetLog): DataFrame = {
-    val snap  = log.snapshot
-    val first = snap.headOption.fold(0L)(_._1)
+    val all   = log.view.from(Long.MinValue)
+    val first = all.first
     import spark.implicits._
-    val bytes = scala.collection.immutable.ArraySeq.unsafeWrapArray(snap.iterator.map(_._2).toArray)
+    val bytes = scala.collection.immutable.ArraySeq.unsafeWrapArray(Array.tabulate(all.length)(all.bytes))
     broadcastSlices(spark, bytes)((i, b) => (first + i, exactUtf8(b)))
       .toDF("offset", "value")
       .select(col("offset"), col("value").cast(StringType).as("value"))
@@ -183,8 +183,9 @@ object Ingest {
 
   /** `b` when it is valid UTF-8, else the UTF-8 encoding of
     * `new String(b, UTF_8)` — so a string cast of the result reads exactly
-    * what the JDK decodes, malformed input replaced, record by record. */
-  private def exactUtf8(b: Array[Byte]): Array[Byte] =
+    * what the JDK decodes, malformed input replaced, record by record —
+    * the one decode of stored bytes, shared by [[logFrame]] and LogTail. */
+  def exactUtf8(b: Array[Byte]): Array[Byte] =
     if (UTF8String.fromBytes(b).isValid) b else new String(b, UTF_8).getBytes(UTF_8)
 
   /** Driver-resident (offset, value) records as a DISTRIBUTED frame (see

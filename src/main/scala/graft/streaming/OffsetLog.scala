@@ -18,7 +18,13 @@ import graft.operators.EventLog.{FutureOffset, LogRange, OutOfRange, ReadError}
  * analytics path never materializes this structure; it exists to reproduce
  * the reference's query/API semantics (point read, page, watch, range).
  *
- * Thread-safe: one writer (the streaming query's foreachBatch), many readers.
+ * Publication contract: one writer, immutable views, readers without
+ * locks. Each `write` (serialised against other writers) publishes a new
+ * immutable [[LogView]] through one `@volatile` field; every read takes
+ * that view once and answers from it alone, so a reader never waits on
+ * the writer or on another reader, and never sees a torn range, page or
+ * suffix. A caller that needs several answers from one state (a page's
+ * range and records) takes [[view]] once itself.
  */
 final class OffsetLog(
     val startOffset: Long = 0L,
@@ -31,78 +37,96 @@ final class OffsetLog(
   sealed trait WriteError
   case object RecordTooLarge extends WriteError
 
-  // history segment (purged first) and active segment; offsets are dense so
-  // a segment is fully described by its first offset + records vector
-  private var historyStart: Long                = -1L
-  private var history: Vector[Array[Byte]]      = Vector.empty
-  private var activeStart: Long                 = startOffset
-  private var active: Vector[Array[Byte]]       = Vector.empty
-  private var next: Long                        = startOffset
+  @volatile private var current = LogView(-1L, Vector.empty, startOffset, Vector.empty)
+
+  /** The log's current state; later writes publish new views, never change this one. */
+  def view: LogView = current
 
   /** Append; returns the record's permanent offset (dense, monotonic). */
   def write(record: Array[Byte]): Either[WriteError, Long] = synchronized {
     if (record.length > maxRecordBytes) Left(RecordTooLarge)
     else {
-      if (active.size == maxSegmentSize) {
-        // active full: purge history, roll active → history (README.md:177-184)
-        historyStart = activeStart
-        history = active
-        activeStart = next
-        active = Vector.empty
-      }
-      val offset = next
-      active = active :+ record
-      next += 1
+      val v      = current
+      val offset = v.next
+      // active full: purge history, roll active → history (README.md:177-184)
+      current =
+        if (v.active.size == maxSegmentSize) LogView(v.activeStart, v.active, offset, Vector(record))
+        else v.copy(active = v.active :+ record)
       Right(offset)
     }
   }
 
-  /** `{earliest, latest}`; empty log = (-1, -1) (`server.go:305-327`). */
-  def range: LogRange = synchronized {
-    if (active.isEmpty && history.isEmpty) LogRange(-1, -1)
-    else {
-      val earliest = if (history.nonEmpty) historyStart else activeStart
-      LogRange(earliest, next - 1)
-    }
-  }
-
-  /** O(1) point read (`server.go:269-302` error mapping). */
-  def read(offset: Long): Either[ReadError, Array[Byte]] = synchronized {
-    val r = range
-    if (r.isEmpty) Left(if (offset >= next) FutureOffset else OutOfRange)
-    else if (offset < r.earliest) Left(OutOfRange)
-    else if (offset > r.latest) Left(FutureOffset)
-    else if (offset >= activeStart) Right(active((offset - activeStart).toInt))
-    else Right(history((offset - historyStart).toInt))
-  }
-
-  /**
-   * O10 watch / subscribe (`server.go:130-209`): snapshot of records from
-   * `start` (param offset; default `latest+1` = only-new-events,
-   * `server.go:161-166`). A purged start is an error
-   * (`server_test.go:350-359`); a future start returns an empty snapshot
-   * (the live server would wait — `server_test.go:328-337`).
-   */
+  def range: LogRange                                    = current.range
+  def read(offset: Long): Either[ReadError, Array[Byte]] = current.read(offset)
   def watch(startParam: Option[Long] = None): Either[ReadError, Seq[(Long, Array[Byte])]] =
-    synchronized {
-      val r     = range
-      val start = startParam.getOrElse(r.latest + 1)
-      // negative offsets are out of range on ANY log state — without the
-      // start < 0 arm an EMPTY log skips the purged-start guard and the
-      // snapshot loop would read(-1).toOption.get → NoSuchElementException
-      // (a 500 where the reference 400s)
-      if (start < 0 || (!r.isEmpty && start < r.earliest)) Left(OutOfRange)
-      else Right(
-        (math.max(start, r.earliest) to r.latest)
-          .map(o => o -> read(o).toOption.get))
-    }
+    current.watch(startParam)
 
   /** All retained records in offset order (the queryable sink table). */
-  def snapshot: Seq[(Long, Array[Byte])] = synchronized {
-    val r = range
-    if (r.isEmpty) Seq.empty
-    else (r.earliest to r.latest).map(o => o -> read(o).toOption.get)
-  }
+  def snapshot: Seq[(Long, Array[Byte])] = current.from(Long.MinValue)
 
-  def size: Int = synchronized(history.size + active.size)
+  def size: Int = current.size
+}
+
+/**
+ * One immutable state of an [[OffsetLog]]: the history segment (purged
+ * first) and the active segment. Offsets are dense, so a segment is fully
+ * described by its first offset and its records; an empty history has no
+ * records, and an empty active segment means an empty log.
+ */
+final case class LogView(
+    historyStart: Long,
+    history: Vector[Array[Byte]],
+    activeStart: Long,
+    active: Vector[Array[Byte]]
+) {
+  /** The offset the next write gets. */
+  def next: Long        = activeStart + active.size
+  private def earliest  = if (history.nonEmpty) historyStart else activeStart
+  def size: Int         = history.size + active.size
+
+  /** `{earliest, latest}`; empty log = (-1, -1) (`server.go:305-327`). */
+  def range: LogRange = if (active.isEmpty) LogRange(-1, -1) else LogRange(earliest, next - 1)
+
+  /** O(1) point read (`server.go:269-302` error mapping). */
+  def read(offset: Long): Either[ReadError, Array[Byte]] =
+    if (offset >= next) Left(FutureOffset)
+    else if (offset < earliest) Left(OutOfRange)
+    else Right(record(offset))
+
+  private def record(offset: Long): Array[Byte] =
+    if (offset >= activeStart) active((offset - activeStart).toInt)
+    else history((offset - historyStart).toInt)
+
+  /** The retained records from `offset` (clamped to the retained range) to
+    * the latest, as an indexed view over the segments: nothing is copied. */
+  def from(offset: Long): LogView.Suffix =
+    new LogView.Suffix(this, math.min(math.max(offset, earliest), next))
+
+  /**
+   * O10 watch / subscribe (`server.go:130-209`): the records from `start`
+   * (param offset; default `latest+1` = only-new-events,
+   * `server.go:161-166`). A purged or negative start is an error
+   * (`server_test.go:350-359`; the reference 400s a negative offset on any
+   * log state); a future start returns an empty suffix (the live server
+   * would wait — `server_test.go:328-337`).
+   */
+  def watch(startParam: Option[Long]): Either[ReadError, LogView.Suffix] = {
+    val start = startParam.getOrElse(next)
+    if (start < 0 || (active.nonEmpty && start < earliest)) Left(OutOfRange)
+    else Right(from(start))
+  }
+}
+
+object LogView {
+
+  /** `(first + i, record)` for the `length` records from offset `first`. */
+  final class Suffix private[LogView] (view: LogView, val first: Long)
+      extends scala.collection.immutable.AbstractSeq[(Long, Array[Byte])]
+      with scala.collection.immutable.IndexedSeq[(Long, Array[Byte])] {
+    val length: Int = (view.next - first).toInt
+    def bytes(i: Int): Array[Byte] =
+      if (i >= 0 && i < length) view.record(first + i)
+      else throw new IndexOutOfBoundsException(s"$i is not in [0, $length)")
+    def apply(i: Int): (Long, Array[Byte]) = (first + i, bytes(i))
+  }
 }

@@ -61,8 +61,7 @@ object Watch {
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
         .option("checkpointLocation", Ingest.ephemeralCheckpoint(s"graft-watch-session-$name"))
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.orderBy("offset").collect()
-            .foreach(r => buf.add((r.getLong(0), r.getString(1))))
+          batch.collect().foreach(r => buf.add((r.getLong(0), r.getString(1))))
           ()
         }
         .start()

@@ -30,6 +30,13 @@ import org.apache.spark.sql.types.TimestampNTZType
  *    the corpus contract [[graft.queries.SimHashOracle]] replays — so
  *    scaled dirs are ORACLE-ELIGIBLE: the full DuckDB compare can run
  *    against them (the sf1 sweep artifact), not just the bench;
+ *  - `embeddings.embedding` is sign-flipped per copy: copy i > 0
+ *    multiplies coordinate j by ±1, the sign drawn from a hash of (i, j).
+ *    Negation is exact in floating point and the sign pattern is the same
+ *    for every vector of a copy, so norms and cosines within a copy stay
+ *    bit-equal to the source's, while cosines across copies fall to ~0 —
+ *    vector dedup (q_embdup/q_semdedup) scales like independent corpora
+ *    instead of finding `factor` exact clones of every vector;
  *  - dimension tables (region/nation/supplier/part) stay fixed, like the
  *    broadcast side of a real warehouse at any SF; lineitem keeps its
  *    part/supp keys so dim joins stay valid;
@@ -196,7 +203,10 @@ object ScaleUp {
     val embeddings = spark.read.parquet(s"$src/embeddings.parquet")
     requireBelow(embeddings, "vec_id", BigStep)
     write(copies(factor) { i =>
-      embeddings.withColumn("vec_id", col("vec_id") + lit(i * BigStep))
+      val shifted = embeddings.withColumn("vec_id", col("vec_id") + lit(i * BigStep))
+      if (i == 0) shifted
+      else shifted.withColumn("embedding", transform(col("embedding"),
+        (x, j) => when(pmod(xxhash64(lit(i), j), lit(2)) === 0, x).otherwise(-x)))
     }, "embeddings", 8)
 
     println(s"""{"scaleup":"done","src":"$src","dest":"$dest","factor":$factor}""")

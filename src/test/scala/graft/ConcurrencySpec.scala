@@ -5,6 +5,7 @@ import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
+import graft.streaming.Api
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -62,15 +63,42 @@ class ConcurrencySpec extends AnyFunSuite {
             if (snap.nonEmpty && snap != (snap.head to snap.last)) {
               failures.add(s"snapshot offsets not dense: ${snap.take(5)}...")
             }
+            // a page or a watch suffix from the observed earliest offset,
+            // racing purges: dense, from a retained start, ending at or
+            // after the latest seen before the call and at or before the
+            // latest seen after it; a 400 only once that start was purged
+            def suffix(what: String, seq: Seq[(Long, Array[Byte])]): Unit = {
+              val after = log.range
+              val offs  = seq.map(_._1)
+              val ok = offs.nonEmpty && offs == (offs.head to offs.last) &&
+                offs.last >= r.latest && offs.last <= after.latest &&
+                seq.forall { case (o, b) => new String(b, "UTF-8") == o.toString }
+              if (!ok) failures.add(s"$what ${offs.headOption}..${offs.lastOption} around $r..$after")
+            }
+            Api.getEvents(log) match {
+              case Api.Ok(page) =>
+                suffix("page", page)
+                if (page.size > Api.PageSize) failures.add(s"page of ${page.size} records")
+              case other => failures.add(s"page status ${other.status} on a non-empty log")
+            }
+            Api.watch(log, "true", Some(r.earliest.toString)) match {
+              case Api.Ok(recs) =>
+                suffix("watch", recs)
+                if (recs.headOption.exists(_._1 != r.earliest))
+                  failures.add(s"watch from ${r.earliest} began at ${recs.head._1}")
+              case Api.BadRequest(_) if log.range.earliest > r.earliest => ()
+              case other => failures.add(s"watch(${r.earliest}) status ${other.status} around $r")
+            }
           }
         }
       })
     }
     readers.foreach(_.start())
-    (0 until 2000).foreach(i => log.write(i.toString.getBytes("UTF-8")))
+    // enough writes for dozens of purges while the readers run
+    (0 until 20000).foreach(i => log.write(i.toString.getBytes("UTF-8")))
     stop.set(true)
     readers.foreach(_.join())
     assert(failures.isEmpty, s"invariant violations: ${failures.toArray.take(3).mkString("; ")}")
-    assert(log.range.latest === 1999L)
+    assert(log.range.latest === 19999L)
   }
 }

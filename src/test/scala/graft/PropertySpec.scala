@@ -4,6 +4,7 @@ import graft.operators.EventLog
 import graft.operators.EventLog.{EmptyLog, FutureOffset, LogRange, OutOfRange}
 import graft.streaming.OffsetLog
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.commands.Commands
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -122,6 +123,10 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("OffsetLog + Api agree with a List model over random command sequences") {
+    check("logModel", LogModel.property())
+  }
+
   test("editdist pigeonhole pre-filter is lossless: dist<=5 pairs always pass") {
     // mirrors q_editdist's candidate cut (DedupQueries): pa split into 6
     // contiguous chunks — <=5 edits leave >=1 chunk untouched, which must
@@ -234,5 +239,135 @@ class PropertySpec extends AnyFunSuite {
       ZOrder.interleave(x | (noise << 21), y) == ZOrder.interleave(x, y) &&
         ZOrder.interleave(x, y | (noise << 21)) == ZOrder.interleave(x, y)
     })
+  }
+}
+
+/**
+ * The offset log and its API handlers against a `List` of every record
+ * written: random write / oversize write / read / range / page / watch /
+ * snapshot sequences under 1–40-record segments, each response compared
+ * with what the model says the retained records are.
+ */
+object LogModel extends Commands {
+  import graft.streaming.Api
+
+  /** Records here are at most this long; longer ones are the oversize case. */
+  val MaxBytes = 8
+
+  /** The log's first offset, its segment size, and every record written. */
+  final case class State(start: Long, seg: Int, written: List[Array[Byte]]) {
+    def next: Long = start + written.size
+    // the active segment holds the last partial-or-full segment, the
+    // history the one before it
+    def earliest: Long =
+      if (written.isEmpty) start else start + math.max(0, (written.size - 1) / seg - 1) * seg
+    def retained: List[(Long, Seq[Byte])] =
+      written.zipWithIndex.map { case (b, i) => (start + i, b.toSeq) }.filter(_._1 >= earliest)
+  }
+  type Sut = OffsetLog
+
+  def canCreateNewSut(newState: State, initSuts: Iterable[State], runningSuts: Iterable[Sut]) = true
+  def newSut(state: State): Sut = new OffsetLog(state.start, state.seg, MaxBytes.toLong)
+  def destroySut(sut: Sut): Unit = ()
+  def initialPreCondition(state: State): Boolean = state.written.isEmpty
+  def genInitialState: Gen[State] =
+    for (start <- Gen.chooseNum(0L, 100L); seg <- Gen.chooseNum(1, 40)) yield State(start, seg, Nil)
+
+  def genCommand(state: State): Gen[Command] = {
+    val offset = Gen.chooseNum(state.earliest - 3, state.next + 3)
+    Gen.frequency(
+      // the record's own index up front, so a record read at a wrong offset shows
+      8 -> Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue))
+        .map(rnd => Write((state.written.size.toString.getBytes("UTF-8") ++ rnd).take(MaxBytes))),
+      1 -> Gen.chooseNum(MaxBytes + 1, 3 * MaxBytes).map(n => WriteOversize(Array.fill(n)(1.toByte))),
+      2 -> offset.map(Read(_)),
+      1 -> Gen.const(Range),
+      1 -> Gen.const(GetEvents),
+      2 -> Gen.option(offset).map(Watch(_)),
+      1 -> Gen.const(Snapshot))
+  }
+
+  private def records(seq: Seq[(Long, Array[Byte])]): List[(Long, Seq[Byte])] =
+    seq.map { case (o, b) => (o, b.toSeq) }.toList
+
+  final case class Write(record: Array[Byte]) extends SuccessCommand {
+    type Result = Either[Any, Long]
+    def run(sut: Sut): Result = sut.write(record)
+    def nextState(state: State): State = state.copy(written = state.written :+ record)
+    def preCondition(state: State): Boolean = true
+    def postCondition(state: State, result: Result): Prop = result == Right(state.next)
+  }
+
+  final case class WriteOversize(record: Array[Byte]) extends SuccessCommand {
+    type Result = Boolean
+    def run(sut: Sut): Result = sut.write(record) == Left(sut.RecordTooLarge)
+    def nextState(state: State): State = state
+    def preCondition(state: State): Boolean = true
+    def postCondition(state: State, result: Result): Prop = result
+  }
+
+  final case class Read(offset: Long) extends SuccessCommand {
+    type Result = Either[EventLog.ReadError, Seq[Byte]]
+    def run(sut: Sut): Result = sut.read(offset).map(_.toSeq)
+    def nextState(state: State): State = state
+    def preCondition(state: State): Boolean = true
+    def postCondition(state: State, result: Result): Prop =
+      result == (if (offset >= state.next) Left(FutureOffset)
+                 else if (offset < state.earliest) Left(OutOfRange)
+                 else Right(state.retained.find(_._1 == offset).get._2))
+  }
+
+  case object Range extends SuccessCommand {
+    type Result = (LogRange, Int, Option[LogRange])
+    def run(sut: Sut): Result = (sut.range, sut.size, Api.range(sut) match {
+      case Api.Ok(r) => Some(r)
+      case _         => None
+    })
+    def nextState(state: State): State = state
+    def preCondition(state: State): Boolean = true
+    def postCondition(state: State, result: Result): Prop = {
+      val r = if (state.written.isEmpty) LogRange(-1, -1) else LogRange(state.earliest, state.next - 1)
+      result == ((r, state.retained.size, if (r.isEmpty) None else Some(r)))
+    }
+  }
+
+  case object GetEvents extends SuccessCommand {
+    type Result = Option[List[(Long, Seq[Byte])]]
+    def run(sut: Sut): Result = Api.getEvents(sut) match {
+      case Api.Ok(page: IndexedSeq[(Long, Array[Byte])] @unchecked) => Some(records(page))
+      case Api.NoContent                                            => None
+      case _                                                        => Some(Nil) // never a model answer
+    }
+    def nextState(state: State): State = state
+    def preCondition(state: State): Boolean = true
+    def postCondition(state: State, result: Result): Prop =
+      result == (if (state.written.isEmpty) None else Some(state.retained.takeRight(Api.PageSize)))
+  }
+
+  final case class Watch(offset: Option[Long]) extends SuccessCommand {
+    type Result = Either[Int, List[(Long, Seq[Byte])]]
+    def run(sut: Sut): Result = Api.watch(sut, "true", offset.map(_.toString)) match {
+      case Api.Ok(seq: IndexedSeq[(Long, Array[Byte])] @unchecked) => Right(records(seq))
+      case other                                                  => Left(other.status)
+    }
+    def nextState(state: State): State = state
+    def preCondition(state: State): Boolean = true
+    def postCondition(state: State, result: Result): Prop = {
+      val start = offset.getOrElse(state.next)
+      result == (if (start < 0 || (state.written.nonEmpty && start < state.earliest)) Left(400)
+                 else Right(state.retained.filter(_._1 >= start)))
+    }
+  }
+
+  case object Snapshot extends SuccessCommand {
+    type Result = (List[(Long, Seq[Byte])], Option[List[(Long, Seq[Byte])]])
+    def run(sut: Sut): Result = (records(sut.snapshot), sut.watch(Some(0L)).toOption.map(records))
+    def nextState(state: State): State = state
+    def preCondition(state: State): Boolean = true
+    def postCondition(state: State, result: Result): Prop = {
+      // watch from 0: the whole retained log, or a 400 once 0 is below the earliest offset
+      val fromZero = if (state.written.nonEmpty && state.earliest > 0) None else Some(state.retained)
+      result == ((state.retained, fromZero))
+    }
   }
 }

@@ -72,6 +72,24 @@ class WatchSpec extends AnyFunSuite {
     assert(values("w_partial_t") === Seq("10", "11", "12", "13", "14"))
   }
 
+  test("a record of malformed UTF-8 reads as the JDK decodes it") {
+    // the tail decodes stored bytes like the sink table does: a malformed
+    // record comes out as new String(b, UTF_8), replacement chars included
+    val recs = Seq(
+      Array(0x61, 0x80, 0x62),       // lone continuation byte
+      Array(0xe2, 0x82),             // truncated 3-byte sequence
+      Array(0xc0, 0xaf),             // overlong '/'
+      Array(0xed, 0xa0, 0x80),       // encoded surrogate
+      Array(0xff, 0x7b, 0x7d),       // never-valid lead byte
+      Array(0xe2, 0x82, 0xac)        // valid '€', for contrast
+    ).map(_.map(_.toByte))
+    val log = new OffsetLog(0, 100)
+    recs.foreach(log.write)
+    drain(Watch.tail(spark, "w_malformed", log, startingOffset = Some(0L)),
+      "w_malformed_t", Ingest.ephemeralCheckpoint("graft-watch-malformed"))
+    assert(values("w_malformed_t") === recs.map(new String(_, java.nio.charset.StandardCharsets.UTF_8)))
+  }
+
   test("graceful stop mid-stream, then checkpointed resume loses nothing (O14)") {
     val log = new OffsetLog(0, 1000)
     (0 until 5).foreach(i => log.write(bytes(i)))
