@@ -47,6 +47,11 @@ object ScratchDirs {
   /** A fresh directory under the self-cleaning (tmpfs) checkpoint root. */
   def checkpoint(prefix: String): String = checkpoints.dir(prefix)
 
+  private[graft] def checkpointRoot: Path = checkpoints.path
+
+  /** Delete `dir` and everything under it now, not at exit. */
+  private[graft] def delete(dir: String): Unit = deleteRecursively(Paths.get(dir))
+
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Memoized scratch DATASET: `build` runs once per `key` per JVM and the

@@ -1,13 +1,13 @@
 package graft.queries
 
 
-import graft.streaming.Ingest
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.{Ingest, StreamRun}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, MapState,
-  OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+  OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /**
  * Second-round stateful streaming surface (SURVEY §2.2 rows "streaming
@@ -22,23 +22,6 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
  * younger than the watermark. Nothing here collects to the driver.
  */
 object StatefulStreamingQueries {
-
-  private val runId = StreamRun.runId
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A =
-    StreamRun.withStatePartitions(spark, n)(f)
-
-  /** transformWithState requires the RocksDB state-store provider — set for
-    * the body, restore (or unset) after. */
-  def withRocksDBProvider[A](spark: SparkSession)(f: => A): A = {
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   /** Per-user running state for the fmgs query (custom state ≠ any built-in
     * aggregate: carries an update `version` so the final state per key is
@@ -68,21 +51,10 @@ object StatefulStreamingQueries {
           |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_session_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 4) {
-        val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("complete")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-session-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      StreamRun.detached(spark.table(table))
+      val sessions = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n"))
+      StreamRun.detached(StreamRun.drain(sessions, "complete", statePartitions = 4))
         .select(col("user_id"), col("session_window.start").as("session_start"), col("n"))
         .orderBy("user_id", "session_start")
     },
@@ -117,23 +89,12 @@ object StatefulStreamingQueries {
           |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_session_dyn_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 4) {
-        val gap = when(col("event_type") === "error", lit("10 minutes"))
-          .otherwise(lit("30 minutes"))
-        val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-          .groupBy(session_window(col("ts"), gap), col("user_id"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("complete")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-session-dyn-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      StreamRun.detached(spark.table(table))
+      val gap = when(col("event_type") === "error", lit("10 minutes"))
+        .otherwise(lit("30 minutes"))
+      val sessions = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+        .groupBy(session_window(col("ts"), gap), col("user_id"))
+        .agg(count(lit(1)).as("n"))
+      StreamRun.detached(StreamRun.drain(sessions, "complete", statePartitions = 4))
         .select(col("user_id"), col("session_window.start").as("session_start"), col("n"))
         .orderBy("user_id", "session_start")
     },
@@ -173,22 +134,11 @@ object StatefulStreamingQueries {
           |ORDER BY user_id, session_start""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_session_append_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 4) {
-        val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-          .withWatermark("ts", "1 second")
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("append")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-session-app-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      StreamRun.detached(spark.table(table))
+      val sessions = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+        .withWatermark("ts", "1 second")
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n"))
+      StreamRun.detached(StreamRun.drain(sessions, statePartitions = 4))
         .select(col("user_id"), col("session_window.start").as("session_start"), col("n"))
         .orderBy("user_id", "session_start")
     },
@@ -206,36 +156,25 @@ object StatefulStreamingQueries {
       )
     ) { (spark, dir) =>
       import spark.implicits._
-      val table = s"graft_stream_state_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 8) {
-        val updates = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-          .select("user_id", "event_id", "value")
-          .as[(Long, Long, Double)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState[UserState, UserUpdate](
-            OutputMode.Update, GroupStateTimeout.NoTimeout) {
-            (user: Long, rows: Iterator[(Long, Long, Double)], state: GroupState[UserState]) =>
-              val prev = state.getOption.getOrElse(UserState(0L, 0L, 0.0, Double.MinValue, Long.MinValue))
-              var n = prev.n; var total = prev.total; var mx = prev.mx; var lastId = prev.lastId
-              rows.foreach { case (_, id, v) =>
-                n += 1; total += v; mx = math.max(mx, v); lastId = math.max(lastId, id)
-              }
-              val next = UserState(prev.version + 1, n, total, mx, lastId)
-              state.update(next)
-              Iterator.single(UserUpdate(user, next.version, n, total, mx, lastId))
-          }
-        val q = updates.writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("update")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-fmgs-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
+      val updates = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+        .select("user_id", "event_id", "value")
+        .as[(Long, Long, Double)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[UserState, UserUpdate](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (user: Long, rows: Iterator[(Long, Long, Double)], state: GroupState[UserState]) =>
+            val prev = state.getOption.getOrElse(UserState(0L, 0L, 0.0, Double.MinValue, Long.MinValue))
+            var n = prev.n; var total = prev.total; var mx = prev.mx; var lastId = prev.lastId
+            rows.foreach { case (_, id, v) =>
+              n += 1; total += v; mx = math.max(mx, v); lastId = math.max(lastId, id)
+            }
+            val next = UserState(prev.version + 1, n, total, mx, lastId)
+            state.update(next)
+            Iterator.single(UserUpdate(user, next.version, n, total, mx, lastId))
+        }
       // final state per key = the highest-version update row
       val w = Window.partitionBy("user_id").orderBy(col("version").desc)
-      StreamRun.detached(spark.table(table))
+      StreamRun.detached(StreamRun.drain(updates.toDF(), "update"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
         .select(
@@ -259,40 +198,28 @@ object StatefulStreamingQueries {
           |ORDER BY error_id, purchase_id""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_join_${runId.incrementAndGet()}"
+      // stream SELF-join: both sides derive from one feed, so the source
+      // cursor/offset tracking is shared (two independent sources would
+      // coordinate two replays per micro-batch for the same data)
+      val feed = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+      val errors = feed
+        .where(col("event_type") === "error")
+        .select(col("event_id").as("error_id"), col("user_id").as("eu"), col("ts").as("ets"))
+        .withWatermark("ets", "1 hour")
+      val purchases = feed
+        .where(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id").as("pu"), col("ts").as("pts"))
+        .withWatermark("pts", "1 hour")
+      val pairs = errors.join(purchases,
+          col("eu") === col("pu") &&
+            col("pts") >= col("ets") &&
+            col("pts") < col("ets") + expr("INTERVAL 10 MINUTE"))
+        .select("error_id", "purchase_id")
       // INNER join: rows emit only while a data batch processes a matching
       // pair; the trailing no-data batch would only evict state the stream
-      // stop discards — suppress it (StreamRun.withoutNoDataBatches)
-      StreamRun.withoutNoDataBatches(spark) {
-      withStatePartitions(spark, 4) {
-        // stream SELF-join: both sides derive from one feed, so the source
-        // cursor/offset tracking is shared (two independent sources would
-        // coordinate two replays per micro-batch for the same data)
-        val feed = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-        val errors = feed
-          .where(col("event_type") === "error")
-          .select(col("event_id").as("error_id"), col("user_id").as("eu"), col("ts").as("ets"))
-          .withWatermark("ets", "1 hour")
-        val purchases = feed
-          .where(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id").as("pu"), col("ts").as("pts"))
-          .withWatermark("pts", "1 hour")
-        val q = errors.join(purchases,
-            col("eu") === col("pu") &&
-              col("pts") >= col("ets") &&
-              col("pts") < col("ets") + expr("INTERVAL 10 MINUTE"))
-          .select("error_id", "purchase_id")
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("append")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-ssjoin-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      }
-      spark.table(table).orderBy("error_id", "purchase_id")
+      // stop discards — suppress it
+      StreamRun.drain(pairs, statePartitions = 4, noDataBatches = false)
+        .orderBy("error_id", "purchase_id")
     },
 
     // stream-stream LEFT OUTER interval join: matches emit on arrival;
@@ -321,33 +248,22 @@ object StatefulStreamingQueries {
           |ORDER BY error_id, purchase_id""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_outer_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 4) {
-        val feed = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-        val errors = feed
-          .where(col("event_type") === "error")
-          .select(col("event_id").as("error_id"), col("user_id").as("eu"), col("ts").as("ets"))
-          .withWatermark("ets", "1 second")
-        val purchases = feed
-          .where(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id").as("pu"), col("ts").as("pts"))
-          .withWatermark("pts", "1 second")
-        val q = errors.join(purchases,
-            col("eu") === col("pu") &&
-              col("pts") >= col("ets") &&
-              col("pts") < col("ets") + expr("INTERVAL 10 MINUTE"),
-            "left_outer")
-          .select("error_id", "purchase_id")
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("append")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-ssouter-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      spark.table(table).orderBy("error_id", "purchase_id")
+      val feed = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+      val errors = feed
+        .where(col("event_type") === "error")
+        .select(col("event_id").as("error_id"), col("user_id").as("eu"), col("ts").as("ets"))
+        .withWatermark("ets", "1 second")
+      val purchases = feed
+        .where(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id").as("pu"), col("ts").as("pts"))
+        .withWatermark("pts", "1 second")
+      val pairs = errors.join(purchases,
+          col("eu") === col("pu") &&
+            col("pts") >= col("ets") &&
+            col("pts") < col("ets") + expr("INTERVAL 10 MINUTE"),
+          "left_outer")
+        .select("error_id", "purchase_id")
+      StreamRun.drain(pairs, statePartitions = 4).orderBy("error_id", "purchase_id")
     },
 
     // stream-stream FULL OUTER interval join — completes the outer-join
@@ -374,33 +290,22 @@ object StatefulStreamingQueries {
           |ORDER BY error_id, purchase_id""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_fullouter_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 4) {
-        val feed = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-        val errors = feed
-          .where(col("event_type") === "error")
-          .select(col("event_id").as("error_id"), col("user_id").as("eu"), col("ts").as("ets"))
-          .withWatermark("ets", "1 second")
-        val purchases = feed
-          .where(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id").as("pu"), col("ts").as("pts"))
-          .withWatermark("pts", "1 second")
-        val q = errors.join(purchases,
-            col("eu") === col("pu") &&
-              col("pts") >= col("ets") &&
-              col("pts") < col("ets") + expr("INTERVAL 10 MINUTE"),
-            "full_outer")
-          .select("error_id", "purchase_id")
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("append")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-ssfull-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      spark.table(table).orderBy("error_id", "purchase_id")
+      val feed = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+      val errors = feed
+        .where(col("event_type") === "error")
+        .select(col("event_id").as("error_id"), col("user_id").as("eu"), col("ts").as("ets"))
+        .withWatermark("ets", "1 second")
+      val purchases = feed
+        .where(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id").as("pu"), col("ts").as("pts"))
+        .withWatermark("pts", "1 second")
+      val pairs = errors.join(purchases,
+          col("eu") === col("pu") &&
+            col("pts") >= col("ets") &&
+            col("pts") < col("ets") + expr("INTERVAL 10 MINUTE"),
+          "full_outer")
+        .select("error_id", "purchase_id")
+      StreamRun.drain(pairs, statePartitions = 4).orderBy("error_id", "purchase_id")
     },
 
     // stream-stream LEFT SEMI interval join: "errors followed by a purchase
@@ -421,39 +326,26 @@ object StatefulStreamingQueries {
           |ORDER BY error_id""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_semijoin_${runId.incrementAndGet()}"
+      val feed = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+      val errors = feed
+        .where(col("event_type") === "error")
+        .select(col("event_id").as("error_id"), col("user_id").as("eu"), col("ts").as("ets"))
+        .withWatermark("ets", "1 second")
+      val purchases = feed
+        .where(col("event_type") === "purchase")
+        .select(col("user_id").as("pu"), col("ts").as("pts"))
+        .withWatermark("pts", "1 second")
+      val matched = errors.join(purchases,
+          col("eu") === col("pu") &&
+            col("pts") >= col("ets") &&
+            col("pts") < col("ets") + expr("INTERVAL 10 MINUTE"),
+          "left_semi")
+        .select("error_id")
       // LEFT SEMI: an error emits on its first match, during a data batch;
       // watermark eviction emits nothing — suppress the trailing no-data
-      // batch (StreamRun.withoutNoDataBatches). The oracle note above
-      // already proves the drained set needs no watermark cut.
-      StreamRun.withoutNoDataBatches(spark) {
-      withStatePartitions(spark, 4) {
-        val feed = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-        val errors = feed
-          .where(col("event_type") === "error")
-          .select(col("event_id").as("error_id"), col("user_id").as("eu"), col("ts").as("ets"))
-          .withWatermark("ets", "1 second")
-        val purchases = feed
-          .where(col("event_type") === "purchase")
-          .select(col("user_id").as("pu"), col("ts").as("pts"))
-          .withWatermark("pts", "1 second")
-        val q = errors.join(purchases,
-            col("eu") === col("pu") &&
-              col("pts") >= col("ets") &&
-              col("pts") < col("ets") + expr("INTERVAL 10 MINUTE"),
-            "left_semi")
-          .select("error_id")
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("append")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-sssemi-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      }
-      spark.table(table).orderBy("error_id")
+      // batch. The oracle note above already proves the drained set needs
+      // no watermark cut.
+      StreamRun.drain(matched, statePartitions = 4, noDataBatches = false).orderBy("error_id")
     },
 
     // stream-static join: the live feed enriched against a static dimension
@@ -469,24 +361,13 @@ object StatefulStreamingQueries {
           |ORDER BY e.event_id""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_enrich_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 8) {
-        val dim = broadcast(graft.Tables.documents(spark, dir)
-          .select(col("doc_id"), col("lang"), col("source")))
-        val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-          .where(col("event_type") === "error")
-          .join(dim, col("event_id") % 500 === col("doc_id"))
-          .select("event_id", "lang", "source")
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("append")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-enrich-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      spark.table(table).orderBy("event_id")
+      val dim = broadcast(graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"), col("source")))
+      val enriched = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+        .where(col("event_type") === "error")
+        .join(dim, col("event_id") % 500 === col("doc_id"))
+        .select("event_id", "lang", "source")
+      StreamRun.drain(enriched).orderBy("event_id")
     },
 
     // streaming MERGE/upsert sink (foreachBatch): each micro-batch reduces
@@ -511,29 +392,22 @@ object StatefulStreamingQueries {
     ) { (spark, dir) =>
       val base = graft.ScratchDirs.dir("graft-stream-upsert")
       @volatile var cur: Option[String] = None
-      withStatePartitions(spark, 8) {
-        val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-upsert-ckpt"))
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val s = batch.sparkSession
-            val latest = batch.groupBy("user_id")
-              .agg(max(struct(col("ts"), col("event_id"), col("event_type"), col("value")))
-                .as("r"))
-            val merged = cur match {
-              case None    => latest
-              case Some(p) =>
-                s.read.parquet(p).union(latest)
-                  .groupBy("user_id").agg(max(col("r")).as("r"))
-            }
-            val out = s"$base/v$batchId"
-            merged.write.mode("overwrite").parquet(out)
-            cur = Some(out)
+      StreamRun.run(Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir)))(
+        _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val s = batch.sparkSession
+          val latest = batch.groupBy("user_id")
+            .agg(max(struct(col("ts"), col("event_id"), col("event_type"), col("value")))
+              .as("r"))
+          val merged = cur match {
+            case None    => latest
+            case Some(p) =>
+              s.read.parquet(p).union(latest)
+                .groupBy("user_id").agg(max(col("r")).as("r"))
           }
-          .start()
-        q.awaitTermination()
-      }
+          val out = s"$base/v$batchId"
+          merged.write.mode("overwrite").parquet(out)
+          cur = Some(out)
+        })
       spark.read.parquet(cur.getOrElse(sys.error("q_stream_upsert: no batch ran")))
         .select(
           col("user_id"),
@@ -553,18 +427,10 @@ object StatefulStreamingQueries {
       )
     ) { (spark, dir) =>
       val out = graft.ScratchDirs.dir("graft-filesink")
-      withStatePartitions(spark, 8) {
-        val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-          .where(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), round(col("value"), 4).as("value"))
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-filesink-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
+      val purchases = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+        .where(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), round(col("value"), 4).as("value"))
+      StreamRun.run(purchases)(_.format("parquet").option("path", out))
       spark.read.parquet(out).orderBy("event_id")
     },
 
@@ -583,26 +449,15 @@ object StatefulStreamingQueries {
       )
     ) { (spark, dir) =>
       import spark.implicits._
-      val table = s"graft_stream_tws_${runId.incrementAndGet()}"
-      withRocksDBProvider(spark) {
-        withStatePartitions(spark, 4) {
-          val updates = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-            .select("user_id", "event_type")
-            .as[(Long, String)]
-            .groupByKey(_._1)
-            .transformWithState(new TypeCountProcessor, TimeMode.None(), OutputMode.Update())
-          val q = updates.writeStream
-            .trigger(Trigger.AvailableNow())
-            .outputMode("update")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-tws-ckpt"))
-            .start()
-          q.awaitTermination()
-        }
-      }
+      val updates = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+        .select("user_id", "event_type")
+        .as[(Long, String)]
+        .groupByKey(_._1)
+        .transformWithState(new TypeCountProcessor, TimeMode.None(), OutputMode.Update())
       val w = Window.partitionBy("user_id", "event_type").orderBy(col("version").desc)
-      StreamRun.detached(spark.table(table))
+      StreamRun.detached(StreamRun.withConf(spark, StreamRun.RocksDB) {
+        StreamRun.drain(updates.toDF(), "update", statePartitions = 4)
+      })
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
         .select("user_id", "event_type", "n")
@@ -644,30 +499,19 @@ object StatefulStreamingQueries {
       )
     ) { (spark, dir) =>
       import spark.implicits._
-      val table = s"graft_stream_tws_timer_${runId.incrementAndGet()}"
-      withRocksDBProvider(spark) {
-        withStatePartitions(spark, 4) {
-          // ts kept in the projection so the watermark attribute reaches
-          // the stateful operator; the processor consumes the µs column
-          val updates = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-            .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
-            .withWatermark("ts", "1 second")
-            .as[(Long, java.sql.Timestamp, Long)]
-            .map(r => (r._1, r._3))
-            .groupByKey(_._1)
-            .transformWithState(new SessionTimerProcessor(30L * 60 * 1000000L),
-              TimeMode.EventTime(), OutputMode.Update())
-          val q = updates.writeStream
-            .trigger(Trigger.AvailableNow())
-            .outputMode("update")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-tws-timer-ckpt"))
-            .start()
-          q.awaitTermination()
-        }
-      }
-      StreamRun.detached(spark.table(table))
+      // ts kept in the projection so the watermark attribute reaches the
+      // stateful operator; the processor consumes the µs column
+      val updates = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+        .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
+        .withWatermark("ts", "1 second")
+        .as[(Long, java.sql.Timestamp, Long)]
+        .map(r => (r._1, r._3))
+        .groupByKey(_._1)
+        .transformWithState(new SessionTimerProcessor(30L * 60 * 1000000L),
+          TimeMode.EventTime(), OutputMode.Update())
+      StreamRun.detached(StreamRun.withConf(spark, StreamRun.RocksDB) {
+        StreamRun.drain(updates.toDF(), "update", statePartitions = 4)
+      })
         .select(col("user_id"),
           timestamp_micros(col("start_micros")).as("session_start"), col("n"))
         .orderBy("user_id", "session_start")

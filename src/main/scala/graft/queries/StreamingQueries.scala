@@ -1,7 +1,7 @@
 package graft.queries
 
 
-import graft.streaming.Ingest
+import graft.streaming.{Ingest, StreamRun}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -14,10 +14,6 @@ import org.apache.spark.sql.streaming.Trigger
  * same log/query results regardless of arrival pacing.
  */
 object StreamingQueries {
-
-  private val runId = StreamRun.runId
-  private def withStatePartitions[A](spark: org.apache.spark.sql.SparkSession, n: Int)(f: => A): A =
-    StreamRun.withStatePartitions(spark, n)(f)
 
   /** The shared staged landing directory for the file-source queries:
     * events projected to the replayed columns and re-written as 4 parquet
@@ -43,6 +39,11 @@ object StreamingQueries {
     try (path, ls.filter(_.toString.endsWith(".parquet")).count()) finally ls.close()
   }
 
+  /** A certificate's state partitions: the session's shuffle partitioning,
+    * sized to the machine that runs the slice. */
+  private def certPartitions(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
   // q_stream_filewin: the EventFeed replays stop at the sf10 sweep (the
   // harness is driver-materialized by design); the at-scale ingestion path
   // is the FILE source running the identical FileStreams code. ~4
@@ -53,7 +54,7 @@ object StreamingQueries {
     val (evPath, nFiles) = certEvents(spark, dir)
     val fpt = math.max(1L, (nFiles + 3) / 4).toInt
     val (got, batches) = graft.streaming.FileStreams.hourlyProfileStream(
-      spark, evPath, fpt, graft.ScratchDirs.dir("graft-streamcert"))
+      spark, evPath, fpt, graft.ScratchDirs.dir("graft-streamcert"), certPartitions(spark))
     check(Holds("batches", nFiles < 2 || batches >= 2, s"files=$nFiles batches=$batches"))
     check(Same("profile", got,
       graft.streaming.FileStreams.hourlyProfileBatch(spark, evPath)))
@@ -73,7 +74,7 @@ object StreamingQueries {
     val (evPath, nFiles) = certEvents(spark, dir)
     val fpt = math.max(1L, (nFiles + 7) / 8).toInt
     val (got, batches) = FileStreams.attributionJoinStream(
-      spark, evPath, fpt, graft.ScratchDirs.dir("graft-streamjoincert"))
+      spark, evPath, fpt, graft.ScratchDirs.dir("graft-streamjoincert"), certPartitions(spark))
     check(Holds("batches", nFiles < 2 || batches >= 2, s"files=$nFiles batches=$batches"))
     check(Same("inner-pairs", got, FileStreams.attributionJoinBatch(spark, evPath)))
     spark.catalog.clearCache()
@@ -83,7 +84,7 @@ object StreamingQueries {
     val (maxReal, sentinel) = FileStreams.sentineledLanding(
       spark, evPath, landing, offsetSeconds = delaySec + 8 * 3600)
     val (gotO, batchesO) = FileStreams.attributionJoinOuterStream(spark, landing, fpt,
-      graft.ScratchDirs.dir("graft-outerjoincert"), s"$delaySec seconds", maxReal)
+      graft.ScratchDirs.dir("graft-outerjoincert"), s"$delaySec seconds", maxReal, certPartitions(spark))
     val expO = FileStreams.attributionJoinOuterBatch(spark, landing, maxReal).cache()
     val nNull = expO.where(col("p_ts").isNull).count()
     check(Holds("outer-closure", (nFiles < 2 || batchesO >= 2) && nNull > 0L,
@@ -102,9 +103,8 @@ object StreamingQueries {
           |FROM events ORDER BY log_offset""".stripMargin
       )
     ) { (spark, dir) =>
-      val result = withStatePartitions(spark, 8) {
+      val result =
         Ingest.run(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir), segmentSize = Int.MaxValue / 4)
-      }
       Ingest.parsed(Ingest.logFrame(spark, result.log))
         .select(
           col("offset").as("log_offset"),
@@ -126,22 +126,10 @@ object StreamingQueries {
           |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_window_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 8) {
-      val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+      val windows = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n"))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .outputMode("complete")
-        .format("memory")
-        .queryName(table)
-        .option("checkpointLocation",
-          Ingest.ephemeralCheckpoint("graft-window-ckpt"))
-        .start()
-      q.awaitTermination()
-      }
-      spark.table(table)
+      StreamRun.drain(windows, "complete")
         .select(col("window.start").as("w"), col("n"))
         .orderBy("w")
     },
@@ -167,26 +155,15 @@ object StreamingQueries {
       )
     ) { (spark, dir) =>
       val stage = stagedEvents4(spark, dir)
-      val table = s"graft_stream_filesrc_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 8) {
-        val q = spark.readStream
-          // file sources require an explicit schema
-          .schema(spark.read.parquet(stage).schema)
-          .option("maxFilesPerTrigger", 2)
-          .parquet(stage)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            graft.functions.Money.sumMoney(col("value")).as("total"))
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("complete")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-filesrc-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      spark.table(table).orderBy("event_type")
+      val totals = spark.readStream
+        // file sources require an explicit schema
+        .schema(spark.read.parquet(stage).schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(stage)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          graft.functions.Money.sumMoney(col("value")).as("total"))
+      StreamRun.drain(totals, "complete").orderBy("event_type")
     },
 
     // File-source WINDOWED aggregation (q_stream_filesrc's ingestion path ×
@@ -211,9 +188,8 @@ object StreamingQueries {
       // the staged copy is shared with q_stream_filesrc (memoized per JVM)
       val stage = stagedEvents4(spark, dir)
       val out = graft.ScratchDirs.dir("graft-filewin-out")
-      val (result, batches) = withStatePartitions(spark, 8) {
+      val (result, batches) =
         graft.streaming.FileStreams.hourlyProfileStream(spark, stage, filesPerTrigger = 2, outDir = out)
-      }
       // the query exists to pin CROSS-BATCH window state; a single-batch
       // replay would still hash-match the oracle, so fail loudly instead
       require(batches >= 2, s"q_stream_filewin expected a multi-batch replay, got $batches")
@@ -250,10 +226,8 @@ object StreamingQueries {
     ) { (spark, dir) =>
       val stage = stagedEvents4(spark, dir)
       val out = graft.ScratchDirs.dir("graft-filejoin-out")
-      val (result, batches) = withStatePartitions(spark, 8) {
-        graft.streaming.FileStreams.attributionJoinStream(
-          spark, stage, filesPerTrigger = 2, outDir = out)
-      }
+      val (result, batches) = graft.streaming.FileStreams.attributionJoinStream(
+        spark, stage, filesPerTrigger = 2, outDir = out)
       require(batches >= 2, s"q_stream_filejoin expected a multi-batch replay, got $batches")
       result.orderBy("user_id", "c_ts", "p_ts")
     },
@@ -291,33 +265,22 @@ object StreamingQueries {
       val stage = graft.ScratchDirs.cached(s"graft-docs4-$dir") { d =>
         docs.repartition(4).write.parquet(d)
       }
-      val table = s"graft_stream_curate_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 8) {
-        val pass = col("len_score") >= 0.2 && col("stop_ratio") > 0
-        val q = spark.readStream
-          .schema(docs.schema)
-          .option("maxFilesPerTrigger", 2)
-          .parquet(stage)
-          .select(trim(regexp_replace(col("text"), " +", " ")).as("norm"))
-          .dropDuplicates("norm")
-          .withColumn("n_tokens", size(split(col("norm"), " ")).cast("long"))
-          .withColumn("len_score", least(length(col("norm")) / 500.0, lit(1.0)))
-          .withColumn("stop_ratio",
-            graft.functions.TextAnalysis.stopwordRatio(col("norm")))
-          .agg(
-            count(lit(1)).as("distinct_docs"),
-            sum(when(pass, 1L).otherwise(0L)).as("quality_pass"),
-            sum(when(pass, col("n_tokens")).otherwise(0L)).as("tokens"))
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("complete")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-streamcurate-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      spark.table(table)
+      val pass = col("len_score") >= 0.2 && col("stop_ratio") > 0
+      val profile = spark.readStream
+        .schema(docs.schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(stage)
+        .select(trim(regexp_replace(col("text"), " +", " ")).as("norm"))
+        .dropDuplicates("norm")
+        .withColumn("n_tokens", size(split(col("norm"), " ")).cast("long"))
+        .withColumn("len_score", least(length(col("norm")) / 500.0, lit(1.0)))
+        .withColumn("stop_ratio",
+          graft.functions.TextAnalysis.stopwordRatio(col("norm")))
+        .agg(
+          count(lit(1)).as("distinct_docs"),
+          sum(when(pass, 1L).otherwise(0L)).as("quality_pass"),
+          sum(when(pass, col("n_tokens")).otherwise(0L)).as("tokens"))
+      StreamRun.drain(profile, "complete")
     },
 
     // State-store reader (Spark 4 `statestore` data source): run the same
@@ -334,8 +297,10 @@ object StreamingQueries {
           |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
       )
     ) { (spark, dir) =>
+      // the one registry query that owns its checkpoint: its OUTPUT is read
+      // from the checkpoint after the run, which StreamRun would delete
       val ckpt = graft.ScratchDirs.dir("graft-statereader-ckpt")
-      withStatePartitions(spark, 8) {
+      StreamRun.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
         val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
           .groupBy(window(col("ts"), "1 hour"))
           .agg(count(lit(1)).as("n"))
@@ -362,24 +327,12 @@ object StreamingQueries {
           |GROUP BY event_type ORDER BY event_type""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_dedup_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 8) {
-      val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+      val counts = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
         .select("user_id", "event_type")
         .dropDuplicates("user_id", "event_type")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .outputMode("complete")
-        .format("memory")
-        .queryName(table)
-        .option("checkpointLocation",
-          Ingest.ephemeralCheckpoint("graft-dedup-ckpt"))
-        .start()
-      q.awaitTermination()
-      }
-      spark.table(table).orderBy("event_type")
+      StreamRun.drain(counts, "complete").orderBy("event_type")
     },
 
     // dropDuplicatesWithinWatermark: the BOUNDED-STATE dedup — unlike
@@ -397,32 +350,17 @@ object StreamingQueries {
           |GROUP BY event_type ORDER BY event_type""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_dedupwm_${runId.incrementAndGet()}"
+      val counts = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+        .select("ts", "user_id", "event_type")
+        .withWatermark("ts", "3650 days")
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"))
       // the 3650-day delay spans the whole bounded replay, so the trailing
       // no-data batch evicts nothing and the complete-mode agg just
-      // rewrites the identical table — suppress it
-      // (StreamRun.withoutNoDataBatches); a live pipeline with a real
-      // eviction horizon keeps no-data batches on.
-      StreamRun.withoutNoDataBatches(spark) {
-      withStatePartitions(spark, 8) {
-        val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-          .select("ts", "user_id", "event_type")
-          .withWatermark("ts", "3650 days")
-          .dropDuplicatesWithinWatermark("user_id", "event_type")
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"))
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .outputMode("complete")
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation",
-            Ingest.ephemeralCheckpoint("graft-dedupwm-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      }
-      spark.table(table).orderBy("event_type")
+      // rewrites the identical table — suppress it; a live pipeline with a
+      // real eviction horizon keeps no-data batches on.
+      StreamRun.drain(counts, "complete", noDataBatches = false).orderBy("event_type")
     },
 
     // streaming hopping (sliding) window: each event lands in 2 overlapping
@@ -437,22 +375,10 @@ object StreamingQueries {
           |GROUP BY w ORDER BY w""".stripMargin
       )
     ) { (spark, dir) =>
-      val table = s"graft_stream_hop_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 8) {
-      val q = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
+      val windows = Ingest.feed(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir))
         .groupBy(window(col("ts"), "2 hours", "1 hour"))
         .agg(count(lit(1)).as("n"))
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .outputMode("complete")
-        .format("memory")
-        .queryName(table)
-        .option("checkpointLocation",
-          Ingest.ephemeralCheckpoint("graft-hop-ckpt"))
-        .start()
-      q.awaitTermination()
-      }
-      spark.table(table)
+      StreamRun.drain(windows, "complete")
         .select(col("window.start").as("w"), col("n"))
         .orderBy("w")
     },
@@ -472,9 +398,7 @@ object StreamingQueries {
           |ORDER BY log_offset""".stripMargin
       )
     ) { (spark, dir) =>
-      val result = withStatePartitions(spark, 8) {
-        Ingest.run(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir), segmentSize = 100)
-      }
+      val result = Ingest.run(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir), segmentSize = 100)
       Ingest.parsed(Ingest.logFrame(spark, result.log))
         .select(
           col("offset").as("log_offset"),
@@ -494,28 +418,16 @@ object StreamingQueries {
           |FROM events WHERE event_id >= 900 ORDER BY log_offset""".stripMargin
       )
     ) { (spark, dir) =>
-      val result = withStatePartitions(spark, 8) {
-        Ingest.run(spark, dir, maxBatchSize = Ingest.pacedBatchSize(spark, dir), segmentSize = Int.MaxValue / 4)
-      }
-      val table = s"graft_stream_tail_${runId.incrementAndGet()}"
-      withStatePartitions(spark, 8) {
-        val q = graft.streaming.Watch
-          .tail(spark, table, result.log, startingOffset = Some(900L), maxBatchSize = Ingest.pacedBatchSize(spark, dir))
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .format("memory")
-          .queryName(table)
-          .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-tail-ckpt"))
-          .start()
-        q.awaitTermination()
-      }
-      // detach the delivered records from the memory sink's MemoryPlan
-      // (whose rows would otherwise ship inside every downstream task
-      // binary) — they're already driver-resident, so re-distribute once
-      // via broadcast like the log view itself
-      val delivered = spark.table(table).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toIndexedSeq
-      Ingest.parsed(Ingest.distributedRecords(spark, delivered))
+      val pace   = Ingest.pacedBatchSize(spark, dir)
+      val result = Ingest.run(spark, dir, maxBatchSize = pace, segmentSize = Int.MaxValue / 4)
+      // the query owns the log's registry entry: removed once the
+      // delivered records are detached from the sink
+      val name = StreamRun.uniqueName("graft_stream_tail")
+      val delivered =
+        try StreamRun.detached(StreamRun.drain(graft.streaming.Watch
+          .tail(spark, name, result.log, startingOffset = Some(900L), maxBatchSize = pace)))
+        finally graft.sources.OffsetLogRegistry.remove(name)
+      Ingest.parsed(delivered)
         .select(
           col("offset").as("log_offset"),
           col("ce.data.event_id").as("event_id"),

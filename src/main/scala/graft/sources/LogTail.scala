@@ -3,7 +3,6 @@ package graft.sources
 import java.util
 import java.util.concurrent.ConcurrentHashMap
 
-import graft.operators.EventLog.OutOfRange
 import graft.streaming.{Ingest, OffsetLog}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -21,11 +20,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * the offset log: the log is both sink (ingest) and source (tail), the
  * Kafka shape. Semantics pinned by the reference's tests:
  *
- *  - no `startingOffset` → start at `latest+1` resolved AT SUBSCRIBE time —
- *    pre-existing records are not replayed (`server.go:161-166`,
- *    `server_test.go:328-337`);
+ *  - no `startingOffset` → start at the log's next offset resolved AT
+ *    SUBSCRIBE time — pre-existing records are not replayed
+ *    (`server.go:161-166`, `server_test.go:328-337`);
  *  - `startingOffset=N` → replay from N (`server_test.go:339-348`);
- *  - purged start → error (the 400, `server_test.go:350-359`);
+ *  - negative or purged start → error (the 400, `server_test.go:350-359`);
  *  - future start → wait, records delivered as they arrive (micro-batches
  *    pick up whatever the log gained since the last trigger; a checkpointed
  *    restart resumes exactly where the cursor stopped — the stronger analog
@@ -44,6 +43,7 @@ object OffsetLogRegistry {
     Option(logs.get(name)).getOrElse(
       throw new IllegalArgumentException(s"no OffsetLog registered under '$name'"))
   def remove(name: String): Unit = logs.remove(name)
+  private[graft] def names: Set[String] = logs.keySet.toArray(Array.empty[String]).toSet
 }
 
 class LogTailProvider extends TableProvider {
@@ -100,18 +100,19 @@ class LogTailMicroBatchStream(
 
   private def log: OffsetLog = OffsetLogRegistry.get(logName)
 
-  /** Resolve the subscribe position — reference `server.go:149-166`. */
+  /** Resolve the subscribe position — reference `server.go:149-166`: by
+    * default only new events (the offset the log's next write gets, also
+    * on an empty log); an explicit start by [[graft.streaming.LogView.watch]]'s
+    * rule, so a negative or purged start is the reference's 400. */
   override def initialOffset(): Offset = {
-    val r = log.range
-    startingOffset match {
-      case None => LogCursor(r.latest + 1) // only-new-events default
-      case Some(s) =>
-        if (!r.isEmpty && s < r.earliest)
-          // the reference's 400 on a purged start offset
-          throw new IllegalArgumentException(
-            s"invalid offset: $s out of range [${r.earliest}, ${r.latest}] (${OutOfRange})")
-        LogCursor(s)
+    val v = log.view
+    val s = startingOffset.getOrElse(v.next)
+    v.watch(Some(s)).left.foreach { e =>
+      val r = v.range
+      throw new IllegalArgumentException(
+        s"invalid offset: $s out of range [${r.earliest}, ${r.latest}] ($e)")
     }
+    LogCursor(s)
   }
 
   // batch broadcasts live until the batch is committed: each planned batch
@@ -135,7 +136,7 @@ class LogTailMicroBatchStream(
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s   = start.asInstanceOf[LogCursor].next
-    val end = log.range.latest + 1
+    val end = log.view.next
     val cap = limit match {
       case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows => r.maxRows()
       case _                                                            => maxBatchSize.toLong
@@ -143,7 +144,7 @@ class LogTailMicroBatchStream(
     LogCursor(math.max(s, math.min(end, s + cap)))
   }
 
-  override def reportLatestOffset(): Offset = LogCursor(log.range.latest + 1)
+  override def reportLatestOffset(): Offset = LogCursor(log.view.next)
   override def prepareForTriggerAvailableNow(): Unit = ()
 
   override def latestOffset(): Offset =

@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.Tables
 import graft.functions.Money
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * The at-scale streaming ingestion shape: a landing directory of parquet
@@ -58,13 +57,17 @@ object FileStreams {
    * Returns the parquet read-back of the final aggregate plus the number
    * of micro-batches the replay actually ran (callers assert >= 2 when the
    * directory holds enough files — a 1-batch run would not exercise
-   * cross-batch state).
+   * cross-batch state). `statePartitions` sizes the state store of this
+   * and the two join streams below ([[StreamRun.run]]): the registry
+   * queries keep the replay default, the certificates pass the session's
+   * shuffle partitioning, which is sized to the slice's machine.
    */
   def hourlyProfileStream(
       spark: SparkSession,
       eventsPath: String,
       filesPerTrigger: Int,
-      outDir: String): (DataFrame, Long) = {
+      outDir: String,
+      statePartitions: Int = 8): (DataFrame, Long) = {
     require(filesPerTrigger > 0, s"filesPerTrigger must be positive: $filesPerTrigger")
     // schema probe: file sources require an explicit schema; the batch
     // footer read is the same inference the batch plan uses
@@ -75,16 +78,11 @@ object FileStreams {
         .option("maxFilesPerTrigger", filesPerTrigger)
         .parquet(eventsPath))
     @volatile var batches = 0L
-    val q = hourlyProfile(src).writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("complete")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], id: Long) =>
+    StreamRun.run(hourlyProfile(src), statePartitions)(_.outputMode("complete")
+      .foreachBatch { (df: DataFrame, id: Long) =>
         df.write.mode("overwrite").parquet(outDir)
         batches = id + 1
-      }
-      .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-filewin-ckpt"))
-      .start()
-    q.awaitTermination()
+      })
     (spark.read.parquet(outDir), batches)
   }
 
@@ -146,7 +144,8 @@ object FileStreams {
       spark: SparkSession,
       eventsPath: String,
       filesPerTrigger: Int,
-      outDir: String): (DataFrame, Long) = {
+      outDir: String,
+      statePartitions: Int = 8): (DataFrame, Long) = {
     require(filesPerTrigger > 0, s"filesPerTrigger must be positive: $filesPerTrigger")
     val schema = spark.read.parquet(eventsPath).schema
     def src = Tables.normalizeTs(
@@ -159,16 +158,10 @@ object FileStreams {
     val (cl, _) = attributionSides(src)
     val (_, pu) = attributionSides(src)
     @volatile var batches = 0L
-    val q = attributionJoin(cl, pu).writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        df.write.mode("append").parquet(outDir)
-        batches = id + 1
-      }
-      .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-filejoin-ckpt"))
-      .start()
-    q.awaitTermination()
+    StreamRun.run(attributionJoin(cl, pu), statePartitions)(_.foreachBatch { (df: DataFrame, id: Long) =>
+      df.write.mode("append").parquet(outDir)
+      batches = id + 1
+    })
     (spark.read.parquet(outDir), batches)
   }
 
@@ -223,7 +216,8 @@ object FileStreams {
       filesPerTrigger: Int,
       outDir: String,
       delay: String,
-      horizon: java.sql.Timestamp): (DataFrame, Long) = {
+      horizon: java.sql.Timestamp,
+      statePartitions: Int = 8): (DataFrame, Long) = {
     require(filesPerTrigger > 0, s"filesPerTrigger must be positive: $filesPerTrigger")
     val schema = spark.read.parquet(eventsPath).schema
     def src = Tables.normalizeTs(
@@ -236,16 +230,10 @@ object FileStreams {
     val cl = cl0.withWatermark("c_ts", delay)
     val pu = pu0.withWatermark("p_ts", delay)
     @volatile var batches = 0L
-    val q = attributionJoinOuter(cl, pu).writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        df.write.mode("append").parquet(outDir)
-        batches = id + 1
-      }
-      .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-fileouter-ckpt"))
-      .start()
-    q.awaitTermination()
+    StreamRun.run(attributionJoinOuter(cl, pu), statePartitions)(_.foreachBatch { (df: DataFrame, id: Long) =>
+      df.write.mode("append").parquet(outDir)
+      batches = id + 1
+    })
     (spark.read.parquet(outDir).where(col("c_ts") <= lit(horizon)), batches)
   }
 

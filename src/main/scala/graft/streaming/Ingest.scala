@@ -6,7 +6,6 @@ import graft.operators.EventLog
 import graft.sources.EventFeedProvider
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,12 +29,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * `main.go:113-125`).
  */
 object Ingest {
-
-  /** Ephemeral checkpoint dir for bounded replays, under the self-cleaning
-    * checkpoint root ([[graft.ScratchDirs.checkpoint]]: tmpfs when
-    * available, deleted at JVM exit). Durable pipelines point this at a
-    * real DFS; the state machinery exercised is identical. */
-  def ephemeralCheckpoint(prefix: String): String = graft.ScratchDirs.checkpoint(prefix)
 
   /** CloudEvent envelope schema for parsing stored bytes back (§1.2). */
   def envelopeSchema(dataSchema: StructType): StructType = StructType(Seq(
@@ -126,38 +119,32 @@ object Ingest {
     var rejected       = 0L
     var keyGaps        = 0L
 
-    val q = serialized.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Ingest.ephemeralCheckpoint("graft-ingest-ckpt"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // micro-batch = the single-writer serialization point; events are
-        // already feed-ordered, re-assert order on the tiny batch — DRIVER
-        // side, after the collect the sink needs anyway: orderBy().collect()
-        // paid a range-partitioning sampling pass + shuffle per micro-batch
-        // for rows that end on the driver regardless. Offsets are unique
-        // (dense event ids), so the sorted order is the identical unique
-        // permutation.
-        // resolve ordinals by NAME, not position: a future reorder of the
-        // upstream select must not silently mis-sort and mis-seed the log
-        val offIdx = batch.schema.fieldIndex("offset")
-        val valIdx = batch.schema.fieldIndex("value")
-        val rows = batch.collect()
-        java.util.Arrays.sort(rows, java.util.Comparator.comparingLong(
-          (r: org.apache.spark.sql.Row) => r.getLong(offIdx)))
-        rows.foreach { r =>
-          val key = r.getLong(offIdx)
-          if (log == null)
-            log = new OffsetLog(key, segmentSize, maxRecordBytes)
-          log.write(r.getAs[Array[Byte]](valIdx)) match {
-            case Left(_)       => rejected += 1; keyGaps += 1
-            case Right(offset) => if (offset != key) keyGaps += 1
-          }
+    StreamRun.run(serialized)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      // micro-batch = the single-writer serialization point; events are
+      // already feed-ordered, re-assert order on the tiny batch — DRIVER
+      // side, after the collect the sink needs anyway: orderBy().collect()
+      // paid a range-partitioning sampling pass + shuffle per micro-batch
+      // for rows that end on the driver regardless. Offsets are unique
+      // (dense event ids), so the sorted order is the identical unique
+      // permutation.
+      // resolve ordinals by NAME, not position: a future reorder of the
+      // upstream select must not silently mis-sort and mis-seed the log
+      val offIdx = batch.schema.fieldIndex("offset")
+      val valIdx = batch.schema.fieldIndex("value")
+      val rows = batch.collect()
+      java.util.Arrays.sort(rows, java.util.Comparator.comparingLong(
+        (r: org.apache.spark.sql.Row) => r.getLong(offIdx)))
+      rows.foreach { r =>
+        val key = r.getLong(offIdx)
+        if (log == null)
+          log = new OffsetLog(key, segmentSize, maxRecordBytes)
+        log.write(r.getAs[Array[Byte]](valIdx)) match {
+          case Left(_)       => rejected += 1; keyGaps += 1
+          case Right(offset) => if (offset != key) keyGaps += 1
         }
-        ()
       }
-      .start()
-    q.awaitTermination()
+      ()
+    })
     IngestResult(
       if (log == null) new OffsetLog(0, segmentSize, maxRecordBytes) else log, rejected, keyGaps)
   }
@@ -187,15 +174,6 @@ object Ingest {
     * the one decode of stored bytes, shared by [[logFrame]] and LogTail. */
   def exactUtf8(b: Array[Byte]): Array[Byte] =
     if (UTF8String.fromBytes(b).isValid) b else new String(b, UTF_8).getBytes(UTF_8)
-
-  /** Driver-resident (offset, value) records as a DISTRIBUTED frame (see
-    * [[broadcastSlices]]). Detaches memory-sink contents (q_stream_tail)
-    * from their MemoryPlan, whose embedded rows otherwise ride every
-    * downstream stage's task binary. */
-  def distributedRecords(spark: SparkSession, records: Seq[(Long, String)]): DataFrame = {
-    import spark.implicits._
-    broadcastSlices(spark, records.toIndexedSeq)((_, r) => r).toDF("offset", "value")
-  }
 
   /** Driver-resident `items` as an RDD: the sequence ships ONCE per
     * executor via TorrentBroadcast and is index-sliced into

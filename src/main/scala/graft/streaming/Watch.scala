@@ -53,20 +53,18 @@ object Watch {
       maxDurationMs: Long = 5L * 60 * 1000,
       maxBatchSize: Int = 1000
   ): Session = {
-    val start = startingOffset.getOrElse(log.range.latest + 1)
+    // only new events: the offset the log's next write gets, resolved once
+    // so the source's start and the fallback cursor are the same offset
+    val start = startingOffset.getOrElse(log.view.next)
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]
     // the session owns its registry entry: removed once its query stopped
-    val finished = try {
-      val q = tail(spark, name, log, startingOffset, maxBatchSize).writeStream
+    val finished = try StreamRun.owned(tail(spark, name, log, Some(start), maxBatchSize).writeStream
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
-        .option("checkpointLocation", Ingest.ephemeralCheckpoint(s"graft-watch-session-$name"))
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.collect().foreach(r => buf.add((r.getLong(0), r.getString(1))))
           ()
-        }
-        .start()
-      try q.awaitTermination(maxDurationMs) finally q.stop()
-    } finally OffsetLogRegistry.remove(name)
+        })(_.awaitTermination(maxDurationMs))
+    finally OffsetLogRegistry.remove(name)
     // in-order delivery ⇒ the buffer is a dense prefix; cursor = last + 1
     val records = buf.toArray(Array.empty[(Long, String)]).toSeq.sortBy(_._1)
     Session(records, records.lastOption.map(_._1 + 1).getOrElse(start), expired = !finished)

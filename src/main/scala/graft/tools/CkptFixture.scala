@@ -58,6 +58,7 @@ object CkptFixture {
       .outputMode("complete")
       .format("memory")
       .queryName("ckpt_fixture_seed")
+      // owns its checkpoint, not StreamRun: the checkpoint IS the output
       .option("checkpointLocation", out)
       .start()
     q.awaitTermination()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.StatefulStreamingQueries
-import graft.streaming.Ingest
+import graft.streaming.{Ingest, StreamRun}
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
@@ -35,7 +35,7 @@ class ObservabilitySpec extends AnyFunSuite {
 
   test("streaming progress exposes state-operator metrics for the TWS timer pipeline") {
     import spark.implicits._
-    StatefulStreamingQueries.withRocksDBProvider(spark) {
+    StreamRun.withConf(spark, StreamRun.RocksDB) {
       val updates = Ingest.feed(spark, dir, maxBatchSize = 400)
         .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
         .withWatermark("ts", "1 second")
@@ -50,7 +50,7 @@ class ObservabilitySpec extends AnyFunSuite {
         .outputMode("update")
         .format("memory")
         .queryName("obs_tws_timer")
-        .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-obs-tws-ckpt"))
+        .option("checkpointLocation", graft.ScratchDirs.checkpoint("graft-obs-tws-ckpt"))
         .start()
       q.awaitTermination()
 
@@ -71,7 +71,7 @@ class ObservabilitySpec extends AnyFunSuite {
     // operator inventory of ANY checkpoint — which stateful operators,
     // which stores, how many shuffle partitions — recoverable offline,
     // e.g. before attempting a state-repartitioning migration
-    val ckpt = Ingest.ephemeralCheckpoint("graft-statemeta-ckpt")
+    val ckpt = graft.ScratchDirs.checkpoint("graft-statemeta-ckpt")
     val q = Ingest.feed(spark, dir, maxBatchSize = 100000)
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"))

@@ -31,7 +31,7 @@ class ScratchDirsSpec extends AnyFunSuite {
     val tmpfs = ScratchDirs.tmpfs
     // the production root: every ephemeral checkpoint sits on tmpfs when
     // it is writable, else under the JVM temp dir beside the datasets
-    val ckpt = Paths.get(graft.streaming.Ingest.ephemeralCheckpoint("scratchspec-ckpt"))
+    val ckpt = Paths.get(graft.ScratchDirs.checkpoint("scratchspec-ckpt"))
     assert(Files.isDirectory(ckpt))
     tmpfs.foreach(t => assert(ckpt.startsWith(t), s"$ckpt is not under $t"))
     // a private root of the SAME class (the production one is deleted only

@@ -32,7 +32,7 @@ class FaultInjectionSpec extends AnyFunSuite {
 
   test("mid-replay fault fails the query and leaves a dense committed-prefix log; restart completes it") {
     val log  = new OffsetLog(0L, 10000)
-    val ckpt = Ingest.ephemeralCheckpoint("graft-fault-ckpt")
+    val ckpt = graft.ScratchDirs.checkpoint("graft-fault-ckpt")
 
     def drainInto(df: DataFrame): Unit = {
       val q = df.writeStream
@@ -93,7 +93,7 @@ class FaultInjectionSpec extends AnyFunSuite {
       val q = Ingest.feed(spark, dir, maxBatchSize = 400)
         .writeStream
         .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-fault-upsert-ckpt"))
+        .option("checkpointLocation", graft.ScratchDirs.checkpoint("graft-fault-upsert-ckpt"))
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (failing && batchId >= failAtBatch)
             throw new RuntimeException("injected upsert-sink fault")

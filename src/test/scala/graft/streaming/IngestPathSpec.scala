@@ -60,7 +60,7 @@ class IngestPathSpec extends AnyFunSuite {
       .trigger(Trigger.AvailableNow())
       .format("memory")
       .queryName(name)
-      .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-ingest-path-ckpt"))
+      .option("checkpointLocation", graft.ScratchDirs.checkpoint("graft-ingest-path-ckpt"))
       .start()
     q.awaitTermination()
     try {

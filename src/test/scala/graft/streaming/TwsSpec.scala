@@ -50,17 +50,10 @@ class TwsSpec extends AnyFunSuite {
   }
 
   test("state TTL expires idle keys between micro-batches; TTLConfig.NONE accumulates") {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(providerKey)
-    val prevParts = spark.conf.get(partsKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // 1 state partition: each extra partition is a RocksDB instance whose
     // per-commit checkpoint file ops fork hadoop shell readlinks — at 32
     // partitions a single-key batch takes minutes of pure fs overhead
-    spark.conf.set(partsKey, "1")
-    try {
+    StreamRun.withConf(spark, StreamRun.RocksDB, "spark.sql.shuffle.partitions" -> "1") {
       // two checkpointed AvailableNow runs of the same query, > TTL apart:
       // run 1 counts 3 rows for key 1; run 2 adds 2 more. With an 800 ms
       // TTL the 2 s idle gap evicts the key → run 2 restarts at 2; with
@@ -68,7 +61,7 @@ class TwsSpec extends AnyFunSuite {
       def lastCount(ttl: TTLConfig): Long = {
         import spark.implicits._
         val ms = MemoryStream[Long](Encoders.scalaLong, spark)
-        val ckpt = Ingest.ephemeralCheckpoint(s"graft-tws-ttl-${System.nanoTime()}")
+        val ckpt = graft.ScratchDirs.checkpoint(s"graft-tws-ttl-${System.nanoTime()}")
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
         // Trigger.Once, NOT AvailableNow/processAllAvailable: in
         // TimeMode.ProcessingTime every batch requests a follow-up batch
@@ -99,12 +92,6 @@ class TwsSpec extends AnyFunSuite {
         "TTL must evict the idle key before the second batch")
       assert(lastCount(TTLConfig.NONE) === 5L,
         "without TTL the state must survive the gap and the restart")
-    } finally {
-      spark.conf.set(partsKey, prevParts)
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
     }
   }
 }

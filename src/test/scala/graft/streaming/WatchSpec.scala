@@ -32,7 +32,7 @@ class WatchSpec extends AnyFunSuite {
   test("watch default start skips existing records; resume delivers only new ones") {
     val log = new OffsetLog(0, 100)
     (0 until 3).foreach(i => log.write(bytes(i)))
-    val ckpt = Ingest.ephemeralCheckpoint("graft-watch-default")
+    val ckpt = graft.ScratchDirs.checkpoint("graft-watch-default")
 
     // foreachBatch sink: supports checkpoint recovery (memory sink doesn't)
     val received = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -60,7 +60,7 @@ class WatchSpec extends AnyFunSuite {
     val log = new OffsetLog(0, 100)
     (0 until 3).foreach(i => log.write(bytes(i)))
     drain(Watch.tail(spark, "w_replay", log, startingOffset = Some(0L)),
-      "w_replay_t", Ingest.ephemeralCheckpoint("graft-watch-replay"))
+      "w_replay_t", graft.ScratchDirs.checkpoint("graft-watch-replay"))
     assert(values("w_replay_t") === Seq("0", "1", "2"))
   }
 
@@ -68,7 +68,7 @@ class WatchSpec extends AnyFunSuite {
     val log = new OffsetLog(0, 5)
     (0 until 15).foreach(i => log.write(bytes(i))) // log retains 5..14
     drain(Watch.tail(spark, "w_partial", log, startingOffset = Some(10L)),
-      "w_partial_t", Ingest.ephemeralCheckpoint("graft-watch-partial"))
+      "w_partial_t", graft.ScratchDirs.checkpoint("graft-watch-partial"))
     assert(values("w_partial_t") === Seq("10", "11", "12", "13", "14"))
   }
 
@@ -86,14 +86,14 @@ class WatchSpec extends AnyFunSuite {
     val log = new OffsetLog(0, 100)
     recs.foreach(log.write)
     drain(Watch.tail(spark, "w_malformed", log, startingOffset = Some(0L)),
-      "w_malformed_t", Ingest.ephemeralCheckpoint("graft-watch-malformed"))
+      "w_malformed_t", graft.ScratchDirs.checkpoint("graft-watch-malformed"))
     assert(values("w_malformed_t") === recs.map(new String(_, java.nio.charset.StandardCharsets.UTF_8)))
   }
 
   test("graceful stop mid-stream, then checkpointed resume loses nothing (O14)") {
     val log = new OffsetLog(0, 1000)
     (0 until 5).foreach(i => log.write(bytes(i)))
-    val ckpt = Ingest.ephemeralCheckpoint("graft-watch-stop")
+    val ckpt = graft.ScratchDirs.checkpoint("graft-watch-stop")
     // foreachBatch delivery is at-least-once (stop() may land between the
     // batch function and the commit-log write, replaying that batch on
     // resume) — so the sink is an idempotent offset-keyed upsert, the
@@ -172,6 +172,30 @@ class WatchSpec extends AnyFunSuite {
     assert(e.getMessage.contains("w_session_owned"))
   }
 
+  test("a session on an empty log resumes at the log's first offset") {
+    // the log's first write will get offset 5000: "only new events" must
+    // start there, not at latest + 1 = 0 of the empty range, or the
+    // reconnect with the returned cursor is out of range
+    val log = new OffsetLog(5000, 1000)
+    val s1 = Watch.session(spark, "w_empty", log, maxDurationMs = 1000)
+    assert(s1.expired && s1.records.isEmpty)
+    assert(s1.nextOffset === 5000L)
+    (0 until 10).foreach(i => log.write(bytes(i)))
+    val s2 = Watch.session(spark, "w_empty2", log,
+      startingOffset = Some(s1.nextOffset), maxDurationMs = 2000)
+    assert(s2.records.map(_._1) === (5000L until 5010L))
+    assert(s2.nextOffset === 5010L)
+  }
+
+  test("a negative start on an empty log is out of range") {
+    val ex = intercept[Exception] {
+      drain(Watch.tail(spark, "w_negative", new OffsetLog(0, 100), startingOffset = Some(-1L)),
+        "w_negative_t", graft.ScratchDirs.checkpoint("graft-watch-negative"))
+    }
+    val msg = ex.getMessage + Option(ex.getCause).map(_.getMessage).getOrElse("")
+    assert(msg.contains("invalid offset: -1") && msg.contains("OutOfRange"), msg)
+  }
+
   test("a replay batch fans out into bounded input partitions") {
     import graft.sources.{LogCursor, LogTail, LogTailMicroBatchStream, LogTailPartition, OffsetLogRegistry}
     // the factor-100 failure mode: one admitted batch (paced to N/2 rows)
@@ -213,7 +237,7 @@ class WatchSpec extends AnyFunSuite {
     (0 until 20).foreach(i => log.write(bytes(i))) // log retains 10..19
     val ex = intercept[Exception] {
       drain(Watch.tail(spark, "w_purged", log, startingOffset = Some(0L)),
-        "w_purged_t", Ingest.ephemeralCheckpoint("graft-watch-purged"))
+        "w_purged_t", graft.ScratchDirs.checkpoint("graft-watch-purged"))
     }
     assert(ex.getMessage.contains("invalid offset") ||
       Option(ex.getCause).exists(_.getMessage.contains("invalid offset")))

@@ -34,7 +34,7 @@ class WatermarkSpec extends AnyFunSuite {
       .outputMode("append")
       .format("memory")
       .queryName("wm_t")
-      .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-wm-ckpt"))
+      .option("checkpointLocation", graft.ScratchDirs.checkpoint("graft-wm-ckpt"))
       .start()
 
     def emitted(): Map[java.sql.Timestamp, Long] =
@@ -77,7 +77,7 @@ class WatermarkSpec extends AnyFunSuite {
       .outputMode("append")
       .format("memory")
       .queryName("wm_dd")
-      .option("checkpointLocation", Ingest.ephemeralCheckpoint("graft-wmdd-ckpt"))
+      .option("checkpointLocation", graft.ScratchDirs.checkpoint("graft-wmdd-ckpt"))
       .start()
 
     // duplicate within the watermark window → suppressed
