@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions._
  *
  * Each operator is a pure `DataFrame => DataFrame` so it composes with any
  * source (batch parquet, the streaming sink's table) and stays fully
- * declarative — Catalyst pushes the offset predicates into the scan, which
- * at scale is the moral equivalent of the reference's O(1) offset
- * addressing (partition pruning + min/max row-group stats on an
- * offset-sorted table prune everything but the touched ranges).
+ * declarative. Over parquet, Catalyst pushes the offset predicates into
+ * the scan, which at scale is the moral equivalent of the reference's O(1)
+ * offset addressing (partition pruning + min/max row-group stats on an
+ * offset-sorted table prune everything but the touched ranges). Over the
+ * live log (`Ingest.logFrame`) nothing is pushed down: the scan reads
+ * every retained record and the predicates filter them after it.
  *
  * Batch DataFrames carry the log in an `offset` LongType column (the
  * driver testdata's `events.event_id` plays this role; see FIXTURES.md §B).

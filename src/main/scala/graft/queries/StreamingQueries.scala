@@ -420,13 +420,8 @@ object StreamingQueries {
     ) { (spark, dir) =>
       val pace   = Ingest.pacedBatchSize(spark, dir)
       val result = Ingest.run(spark, dir, maxBatchSize = pace, segmentSize = Int.MaxValue / 4)
-      // the query owns the log's registry entry: removed once the
-      // delivered records are detached from the sink
-      val name = StreamRun.uniqueName("graft_stream_tail")
-      val delivered =
-        try StreamRun.detached(StreamRun.drain(graft.streaming.Watch
-          .tail(spark, name, result.log, startingOffset = Some(900L), maxBatchSize = pace)))
-        finally graft.sources.OffsetLogRegistry.remove(name)
+      val delivered = StreamRun.detached(StreamRun.drain(graft.streaming.Watch
+        .tail(spark, "graft_stream_tail", result.log, startingOffset = Some(900L), maxBatchSize = pace)))
       Ingest.parsed(delivered)
         .select(
           col("offset").as("log_offset"),

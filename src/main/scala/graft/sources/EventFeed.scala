@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -173,7 +173,7 @@ final class FeedColumns private (
     eventType: Utf8Column,
     value: Array[Double], valueNull: Array[Boolean],
     props: Utf8Column
-) extends Serializable {
+) extends ShippedRows {
 
   def length: Int = eventId.length
 
@@ -279,28 +279,20 @@ class EventFeedTable(options: CaseInsensitiveStringMap) extends Table with Suppo
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
   // the prefetch was loaded with the TABLE's options: a scan whose options
   // select other rows loads its own instead of serving stale ones
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan =
-        new EventFeedScan(opts, if (FeedSpec.of(opts) == spec) Some(prefetched) else None)
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = () =>
+    new Scan {
+      override def readSchema(): StructType = EventFeed.Schema
+      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+        val s = FeedSpec.of(opts)
+        new EventFeedMicroBatchStream(
+          path = s.path,
+          maxBatchSize =
+            Option(opts.get("maxBatchSize")).map(_.toInt).getOrElse(EventFeed.DefaultMaxBatchSize),
+          startingTimestamp = s.startingTimestamp,
+          maxFeedRows = s.maxFeedRows,
+          prefetched = if (s == spec) Some(prefetched) else None)
+      }
     }
-}
-
-class EventFeedScan(
-    options: CaseInsensitiveStringMap,
-    prefetched: Option[() => FeedColumns] = None) extends Scan {
-  override def readSchema(): StructType = EventFeed.Schema
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    val spec = FeedSpec.of(options)
-    new EventFeedMicroBatchStream(
-      path = spec.path,
-      maxBatchSize =
-        Option(options.get("maxBatchSize")).map(_.toInt).getOrElse(EventFeed.DefaultMaxBatchSize),
-      startingTimestamp = spec.startingTimestamp,
-      maxFeedRows = spec.maxFeedRows,
-      prefetched = prefetched
-    )
-  }
 }
 
 /** Stream offset = count of feed rows emitted so far (dense row index). */
@@ -319,16 +311,12 @@ class EventFeedMicroBatchStream(
   private lazy val feed: FeedColumns =
     prefetched.map(_()).getOrElse(EventFeed.load(path, startingTimestamp, maxFeedRows))
 
-  /** The materialized feed ships to executors ONCE via TorrentBroadcast
-    * (chunked through the block manager) as its primitive and UTF-8
-    * columns; partitions carry only [start,end) indices. Embedding row
-    * slices in the InputPartition instead would ride the task
-    * serialization path — ~4 MiB/task `TaskSetManager` warnings at sf0.1,
-    * and a per-task (not per-executor) transfer at scale. */
+  /** The materialized feed, shipped once ([[Shipped]]) as its primitive
+    * and UTF-8 columns for the stream's whole life. */
   @volatile private var bcShipped = false
   private lazy val bcFeed: org.apache.spark.broadcast.Broadcast[FeedColumns] = {
     bcShipped = true
-    SparkSession.active.sparkContext.broadcast(feed)
+    Shipped.ship(feed)
   }
 
   override def initialOffset(): Offset = FeedPosition(0L)
@@ -361,29 +349,14 @@ class EventFeedMicroBatchStream(
     throw new UnsupportedOperationException(
       "latestOffset(start, limit) is used via SupportsAdmissionControl")
 
+  // one slice per batch, not `Shipped.slices`: the stateful queries
+  // downstream see the batch's rows in feed order
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FeedPosition].n.toInt
     val e = end.asInstanceOf[FeedPosition].n.toInt
     if (e <= s) Array.empty
-    else Array(EventFeedPartition(bcFeed, s, e))
+    else Array(ShippedSlice(bcFeed, s, e))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
-    override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-      val p   = partition.asInstanceOf[EventFeedPartition]
-      val all = p.feed.value
-      new PartitionReader[InternalRow] {
-        private var i = p.start - 1
-        override def next(): Boolean = { i += 1; i < p.end }
-        override def get(): InternalRow = all.row(i)
-        override def close(): Unit = ()
-      }
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory = Shipped
 }
-
-case class EventFeedPartition(
-    feed: org.apache.spark.broadcast.Broadcast[FeedColumns],
-    start: Int,
-    end: Int
-) extends InputPartition

@@ -1,17 +1,15 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
-import java.util.concurrent.ConcurrentHashMap
 
-import graft.streaming.{Ingest, OffsetLog}
+import graft.streaming.{LogView, OffsetLog}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.catalog.TableCapability
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -30,61 +28,34 @@ import org.apache.spark.unsafe.types.UTF8String
  *    restart resumes exactly where the cursor stopped — the stronger analog
  *    of the reference's reconnect-with-offset pattern).
  *
- * Records are (offset, value) with value = the stored CloudEvent bytes —
- * the same line-framed payload EP1 writes to the wire, decoded by
- * [[graft.streaming.Ingest.exactUtf8]] as in the sink table. Logs are
- * addressed through [[OffsetLogRegistry]] (in-process serving construct,
- * like the log itself).
+ * The same table is the log's batch read (`Ingest.logFrame`): it ships the
+ * records of the view `log` had when the table was built, once (and so
+ * holds that view, at most the two segments then retained, as long as the
+ * table lives). Records are (offset, value) with value = the stored
+ * CloudEvent bytes — the same line-framed payload EP1 writes to the wire —
+ * decoded once, by [[LogRecords]], for both reads.
  */
-object OffsetLogRegistry {
-  private val logs = new ConcurrentHashMap[String, OffsetLog]()
-  def register(name: String, log: OffsetLog): Unit = logs.put(name, log)
-  def get(name: String): OffsetLog =
-    Option(logs.get(name)).getOrElse(
-      throw new IllegalArgumentException(s"no OffsetLog registered under '$name'"))
-  def remove(name: String): Unit = logs.remove(name)
-  private[graft] def names: Set[String] = logs.keySet.toArray(Array.empty[String]).toSet
+class LogTailTable(
+    log: OffsetLog,
+    label: String = "log",
+    startingOffset: Option[Long] = None,
+    maxBatchSize: Int = 1000
+) extends ShippedTable(s"log_tail($label)", LogTailTable.Schema, LogRecords.all(log.view)) {
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+  override protected def scan: Scan = new Scan {
+    override def readSchema(): StructType = LogTailTable.Schema
+    override def toBatch(): Batch = batch
+    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+      new LogTailMicroBatchStream(log, startingOffset, maxBatchSize)
+  }
 }
 
-class LogTailProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = LogTail.Schema
-  override def getTable(
-      schema: StructType, partitioning: Array[Transform], properties: util.Map[String, String]): Table =
-    new LogTailTable(new CaseInsensitiveStringMap(properties))
-}
-
-object LogTail {
+object LogTailTable {
   val Schema: StructType = StructType(Seq(
     StructField("offset", LongType, nullable = false),
     StructField("value", StringType, nullable = false)
   ))
-
-  /** Rows per input partition within one micro-batch. At the 512 KiB/record
-    * ceiling a slice is bounded; at the typical ~1 KiB CloudEvent it is
-    * ~64 MiB — one healthy task, so a factor-100 replay batch (2.5M rows)
-    * fans out to ~39 tasks instead of one 1.8 GiB task. */
-  val SliceRows: Int = 65536
-}
-
-class LogTailTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = s"log_tail(${options.get("log")})"
-  override def schema(): StructType = LogTail.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new LogTailScan(opts)
-    }
-}
-
-class LogTailScan(options: CaseInsensitiveStringMap) extends Scan {
-  override def readSchema(): StructType = LogTail.Schema
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new LogTailMicroBatchStream(
-      logName = Option(options.get("log")).getOrElse(
-        throw new IllegalArgumentException("logtail: 'log' option is required")),
-      startingOffset = Option(options.get("startingOffset")).map(_.toLong),
-      maxBatchSize = Option(options.get("maxBatchSize")).map(_.toInt).getOrElse(1000))
 }
 
 /** Stream position = next offset to read (dense log cursor). */
@@ -93,12 +64,10 @@ case class LogCursor(next: Long) extends Offset {
 }
 
 class LogTailMicroBatchStream(
-    logName: String,
+    log: OffsetLog,
     startingOffset: Option[Long],
     maxBatchSize: Int
 ) extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-
-  private def log: OffsetLog = OffsetLogRegistry.get(logName)
 
   /** Resolve the subscribe position — reference `server.go:149-166`: by
     * default only new events (the offset the log's next write gets, also
@@ -122,7 +91,7 @@ class LogTailMicroBatchStream(
   // most recently planned batch (a completed batch is never re-run within
   // the query); stop drains the rest.
   private val shipped =
-    new java.util.ArrayDeque[org.apache.spark.broadcast.Broadcast[LogTailRecords]]()
+    new java.util.ArrayDeque[org.apache.spark.broadcast.Broadcast[LogRecords]]()
 
   override def deserializeOffset(json: String): Offset = LogCursor(json.toLong)
   override def commit(end: Offset): Unit = synchronized {
@@ -156,51 +125,38 @@ class LogTailMicroBatchStream(
     if (e <= s) Array.empty
     else {
       // the window's retained records from one view of the log (a purged
-      // start is skipped, as the page scan skips it, server.go:236-238):
-      // their stored bytes plus the first offset ship via TorrentBroadcast
-      // — the partition descriptor stays tiny instead of dragging
-      // up-to-maxBatchSize records through task serialization (~4 MiB/task
-      // warnings at sf0.1), and nothing is decoded driver-side
-      val window = log.view.from(s)
-      val bytes  = Array.tabulate(math.min(window.length.toLong, e - window.first).toInt)(window.bytes)
-      val bc = org.apache.spark.sql.SparkSession.active.sparkContext
-        .broadcast(LogTailRecords(window.first, bytes))
+      // start is skipped, as the page scan skips it, server.go:236-238),
+      // shipped for this batch and cut into bounded slices: a small live
+      // batch stays one task, a big replay batch fans out
+      val records = LogRecords(log.view.from(s), e)
+      val bc      = Shipped.ship(records)
       synchronized { shipped.addLast(bc) }
-      // split the batch into bounded index slices over the ONE broadcast:
-      // a single partition serializes the whole admitted batch through one
-      // task (1.8 GiB task results at the factor-100 rehearsal, tripping
-      // spark.driver.maxResultSize) and starves every downstream operator
-      // of parallelism. Slice count scales with the batch, not with
-      // cluster size — small live batches stay one task, big replay
-      // batches fan out.
-      val n = bytes.length
-      (0 until n by LogTail.SliceRows)
-        .map(from => LogTailPartition(bc, from, math.min(n, from + LogTail.SliceRows)): InputPartition)
-        .toArray
+      Shipped.slices(bc, 0, records.length)
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
-    override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-      val p    = partition.asInstanceOf[LogTailPartition]
-      val recs = p.rows.value
-      new PartitionReader[InternalRow] {
-        private var i = p.from - 1
-        override def next(): Boolean = { i += 1; i < p.until }
-        override def get(): InternalRow = new GenericInternalRow(Array[Any](
-          recs.first + i, UTF8String.fromBytes(Ingest.exactUtf8(recs.bytes(i)))))
-        override def close(): Unit = ()
-      }
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory = Shipped
 }
 
-/** One planned batch: the stored bytes of the dense offsets from `first`. */
-final case class LogTailRecords(first: Long, bytes: Array[Array[Byte]])
+/** The stored bytes of the dense offsets from `first`, read as
+  * `(offset, value)` rows: nothing is decoded on the driver. */
+final case class LogRecords(first: Long, bytes: Array[Array[Byte]]) extends ShippedRows {
+  def length: Int = bytes.length
+  def row(i: Int): InternalRow = new GenericInternalRow(Array[Any](first + i, LogRecords.utf8(bytes(i))))
+}
 
-/** An index slice `[from, until)` into the batch's shared broadcast. */
-case class LogTailPartition(
-    rows: org.apache.spark.broadcast.Broadcast[LogTailRecords],
-    from: Int,
-    until: Int
-) extends InputPartition
+object LogRecords {
+  /** A builder of every record of `view`. */
+  def all(view: LogView): () => LogRecords = () => LogRecords(view.from(Long.MinValue), view.next)
+
+  /** The records of `suffix` below offset `until`. */
+  def apply(suffix: LogView.Suffix, until: Long): LogRecords = LogRecords(suffix.first,
+    Array.tabulate(math.min(suffix.length.toLong, until - suffix.first).toInt)(suffix.bytes))
+
+  /** `b` when it is valid UTF-8, else `new String(b, UTF_8)`: a record
+    * reads exactly what the JDK decodes, malformed input replaced. */
+  private def utf8(b: Array[Byte]): UTF8String = {
+    val u = UTF8String.fromBytes(b)
+    if (u.isValid) u else UTF8String.fromString(new String(b, UTF_8))
+  }
+}

@@ -1,13 +1,10 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import graft.operators.EventLog
-import graft.sources.EventFeedProvider
+import graft.sources.{EventFeedProvider, LogTailTable, Shipped}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * EP3 — the ingestion pipeline (reference `cmd/server/main.go:63-162`),
@@ -150,56 +147,13 @@ object Ingest {
   }
 
   /** The retained log as a DataFrame of (offset, value) — the queryable sink
-    * table every batch operator (range/point/page/watch replay) runs over.
-    * The stored bytes ship via TorrentBroadcast with only the first offset
-    * beside them (offsets are dense) and the rows materialize in the tasks
-    * as `(first + i, record i)`: no driver-side decode, and no object per
-    * record beyond the log's own. `seq.toDF` would instead plant a
-    * LocalRelation whose rows ride inside every downstream stage's
-    * serialized task binary (the ~4 MiB `DAGScheduler` broadcast warnings
-    * at sf0.1), re-shipped per stage instead of once per executor. */
-  def logFrame(spark: SparkSession, log: OffsetLog): DataFrame = {
-    val all   = log.view.from(Long.MinValue)
-    val first = all.first
-    import spark.implicits._
-    val bytes = scala.collection.immutable.ArraySeq.unsafeWrapArray(Array.tabulate(all.length)(all.bytes))
-    broadcastSlices(spark, bytes)((i, b) => (first + i, exactUtf8(b)))
-      .toDF("offset", "value")
-      .select(col("offset"), col("value").cast(StringType).as("value"))
-  }
-
-  /** `b` when it is valid UTF-8, else the UTF-8 encoding of
-    * `new String(b, UTF_8)` — so a string cast of the result reads exactly
-    * what the JDK decodes, malformed input replaced, record by record —
-    * the one decode of stored bytes, shared by [[logFrame]] and LogTail. */
-  def exactUtf8(b: Array[Byte]): Array[Byte] =
-    if (UTF8String.fromBytes(b).isValid) b else new String(b, UTF_8).getBytes(UTF_8)
-
-  /** Driver-resident `items` as an RDD: the sequence ships ONCE per
-    * executor via TorrentBroadcast and is index-sliced into
-    * `min(n / 8192 + 1, 32)` partitions, whose tasks yield `row(i, items(i))`
-    * for their slice — the tasks carry only their slice bounds.
-    *
-    * Broadcast lifecycle: unlike LogTail's per-micro-batch broadcasts
-    * (destroyed eagerly at commit because the SOURCE holds them alive for
-    * the stream's whole life), this handle's only reference is the
-    * returned RDD's lineage — when the caller drops it it becomes
-    * unreachable and the ContextCleaner reclaims it, the normal Spark
-    * lifecycle for per-frame broadcasts. Destroying it eagerly here would
-    * kill a frame the caller may still hold. */
-  def broadcastSlices[T, R: scala.reflect.ClassTag](spark: SparkSession, items: IndexedSeq[T])(
-      row: (Int, T) => R): org.apache.spark.rdd.RDD[R] = {
-    val bc    = spark.sparkContext.broadcast(items)
-    val parts = math.max(1, math.min(items.length / 8192 + 1, 32))
-    spark.sparkContext
-      .parallelize(0 until parts, parts)
-      .flatMap { p =>
-        val a  = bc.value
-        val lo = (a.length.toLong * p / parts).toInt
-        val hi = (a.length.toLong * (p + 1) / parts).toInt
-        Iterator.range(lo, hi).map(i => row(i, a(i)))
-      }
-  }
+    * table every batch operator (range/point/page/watch replay) runs over:
+    * a batch read of the live log's table ([[graft.sources.LogTailTable]]),
+    * which ships the records the log holds at this call once, with only
+    * the first offset beside them (offsets are dense), and builds the rows
+    * in the tasks. A write after the call does not appear in the frame. */
+  def logFrame(spark: SparkSession, log: OffsetLog): DataFrame =
+    Shipped.read(spark, new LogTailTable(log))
 
   /** Parse stored CloudEvent bytes back to typed columns (O12 / §1.2). */
   def parsed(frame: DataFrame): DataFrame =

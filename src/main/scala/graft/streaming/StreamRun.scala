@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.sources.{HeldRows, Shipped, ShippedTable}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
@@ -15,10 +16,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
  *    `finally`, and deletes the checkpoint once the query has stopped — on
  *    success and on failure (the failure is rethrown). A drained bounded
  *    replay is never restarted, so nothing else needs its checkpoint.
- *    Spark's state-store maintenance may still visit the stopped query's
- *    providers before unloading them; it recreates nothing under the
- *    deleted directory (StreamRunSpec), though the RocksDB provider logs
- *    a warning that the directory is gone.
+ *    Each task unloads its state store once it has committed
+ *    (`unloadOnCommit`), so no provider of a returned replay is left for
+ *    Spark's maintenance pass to visit over the deleted directory
+ *    (StreamRunSpec).
  *  - [[drain]] is [[run]] into a memory sink under a generated name: it
  *    returns the sink's frame and drops the sink's temp view. The frame
  *    holds the analyzed `MemoryPlan`, so it still evaluates after the
@@ -33,9 +34,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 object StreamRun {
 
   private val runId = new AtomicInteger(0)
-
-  /** A name no other run in this JVM uses (memory sinks, registered logs). */
-  def uniqueName(prefix: String): String = s"${prefix}_${runId.incrementAndGet()}"
 
   /** The provider `transformWithState` requires, as a [[withConf]] setting. */
   val RocksDB: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
@@ -82,12 +80,19 @@ object StreamRun {
    * processes a matching pair, and for a watermark-spanning dedup the
    * final batch evicts nothing — there its only effect is evicting state
    * the stop then discards, so the drained sink is row-identical.
+   *
+   * `unloadOnCommit`: a task runs its store's maintenance and unloads it
+   * when it commits, so each stateful batch reloads its store. Without it
+   * a stopped replay's providers stay loaded until the maintenance pass
+   * (60 s by default), which then runs over the deleted checkpoint and,
+   * for RocksDB, logs a `FileNotFoundException` per partition.
    */
   def run(df: DataFrame, statePartitions: Int = 8, noDataBatches: Boolean = true)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
     withConf(df.sparkSession,
       "spark.sql.shuffle.partitions" -> statePartitions.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) {
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString,
+      "spark.sql.streaming.stateStore.unloadOnCommit" -> "true") {
       owned(sink(df.writeStream.trigger(Trigger.AvailableNow())))(_.awaitTermination())
     }
 
@@ -98,7 +103,7 @@ object StreamRun {
       statePartitions: Int = 8,
       noDataBatches: Boolean = true): DataFrame = {
     val spark = df.sparkSession
-    val name  = uniqueName("graft_drain")
+    val name  = s"graft_drain_${runId.incrementAndGet()}"
     try {
       run(df, statePartitions, noDataBatches)(_.outputMode(outputMode).format("memory").queryName(name))
       spark.table(name)
@@ -109,14 +114,13 @@ object StreamRun {
     * sink's rows are embedded in the logical plan, so every downstream
     * stage re-ships them inside its serialized task binary — the session
     * sinks hold ~1M rows at the sf1 rehearsal (2+ MiB task warnings, ×
-    * every stage). Re-shipping via TorrentBroadcast sends the snapshot
-    * once per executor instead; rows materialize inside the tasks
-    * ([[Ingest.broadcastSlices]], as under [[Ingest.logFrame]]), for any
-    * schema. Use for sinks whose cardinality scales with the input
-    * (sessions, per-key updates, a tail's delivered records); a few-row
-    * sink gains nothing. */
-  def detached(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      Ingest.broadcastSlices(df.sparkSession, df.collect().toIndexedSeq)((_, r) => r),
-      df.schema)
+    * every stage). The detached frame reads them by shipped slices
+    * ([[graft.sources.Shipped]], as under [[Ingest.logFrame]]): sent once
+    * per executor, for any schema. Use for sinks whose cardinality scales
+    * with the input (sessions, per-key updates, a tail's delivered
+    * records); a few-row sink gains nothing. */
+  def detached(df: DataFrame): DataFrame = {
+    val rows = HeldRows(df.queryExecution.executedPlan.executeCollect())
+    Shipped.read(df.sparkSession, new ShippedTable("held_rows", df.schema, () => rows))
+  }
 }

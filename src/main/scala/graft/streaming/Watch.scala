@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.{LogTailProvider, OffsetLogRegistry}
+import graft.sources.{LogTailTable, Shipped}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -21,22 +21,15 @@ object Watch {
       nextOffset: Long,
       expired: Boolean)
 
-  /** Register `log` under `name` and open a tail DataFrame over it. */
+  /** A tail DataFrame over `log`; `name` labels its table in the plan. */
   def tail(
       spark: SparkSession,
       name: String,
       log: OffsetLog,
       startingOffset: Option[Long] = None,
       maxBatchSize: Int = 1000
-  ): DataFrame = {
-    OffsetLogRegistry.register(name, log)
-    val r = spark.readStream
-      .format(classOf[LogTailProvider].getName)
-      .option("log", name)
-      .option("maxBatchSize", maxBatchSize)
-    startingOffset.foreach(o => r.option("startingOffset", o.toString))
-    r.load()
-  }
+  ): DataFrame =
+    Shipped.read(spark, new LogTailTable(log, name, startingOffset, maxBatchSize), streaming = true)
 
   /** A watch with the reference's forced stream timeout (`server.go:26-27,70`:
     * streams are cut after 5 minutes and clients reconnect with their last
@@ -57,14 +50,12 @@ object Watch {
     // so the source's start and the fallback cursor are the same offset
     val start = startingOffset.getOrElse(log.view.next)
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]
-    // the session owns its registry entry: removed once its query stopped
-    val finished = try StreamRun.owned(tail(spark, name, log, Some(start), maxBatchSize).writeStream
+    val finished = StreamRun.owned(tail(spark, name, log, Some(start), maxBatchSize).writeStream
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.collect().foreach(r => buf.add((r.getLong(0), r.getString(1))))
           ()
         })(_.awaitTermination(maxDurationMs))
-    finally OffsetLogRegistry.remove(name)
     // in-order delivery ⇒ the buffer is a dense prefix; cursor = last + 1
     val records = buf.toArray(Array.empty[(Long, String)]).toSeq.sortBy(_._1)
     Session(records, records.lastOption.map(_._1 + 1).getOrElse(start), expired = !finished)

@@ -11,7 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `tools.CkptFixture`, which writes a committed fixture — and only
   * `Watch.session`, which picks its own trigger and deadline, starts a
   * stream through `StreamRun.owned` rather than `run`. A new
-  * `checkpointLocation` or `writeStream` anywhere else fails here. */
+  * `checkpointLocation` or `writeStream` anywhere else fails here.
+  *
+  * Likewise for driver-held rows: `graft.sources` alone ships them to
+  * tasks (broadcast once, read by index slices) and alone passes driver
+  * objects to its table providers through `OffsetLogRegistry`. */
 class StreamOwnersSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
@@ -28,6 +32,15 @@ class StreamOwnersSpec extends AnyFunSuite {
       .filter(_._2 > 0)
       .toMap
     finally files.close()
+  }
+
+  test("only graft.sources ships driver-held rows and uses the registry") {
+    assert(uses("OffsetLogRegistry").keySet.filterNot(_.startsWith("sources/")) === Set.empty[String])
+    assert(uses("sparkContext.broadcast") === Map(
+      "sources/Shipped.scala"  -> 1,
+      "operators/Pack.scala"   -> 2, // per-partition bases, not rows
+      "operators/Ann.scala"    -> 2)) // one probe vector, not rows
+    assert(uses(".parallelize(") === Map.empty[String, Int])
   }
 
   test("only the runner and the two named owners set a checkpointLocation") {

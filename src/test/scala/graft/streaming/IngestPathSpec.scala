@@ -92,9 +92,11 @@ class IngestPathSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  // the live log's one schema, for batch reads and tails alike: a stored
+  // record is never null
   private val FrameSchema = StructType(Seq(
     StructField("offset", LongType, nullable = false),
-    StructField("value", StringType, nullable = true)))
+    StructField("value", StringType, nullable = false)))
 
   private def decoded(log: OffsetLog): Seq[(Long, String)] =
     log.snapshot.map { case (o, b) => (o, new String(b, UTF_8)) }
@@ -117,6 +119,18 @@ class IngestPathSpec extends AnyFunSuite {
     (0 until 40000).foreach(i => big.write(s"r$i".getBytes(UTF_8)))
     assert(big.range.earliest > 7)
     assert(frameRows(big) === decoded(big))
+  }
+
+  test("a write after logFrame returns does not appear in the frame") {
+    val log = new OffsetLog(0, 4)
+    (0 until 6).foreach(i => log.write(s"r$i".getBytes(UTF_8)))
+    val want = decoded(log)
+    val df   = Ingest.logFrame(spark, log)
+    // writes that purge a segment and add records, before the first action
+    (6 until 10).foreach(i => log.write(s"r$i".getBytes(UTF_8)))
+    assert(df.schema === FrameSchema)
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq === want)
+    assert(df.count() === want.length.toLong)
   }
 
   test("logFrame of an empty log has zero rows and the same schema") {

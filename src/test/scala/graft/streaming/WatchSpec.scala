@@ -168,8 +168,38 @@ class WatchSpec extends AnyFunSuite {
     // delivery is the timeout test's concern; this one pins ownership
     Watch.session(spark, "w_session_owned", log,
       startingOffset = Some(0L), maxDurationMs = 1000)
-    val e = intercept[IllegalArgumentException](OffsetLogRegistry.get("w_session_owned"))
-    assert(e.getMessage.contains("w_session_owned"))
+    assert(OffsetLogRegistry.names.isEmpty, OffsetLogRegistry.names)
+  }
+
+  test("a tail still streams after its registry entry was removed right after load()") {
+    import graft.sources.OffsetLogRegistry
+    val log = new OffsetLog(0, 100)
+    (0 until 3).foreach(i => log.write(bytes(i)))
+    val tail = Watch.tail(spark, "w_removed", log, startingOffset = Some(0L))
+    // the table resolved its log when Spark built it: the name is not needed
+    // any more (a caller that still removes it changes nothing)
+    OffsetLogRegistry.names.filter(_.contains("w_removed")).foreach(OffsetLogRegistry.remove)
+    OffsetLogRegistry.remove("w_removed")
+    log.write(bytes(3))
+    drain(tail, "w_removed_t", graft.ScratchDirs.checkpoint("graft-watch-removed"))
+    assert(values("w_removed_t") === Seq("0", "1", "2", "3"))
+  }
+
+  test("no registry entry outlives logFrame, Watch.tail, Watch.session or detached") {
+    import graft.sources.OffsetLogRegistry
+    val log = new OffsetLog(0, 100)
+    (0 until 3).foreach(i => log.write(bytes(i)))
+    val frame = Ingest.logFrame(spark, log)
+    assert(OffsetLogRegistry.names.isEmpty, "after logFrame")
+    val tail = Watch.tail(spark, "w_entries", log, startingOffset = Some(0L))
+    assert(OffsetLogRegistry.names.isEmpty, "after Watch.tail")
+    Watch.session(spark, "w_entries_session", log, startingOffset = Some(0L), maxDurationMs = 500)
+    assert(OffsetLogRegistry.names.isEmpty, "after Watch.session")
+    val held = StreamRun.detached(frame)
+    assert(OffsetLogRegistry.names.isEmpty, "after detached")
+    drain(tail, "w_entries_t", graft.ScratchDirs.checkpoint("graft-watch-entries"))
+    assert(values("w_entries_t") === Seq("0", "1", "2"))
+    assert(held.collect().map(_.getString(1)).toSeq === Seq("0", "1", "2"))
   }
 
   test("a session on an empty log resumes at the log's first offset") {
@@ -197,7 +227,7 @@ class WatchSpec extends AnyFunSuite {
   }
 
   test("a replay batch fans out into bounded input partitions") {
-    import graft.sources.{LogCursor, LogTail, LogTailMicroBatchStream, LogTailPartition, OffsetLogRegistry}
+    import graft.sources.{LogCursor, LogTailMicroBatchStream, Shipped, ShippedSlice}
     // the factor-100 failure mode: one admitted batch (paced to N/2 rows)
     // planned as ONE partition serialized ~1.8 GiB through a single task.
     // Pin the fix: slices of <= SliceRows rows over the shared broadcast,
@@ -206,30 +236,27 @@ class WatchSpec extends AnyFunSuite {
     val log = new OffsetLog(0, 200000)
     val rec = "x".getBytes("UTF-8")
     (0 until n).foreach(_ => log.write(rec))
-    OffsetLogRegistry.register("w_slices", log)
+    val stream = new LogTailMicroBatchStream(log, Some(0L), maxBatchSize = n)
+    spark.sparkContext // force session init so the broadcast has a context
+    val parts = stream.planInputPartitions(LogCursor(0), LogCursor(n.toLong))
     try {
-      val stream = new LogTailMicroBatchStream("w_slices", Some(0L), maxBatchSize = n)
-      spark.sparkContext // force session init so the broadcast has a context
-      val parts = stream.planInputPartitions(LogCursor(0), LogCursor(n.toLong))
-      try {
-        val slices = parts.map(_.asInstanceOf[LogTailPartition])
-        assert(parts.length === math.ceil(n.toDouble / LogTail.SliceRows).toInt)
-        assert(slices.forall(p => p.until - p.from <= LogTail.SliceRows))
-        assert(slices.map(p => p.until - p.from).sum === n)
-        // reader fidelity across slice boundaries: offsets dense, in order
-        val factory = stream.createReaderFactory()
-        val offsets = slices.flatMap { p =>
-          val r   = factory.createReader(p)
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-          while (r.next()) buf += r.get().getLong(0)
-          r.close()
-          buf
-        }
-        assert(offsets.toSeq === (0L until n.toLong))
-        // a small live batch stays one task
-        assert(stream.planInputPartitions(LogCursor(0), LogCursor(50)).length === 1)
-      } finally stream.stop()
-    } finally OffsetLogRegistry.remove("w_slices")
+      val slices = parts.map(_.asInstanceOf[ShippedSlice])
+      assert(parts.length === math.ceil(n.toDouble / Shipped.SliceRows).toInt)
+      assert(slices.forall(p => p.until - p.from <= Shipped.SliceRows))
+      assert(slices.map(p => p.until - p.from).sum === n)
+      // reader fidelity across slice boundaries: offsets dense, in order
+      val factory = stream.createReaderFactory()
+      val offsets = slices.flatMap { p =>
+        val r   = factory.createReader(p)
+        val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+        while (r.next()) buf += r.get().getLong(0)
+        r.close()
+        buf
+      }
+      assert(offsets.toSeq === (0L until n.toLong))
+      // a small live batch stays one task
+      assert(stream.planInputPartitions(LogCursor(0), LogCursor(50)).length === 1)
+    } finally stream.stop()
   }
 
   test("watch from a purged offset errors (server_test.go:350-359)") {
