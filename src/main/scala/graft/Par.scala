@@ -32,10 +32,12 @@ package graft
  * submit and re-applied inside the worker, so concurrent jobs stay
  * correctly attributed in the UI regardless of thread reuse.
  *
- * Failure contract: if the caller-thread leg throws, the async legs are
- * cancelled if not yet started and AWAITED if running (their failures
- * swallowed — sequential code would never have reached them), so no
- * detached Spark job keeps running behind a propagated exception.
+ * Failure contract: if the caller-thread leg throws, the Spark jobs of
+ * the async legs are cancelled (each call tags its legs' jobs), each leg
+ * is awaited for at most [[DrainBoundMs]] (its failure swallowed —
+ * sequential code would never have reached it), and the caller's
+ * exception is rethrown. A leg wedged outside Spark therefore delays the
+ * rethrow by the bound at most, never indefinitely.
  */
 object Par {
 
@@ -44,12 +46,19 @@ object Par {
     java.util.concurrent.Executors.newCachedThreadPool(
       (r: Runnable) => { val t = new Thread(r, "graft-par"); t.setDaemon(true); t })
 
+  /** How long a failed caller leg waits for each async leg after
+    * cancelling their jobs, before rethrowing. */
+  val DrainBoundMs: Long = 5000L
+
   /** Spark local properties worth carrying from the submitting thread to
     * the pool thread (job attribution + scheduling; the same set Spark's
-    * own `InheritableThread` docs call out). */
+    * own `InheritableThread` docs call out), plus the job tags, so a
+    * nested call's legs carry the tags of every enclosing call. */
   private val SparkLocalProps = Seq(
     "spark.jobGroup.id", "spark.job.description",
-    "spark.job.interruptOnCancel", "spark.scheduler.pool")
+    "spark.job.interruptOnCancel", "spark.scheduler.pool", "spark.job.tags")
+
+  private val calls = new java.util.concurrent.atomic.AtomicLong()
 
   private def activeContext: Option[org.apache.spark.SparkContext] =
     org.apache.spark.sql.SparkSession.getActiveSession
@@ -57,8 +66,9 @@ object Par {
       .map(_.sparkContext)
       .filterNot(_.isStopped)
 
-  /** Submit a thunk carrying the caller's Spark job attribution. */
-  private def submit[A](body: => A): java.util.concurrent.Future[A] = {
+  /** Submit a thunk carrying the caller's Spark job attribution, its
+    * jobs tagged with `tag`. */
+  private def submit[A](tag: String)(body: => A): java.util.concurrent.Future[A] = {
     val captured: Seq[(String, String)] = activeContext match {
       case Some(sc) => SparkLocalProps.flatMap(k => Option(sc.getLocalProperty(k)).map(k -> _))
       case None     => Nil
@@ -69,6 +79,7 @@ object Par {
           // pool threads are reused: pin the submitter's attribution for
           // this leg, then clear it so the next tenant starts clean
           captured.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+          sc.addJobTag(tag)
           try body
           finally SparkLocalProps.foreach(k => sc.setLocalProperty(k, null))
         case None => body
@@ -76,37 +87,43 @@ object Par {
     })
   }
 
-  /** Run `a` on the caller thread; on failure AWAIT the async legs before
-    * rethrowing so no Spark job keeps running detached behind the
-    * propagated exception (their own failures are swallowed — sequential
-    * code would never have reached them). No cancel(): the cached pool
-    * hands every task to a thread at submit (no queue, so there is no
-    * not-yet-started task to prevent), and FutureTask.cancel marks a
-    * RUNNING task cancelled without stopping it — get() would then return
-    * immediately while the leg's job kept running, exactly the detached
-    * work this drain exists to prevent. */
-  private def callerLeg[A](a: => A, outstanding: java.util.concurrent.Future[_]*): A =
+  /** Run `a` on the caller thread; on failure cancel the Spark jobs
+    * tagged `tag` (the async legs' — a cancelled job fails its action at
+    * once, so the leg returns), await each leg for at most
+    * [[DrainBoundMs]] (failures swallowed — sequential code would never
+    * have reached them) and rethrow. FutureTask.cancel would not do: it
+    * marks a RUNNING task cancelled without stopping it, so the leg's job
+    * would keep running detached. */
+  private def callerLeg[A](tag: String, a: => A,
+      outstanding: java.util.concurrent.Future[_]*): A =
     try a
     catch {
       case e: Throwable =>
+        activeContext.foreach(_.cancelJobsWithTag(tag))
         outstanding.foreach { f =>
-          try { f.get(); () } catch { case _: Throwable => () }
+          try { f.get(DrainBoundMs, java.util.concurrent.TimeUnit.MILLISECONDS); () }
+          catch { case _: Throwable => () }
         }
         throw e
     }
 
+  /** A job tag unique to one [[both]]/[[all3]] call. */
+  private def newTag(): String = s"graft-par-${calls.incrementAndGet()}"
+
   /** Evaluate two independent thunks concurrently; return both. */
   def both[A, B](a: => A, b: => B): (A, B) = {
-    val fb = submit(b)
-    val ra = callerLeg(a, fb) // caller thread does half the work — one pool leg for the pair
+    val tag = newTag()
+    val fb = submit(tag)(b)
+    val ra = callerLeg(tag, a, fb) // caller thread does half the work — one pool leg for the pair
     (ra, join(fb))
   }
 
   /** Evaluate three independent thunks concurrently; return all three. */
   def all3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val fb = submit(b)
-    val fc = submit(c)
-    val ra = callerLeg(a, fb, fc)
+    val tag = newTag()
+    val fb = submit(tag)(b)
+    val fc = submit(tag)(c)
+    val ra = callerLeg(tag, a, fb, fc)
     (ra, join(fb), join(fc))
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
  * Approximate nearest-neighbor search over an `ARRAY<FLOAT>` embedding
  * column (no reference analog — extended training-data surface).
  *
- * Two paths:
+ * One ranking path per family:
  *  - [[bruteForceTopK]] — exact cosine scan + `orderBy().limit(k)`;
  *    Catalyst plans TakeOrderedAndProject (per-partition heap, K-row
  *    merge), so the only cost is the scan itself. Correctness baseline.
@@ -16,13 +16,19 @@ import org.apache.spark.sql.functions._
  *    signature (sign of ⟨v, rⱼ⟩ per plane); the probe explodes into its own
  *    bucket plus all hamming-1 neighbors (multiprobe) and joins on the
  *    bucket, so only matching buckets are scanned before the exact rerank.
+ *  - the index families — IVF, PQ, IVFADC (raw or residual codes) and
+ *    shard-local NSW graphs — rank ONLY through their `*QueryIndex` over a
+ *    `*BuildIndex` frame: query = prune (cells, shortlist, graph beam),
+ *    then exact rerank. An ad-hoc top-k is the query over the in-memory
+ *    build; a serving deployment writes the build once and queries the
+ *    reloaded frame.
  *
  * Scale story (100 TB): signatures are a narrow map (HOF dot products with
  * literal plane vectors, codegen'd). Bucketing the table by `bucket` (or
  * partitioning the Parquet layout on it) turns the probe join into a
  * pruned scan of ~(H+1)/2^H of the data; the rerank cost is per-bucket.
- * The probe side is always a broadcast. An IVF variant (k-means coarse
- * quantizer) swaps the signature for a centroid id — same join shape.
+ * The cell-partitioned IVF layouts make the nprobe cut parquet partition
+ * pruning in the same way.
  */
 object Ann {
 
@@ -62,11 +68,11 @@ object Ann {
       s"probe id $probeId not found in column '$idCol'")
 
   /** The 1-row probe frame for `probeId` under `projection`, validated to
-    * exist: a silent empty probe would make every top-k below return 0 rows
-    * instead of surfacing the caller's bad id. The pushed-filter point
-    * lookup runs ONCE — the row is collected and re-lifted as a local
-    * relation, so the downstream broadcast join never re-scans the corpus
-    * for the probe. */
+    * exist: a silent empty probe would make the brute-force and LSH top-k
+    * return 0 rows instead of surfacing the caller's bad id. The
+    * pushed-filter point lookup runs ONCE — the row is collected and
+    * re-lifted as a local relation, so the downstream broadcast join never
+    * re-scans the corpus for the probe. */
   private def probeFrame(
       emb: DataFrame, probeId: Long, idCol: String, projection: Seq[Column]): DataFrame = {
     val lookup = emb.filter(col(idCol) === probeId).select(projection: _*).limit(1)
@@ -113,7 +119,7 @@ object Ann {
    * for the fit (a hash-of-id predicate cannot prune row groups, so
    * without the cache every iteration would still scan the full corpus
    * to re-derive the ~4k rows) and unpersisted before returning.
-   * Assignment ([[assignCentroid]] / [[ivfTopK]]) always runs over the
+   * Assignment ([[assignCentroid]] / [[ivfBuildIndex]]) always runs over the
    * FULL corpus; corpora already at-or-under the cap train on everything
    * (all current test SFs — the sf1 slice is the first to sample).
    */
@@ -218,18 +224,11 @@ object Ann {
       col(vecCol), typedLit(flat), typedLit(ccs)))
   }
 
-  /**
-   * IVF approximate top-k: scan only the `nprobe` inverted lists nearest
-   * to the probe (centroid ranking is driver-side math on the C×dim model),
-   * exact cosine rerank inside them. Same output schema as
-   * [[bruteForceTopK]]. At scale the table is written partitioned/bucketed
-   * by `cid`, so the filter is partition pruning — I/O ∝ nprobe/C.
-   */
   /** The `nprobe` cell ids nearest to the probe, ranked by squared L2
-    * accumulated left-to-right (ties → lower cid). ONE shared fold for
-    * [[ivfTopK]] and [[ivfQueryIndex]] — the literal-centroid oracle
-    * replay depends on this exact float-op order, so the two paths must
-    * not drift apart. */
+    * accumulated left-to-right (ties → lower cid). ONE fold for every
+    * cell cut ([[ivfQueryIndex]], [[ivfPqShortlist]],
+    * [[residualAdcTables]]) — the literal-centroid oracle replays depend
+    * on this exact float-op order. */
   private def nearestCells(centroids: Array[Array[Double]],
       probeVec: Array[Double], nprobe: Int): Seq[Int] =
     centroids.zipWithIndex
@@ -240,31 +239,15 @@ object Ann {
       .sortBy { case (j, d) => (d, j) }
       .take(nprobe).map(_._1).toIndexedSeq
 
-  def ivfTopK(
-      emb: DataFrame, probeId: Long, k: Int,
-      centroids: Array[Array[Double]], nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val assigned = assignCentroid(emb, centroids, vecCol)
-    val nearCids = nearestCells(centroids, probeVector(emb, probeId, idCol, vecCol), nprobe)
-    val probe = probeFrame(emb, probeId, idCol, probeVecNorm(vecCol))
-    assigned
-      .where(col("cid").isin(nearCids.toIndexedSeq: _*))
-      .crossJoin(broadcast(probe))
-      .select(col(idCol),
-        round(Similarity.cosineVsProbe(col(vecCol), col("p"), col("p_norm")), 4).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
-
   /**
-   * Persist half of the IVF serving pair: assign every vector to its
-   * coarse cell once and emit `(cid, idCol, vecCol)`. Write with
-   * `.partitionBy("cid")` so [[ivfQueryIndex]]'s nprobe cell filter is
-   * partition PRUNING at the source (I/O ∝ nprobe/C — the layout
-   * [[ivfTopK]]'s scaladoc promises, materialized). The C×dim model
-   * itself travels via [[centroidsToDF]]/[[centroidsFromDF]]; together
-   * the two frames are the whole index — rebuildable, diffable, and
-   * readable by any parquet consumer.
+   * Build half of the IVF pair: assign every vector to its coarse cell
+   * once and emit `(cid, idCol, vecCol)`. Query it in memory for an
+   * ad-hoc top-k, or write it with `.partitionBy("cid")` so
+   * [[ivfQueryIndex]]'s nprobe cell filter is partition PRUNING at the
+   * source (I/O ∝ nprobe/C). The C×dim model itself travels via
+   * [[codebooksToDF]] as a one-subspace codebook; together the two
+   * frames are the whole index — rebuildable, diffable, and readable by
+   * any parquet consumer.
    */
   def ivfBuildIndex(
       emb: DataFrame, centroids: Array[Array[Double]],
@@ -272,37 +255,51 @@ object Ann {
     assignCentroid(emb, centroids, vecCol)
       .select(col("cid"), col(idCol), col(vecCol))
 
-  /** The fitted quantizer as a 2-column frame `(cid, centroid)`. */
-  def centroidsToDF(spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Double]]): DataFrame = {
+  /** A fitted quantizer model as the 3-column frame `(sub, code,
+    * centroid)`: `books(s)(j)` is codeword j of subspace s. PQ codebooks
+    * store one subspace per slice of the vector; an IVF quantizer is a
+    * codebook with ONE subspace (`Array(centroids)`). */
+  def codebooksToDF(spark: org.apache.spark.sql.SparkSession,
+      books: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (cv, cid) => (cid, cv.toSeq) }.toSeq
-      .toDF("cid", "centroid")
+    (for {
+      (book, s) <- books.zipWithIndex
+      (cv, j)   <- book.zipWithIndex
+    } yield (s, j, cv.toSeq)).toSeq.toDF("sub", "code", "centroid")
   }
 
-  /** Inverse of [[centroidsToDF]]: the model back as an ordered array.
-    * Fails loud on a gapped or duplicated cid set — positional indexing
-    * below would otherwise silently misattribute every cell after the
-    * gap and [[ivfQueryIndex]] would prune the wrong lists. */
-  def centroidsFromDF(df: DataFrame): Array[Array[Double]] = {
-    val rows = df.select(col("cid").cast("int"), col("centroid").cast("array<double>"))
+  /** Inverse of [[codebooksToDF]]; fails loud on a gapped/duplicated
+    * (sub, code) grid or ragged centroid widths — positional indexing
+    * (cell pruning, the ADC table) would otherwise silently misattribute
+    * every codeword after the gap. */
+  def codebooksFromDF(df: DataFrame): Array[Array[Array[Double]]] = {
+    val rows = df.select(col("sub").cast("int"), col("code").cast("int"),
+        col("centroid").cast("array<double>"))
       .collect()
-      .sortBy(_.getInt(0))
-    val cids = rows.map(_.getInt(0)).toSeq
-    require(cids == (0 until rows.length),
-      s"model frame cids must be dense 0..${rows.length - 1}, got $cids")
-    rows.map(_.getSeq[Double](1).toArray)
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
+    val bySub = rows.groupBy(_._1._1)
+    val m = bySub.size
+    require(bySub.keySet == (0 until m).toSet,
+      s"codebook frame subs must be dense 0..${m - 1}, got ${bySub.keySet.toSeq.sorted}")
+    val books = (0 until m).map { s =>
+      val entries = bySub(s).sortBy(_._1._2)
+      val codes   = entries.map(_._1._2).toSeq
+      require(codes == (0 until entries.length),
+        s"subspace $s codes must be dense 0..${entries.length - 1}, got $codes")
+      entries.map(_._2)
+    }
+    val widths = books.flatMap(_.map(_.length)).distinct
+    require(widths.size == 1, s"ragged centroid widths across the grid: $widths")
+    books.map(_.toArray).toArray
   }
 
   /**
-   * Probe a prebuilt [[ivfBuildIndex]] index without re-assigning
-   * anything: rank the centroids driver-side (same fold order as
-   * [[ivfTopK]]), prune to the `nprobe` nearest cells — partition
-   * pruning when the index was written `partitionBy("cid")` — and
-   * exact-cosine rerank inside them against the literal probe vector.
-   * With the same model and corpus this reproduces [[ivfTopK]]'s rows;
-   * the probe need not be a corpus member (the serving case).
+   * IVF top-k over an [[ivfBuildIndex]] frame (in memory or reloaded):
+   * rank the centroids driver-side, prune to the `nprobe` nearest cells
+   * — partition pruning when the index was written `partitionBy("cid")`
+   * — and exact-cosine rerank inside them against the literal probe
+   * vector. Same output schema as [[bruteForceTopK]]; the probe need not
+   * be a corpus member (the serving case).
    */
   def ivfQueryIndex(
       index: DataFrame, centroids: Array[Array[Double]],
@@ -327,12 +324,10 @@ object Ann {
    * independent `ksub`-centroid quantizer per subspace, so a vector
    * compresses to `m` small codes (m·log₂ksub bits instead of D·32) while
    * distances remain computable in the COMPRESSED domain via per-subspace
-   * lookup tables ([[pqTopK]]). This is the 100 TB embedding-serving
-   * shape: a 2M×64-float corpus becomes 2M×m bytes, and in the PERSISTED
-   * serving pair ([[pqBuildIndex]]/[[pqQueryIndex]]) the scan that ranks
-   * candidates reads codes only, never raw vectors ([[pqTopK]], the
-   * compute-path variant, carries the raw vector through its ranking
-   * select — it is already scanning them to encode).
+   * lookup tables ([[pqAdcTable]]). This is the 100 TB embedding-serving
+   * shape: a 2M×64-float corpus becomes 2M×m bytes, and the
+   * [[pqBuildIndex]]/[[pqQueryIndex]] pair ranks candidates from the codes
+   * only, never the raw vectors.
    *
    * Each subspace fit REUSES [[ivfFit]]'s Lloyd loop verbatim on the
    * sliced subvector column ([[ivfFitFromTrain]]) — deterministic
@@ -488,106 +483,33 @@ object Ann {
     }
   }
 
-  /**
-   * PQ approximate top-k with exact rerank: rank the WHOLE corpus by the
-   * asymmetric compressed-domain distance — `adc = Σ_s tab(s)(codes(s))`,
-   * an m-term lookup sum over the codes column, zero vector math — keep
-   * the best `shortlist` ids, then exact-cosine rerank only those against
-   * the probe. Output schema `(vec_id, adc, sim)`, top-k by exact sim.
-   *
-   * The ADC sum is the scale story, but the m-bytes-per-row ranking scan
-   * belongs to the PERSISTED pair ([[pqBuildIndex]]/[[pqQueryIndex]],
-   * which rank from the codes frame alone): this compute-path variant
-   * carries `vecCol` through the ranking select so the fused
-   * encode→rank→rerank plan needs no join back — it reads the raw
-   * vectors it is already encoding. The exact rerank touches `shortlist`
-   * rows either way, so recall is the only thing the compression trades;
-   * the certified IVF cell pruning composes in front of the scan
-   * unchanged (filter nprobe cells, then ADC-rank inside them).
-   */
   /** The ADC sum `Σ_s tab(s)(codes(s))` over a `codes` column as ONE
     * compiled loop (`graft_adc`, [[graft.expressions.AdcSum]]): the
     * 0.0-seeded left fold matches the oracle's list_aggregate order
     * (m float adds, same sequence both engines). The former
     * zip_with+aggregate formulation was two INTERPRETED higher-order
     * functions per row in the one pass whose 100 TB story is "reads m
-    * bytes per row" (round-14 fix family). ONE shared definition for
-    * [[pqTopK]] / [[pqQueryIndex]] / [[ivfPqTopK]] — the literal-codebook
-    * replay depends on this exact float-op order, so the three paths must
-    * not drift apart. */
+    * bytes per row" (round-14 fix family). */
   private def adcColumn(tab: Array[Array[Double]]): Column =
     call_function("graft_adc", col("codes"),
       typedLit(tab.flatten.toSeq), lit(tab.head.length))
 
-  def pqTopK(
-      emb: DataFrame, probeId: Long, k: Int,
-      codebooks: Array[Array[Array[Double]]],
-      shortlist: Int = 50,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probeVec = probeVector(emb, probeId, idCol, vecCol)
-    val tab      = pqAdcTable(codebooks, probeVec)
-    val probeLit = array(probeVec.toIndexedSeq.map(lit): _*)
-    pqEncode(emb, codebooks, vecCol)
+  /** The ranking pass of every PQ-family query: the `shortlist` rows of a
+    * codes frame with the smallest unrounded `adcExpr` (ties → lower id),
+    * as `(idCol, adc)`. NULLS LAST + post-limit filter ≡ a pre-limit
+    * isNotNull filter (non-null rows fill the cut first), but the filter
+    * cannot be pushed through a limit — a pre-limit filter gets pushed
+    * BELOW the projection and re-evaluates the ADC chain per row inside
+    * the scan predicate (plan-inspected, round 15). A NULL code element
+    * nulls adc; such a row ranks nowhere. */
+  private def adcShortlist(
+      codes: DataFrame, adcExpr: Column, shortlist: Int, idCol: String): DataFrame =
+    codes
       .where(col("codes").isNotNull)
-      .select(col(idCol), adcColumn(tab).as("adc"), col(vecCol))
-      // NULLS LAST + post-limit filter ≡ a pre-limit isNotNull filter
-      // (non-null rows fill the cut first), but the filter cannot be
-      // pushed through a limit — a pre-limit filter gets pushed BELOW the
-      // projection and re-evaluates the whole encode+ADC chain per row
-      // inside the scan predicate (plan-inspected, round 15). A NULL
-      // code element nulls adc; such a row ranks nowhere.
+      .select(col(idCol), adcExpr.as("adc"))
       .orderBy(col("adc").asc_nulls_last, col(idCol))
       .limit(shortlist)
       .where(col("adc").isNotNull)
-      .select(col(idCol), round(col("adc"), 4).as("adc"),
-        round(Similarity.cosineSimilarity(col(vecCol).cast("array<double>"), probeLit), 4)
-          .as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /**
-   * IVFADC — the classic serving pair assembled (Jégou et al. 2011 §IV):
-   * the coarse quantizer prunes the scan to the `nprobe` inverted lists
-   * nearest the probe ([[ivfTopK]]'s cell filter — partition pruning when
-   * the corpus is laid out `partitionBy("cid")`), and INSIDE those lists
-   * ranking is the compressed-domain ADC sum ([[pqTopK]]'s lookup scan),
-   * with the exact-cosine rerank only on the `shortlist` winners. I/O at
-   * scale: (nprobe/C of the corpus) × (m code bytes per row) for the
-   * ranking pass, `shortlist` raw vectors for the rerank. Same output
-   * schema and tie rules as [[pqTopK]]; both quantizers stay independent
-   * here (codes are of RAW vectors — [[ivfPqResTopK]] is the
-   * residual-refined variant Jégou §IV actually prescribes; this one is
-   * kept as the simpler composition whose oracle needs no chaining).
-   */
-  def ivfPqTopK(
-      emb: DataFrame, probeId: Long, k: Int,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]],
-      nprobe: Int = 4, shortlist: Int = 50,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probeVec = probeVector(emb, probeId, idCol, vecCol)
-    val nearCids = nearestCells(centroids, probeVec, nprobe)
-    val tab      = pqAdcTable(codebooks, probeVec)
-    val probeLit = array(probeVec.toIndexedSeq.map(lit): _*)
-    pqEncode(assignCentroid(emb, centroids, vecCol), codebooks, vecCol)
-      .where(col("cid").isin(nearCids.toIndexedSeq: _*)) // null cid (null vec) never matches
-      .select(col(idCol), adcColumn(tab).as("adc"), col(vecCol))
-      // NULLS LAST + post-limit filter ≡ a pre-limit isNotNull filter
-      // (non-null rows fill the cut first), but the filter cannot be
-      // pushed through a limit — a pre-limit filter gets pushed BELOW the
-      // projection and re-evaluates the whole encode+ADC chain per row
-      // inside the scan predicate (plan-inspected, round 15). A NULL
-      // code element nulls adc; such a row ranks nowhere.
-      .orderBy(col("adc").asc_nulls_last, col(idCol))
-      .limit(shortlist)
-      .where(col("adc").isNotNull)
-      .select(col(idCol), round(col("adc"), 4).as("adc"),
-        round(Similarity.cosineSimilarity(col(vecCol).cast("array<double>"), probeLit), 4)
-          .as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
 
   // ----- residual IVFADC (Jégou et al. 2011 §IV, the full refinement) ------
 
@@ -659,50 +581,12 @@ object Ann {
     }
 
   /**
-   * Residual IVFADC top-k — [[ivfPqTopK]] with the §IV refinement: the
-   * nprobe cell cut is unchanged, but inside the visited lists the codes
-   * quantize RESIDUALS ([[pqFitResidual]]'s books) and each list ranks by
-   * its own probe-residual table ([[residualAdcTables]]). Same output
-   * schema, tie rules, and exact-cosine rerank as [[ivfPqTopK]]; same
-   * plan shape (assign → cell filter → fused subtract+encode projection →
-   * ADC scan → two TakeOrdereds, zero shuffles). The oracle chains
-   * literal-centroid assignment → literal subtraction → literal-codebook
-   * encode → per-cell literal-table ADC, so the whole refined path stays
-   * hash-checked downstream of the fits.
-   */
-  def ivfPqResTopK(
-      emb: DataFrame, probeId: Long, k: Int,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]],
-      nprobe: Int = 4, shortlist: Int = 50,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probeVec = probeVector(emb, probeId, idCol, vecCol)
-    val nearCids = nearestCells(centroids, probeVec, nprobe)
-    val tabs     = residualAdcTables(centroids, codebooks, probeVec, nprobe)
-    val probeLit = array(probeVec.toIndexedSeq.map(lit): _*)
-    pqEncode(
-      assignCentroid(emb, centroids, vecCol)
-        .where(col("cid").isin(nearCids.toIndexedSeq: _*)) // fused codegen encodes only survivors
-        .withColumn("_res", residualColumn(col(vecCol), col("cid"), centroids)),
-      codebooks, "_res")
-      .select(col(idCol), perCellAdc(tabs).as("adc"), col(vecCol))
-      .orderBy(col("adc").asc_nulls_last, col(idCol)) // see pqTopK's NULLS LAST note
-      .limit(shortlist)
-      .where(col("adc").isNotNull)
-      .select(col(idCol), round(col("adc"), 4).as("adc"),
-        round(Similarity.cosineSimilarity(col(vecCol).cast("array<double>"), probeLit), 4)
-          .as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
-
-  /**
-   * Persist half of the PQ serving pair: encode every vector once and emit
+   * Build half of the PQ pair: encode every vector once and emit
    * `(idCol, codes)` — the whole corpus at m·4 bytes of code payload per
    * row (vs D·4 for the raw floats). [[pqQueryIndex]] ranks from THIS
-   * frame alone; raw vectors are touched only for the shortlist rerank.
-   * The m×ksub×dsub model travels via [[pqCodebooksToDF]]/
-   * [[pqCodebooksFromDF]]; together the two frames are the whole index —
+   * frame alone (in memory or reloaded); raw vectors are touched only
+   * for the shortlist rerank. The m×ksub×dsub model travels via
+   * [[codebooksToDF]]; together the two frames are the whole index —
    * rebuildable, diffable, readable by any parquet consumer.
    */
   def pqBuildIndex(
@@ -772,13 +656,10 @@ object Ann {
       .join(broadcast(tombstones.select(idCol)), Seq(idCol), "left_anti")
     val liveCids = survivors.select(col("cid").cast("int")).distinct()
       .collect().map(_.getInt(0)).toSet
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try survivors.write.mode("overwrite").partitionBy("cid").parquet(indexPath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // a writer option, not the session conf: other writes in the session
+    // keep their own overwrite mode
+    survivors.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("cid").parquet(indexPath)
     // fully-emptied cells: dynamic overwrite wrote nothing for them, so
     // their stale directories must go explicitly
     val emptied = hitCids.filterNot(liveCids)
@@ -793,73 +674,30 @@ object Ann {
     hitCids
   }
 
-  /** The fitted codebooks as a 3-column frame `(sub, code, centroid)`. */
-  def pqCodebooksToDF(spark: org.apache.spark.sql.SparkSession,
-      codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    import spark.implicits._
-    (for {
-      (book, s) <- codebooks.zipWithIndex
-      (cv, j)   <- book.zipWithIndex
-    } yield (s, j, cv.toSeq)).toSeq.toDF("sub", "code", "centroid")
-  }
-
-  /** Inverse of [[pqCodebooksToDF]]; fails loud on a gapped/duplicated
-    * (sub, code) grid or ragged centroid widths — positional indexing in
-    * the ADC table would otherwise silently misattribute every codeword
-    * after the gap. */
-  def pqCodebooksFromDF(df: DataFrame): Array[Array[Array[Double]]] = {
-    val rows = df.select(col("sub").cast("int"), col("code").cast("int"),
-        col("centroid").cast("array<double>"))
-      .collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-    val bySub = rows.groupBy(_._1._1)
-    val m = bySub.size
-    require(bySub.keySet == (0 until m).toSet,
-      s"codebook frame subs must be dense 0..${m - 1}, got ${bySub.keySet.toSeq.sorted}")
-    val books = (0 until m).map { s =>
-      val entries = bySub(s).sortBy(_._1._2)
-      val codes   = entries.map(_._1._2).toSeq
-      require(codes == (0 until entries.length),
-        s"subspace $s codes must be dense 0..${entries.length - 1}, got $codes")
-      entries.map(_._2)
-    }
-    val widths = books.flatMap(_.map(_.length)).distinct
-    require(widths.size == 1, s"ragged centroid widths across the grid: $widths")
-    books.map(_.toArray).toArray
-  }
-
   /**
-   * Probe a prebuilt [[pqBuildIndex]] index: rank every row by the ADC
-   * lookup sum over the CODES FRAME ALONE (the raw-vector column never
-   * enters the ranking scan — at 100 TB that pass reads m·4 bytes/row),
-   * collect the ≤`shortlist` winning ids (bounded, the probe-result
-   * class of driver collect), and exact-cosine rerank them against
-   * `corpus` through a pushed `In(id, …)` point filter — parquet
-   * row-group pruning, not a scan. With the same model and corpus this
-   * reproduces [[pqTopK]]'s rows exactly: same unrounded-adc shortlist
-   * cut, same tie rule, same rerank fold.
+   * PQ top-k over a [[pqBuildIndex]] frame (in memory or reloaded): rank
+   * every row by the ADC lookup sum over the CODES FRAME ALONE (the
+   * raw-vector column never enters the ranking scan — at 100 TB that
+   * pass reads m·4 bytes/row), collect the ≤`shortlist` winning ids
+   * (bounded, the probe-result class of driver collect), and
+   * exact-cosine rerank them against `corpus` through a pushed
+   * `In(id, …)` point filter — parquet row-group pruning, not a scan.
+   * Output schema `(idCol, adc, sim)`, top-k by exact sim.
    */
   def pqQueryIndex(
       index: DataFrame, corpus: DataFrame,
       codebooks: Array[Array[Array[Double]]],
       probeVec: Array[Double], k: Int, shortlist: Int = 50,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val tab = pqAdcTable(codebooks, probeVec)
-    val sl = index
-      .where(col("codes").isNotNull)
-      .select(col(idCol), adcColumn(tab).as("adc"))
-      .orderBy(col("adc").asc_nulls_last, col(idCol)) // see pqTopK's NULLS LAST note
-      .limit(shortlist)
-      .where(col("adc").isNotNull)
-      .collect()
-    rerankShortlist(corpus, sl, probeVec, k, idCol, vecCol)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    rerankShortlist(corpus,
+      adcShortlist(index, adcColumn(pqAdcTable(codebooks, probeVec)), shortlist, idCol)
+        .collect(),
+      probeVec, k, idCol, vecCol)
 
-  /** The shared serving-path rerank tail: exact-cosine rerank of a
-    * collected `(id, adc)` shortlist against `corpus` through a pushed
-    * `In(id, …)` point filter — parquet row-group pruning, not a scan.
-    * ONE definition for [[pqQueryIndex]] and [[ivfPqQueryIndex]] so the
-    * literal oracle replays cannot drift between the two. */
+  /** The shared rerank tail: exact-cosine rerank of a collected
+    * `(id, adc)` shortlist against `corpus` through a pushed `In(id, …)`
+    * point filter — parquet row-group pruning, not a scan. ONE
+    * definition for [[pqQueryIndex]] and [[ivfPqQueryIndex]]. */
   private def rerankShortlist(
       corpus: DataFrame, sl: Array[org.apache.spark.sql.Row],
       probeVec: Array[Double], k: Int,
@@ -878,17 +716,18 @@ object Ann {
   }
 
   /**
-   * Persist the IVFADC index — the 100 TB serving composition the
-   * compute-path [[ivfPqTopK]]/[[ivfPqResTopK]] re-derive per query: ONE
-   * frame `(idCol, cid, codes)` meant to be written `partitionBy("cid")`
-   * (the [[ivfBuildIndex]] layout), so a query's nprobe cut is parquet
-   * PARTITION PRUNING at the scan and the ranking pass reads m·4 bytes of
-   * code payload per surviving row — the corpus's raw vectors are touched
-   * only by the ≤`shortlist` pushed-In rerank. With `residual = true` the
-   * codes quantize `v − centroid(cid)` ([[pqFitResidual]]'s books — pass
-   * books fitted the same way); assign + subtract + encode fuse into one
-   * compiled narrow projection either way, so the build is a single
-   * shuffle-free corpus pass.
+   * Build the IVFADC index (Jégou et al. 2011 §IV): ONE frame
+   * `(idCol, cid, codes)` — the coarse quantizer's cell plus the PQ codes.
+   * Written `partitionBy("cid")` (the [[ivfBuildIndex]] layout), a
+   * query's nprobe cut is parquet PARTITION PRUNING at the scan and the
+   * ranking pass reads m·4 bytes of code payload per surviving row — the
+   * corpus's raw vectors are touched only by the ≤`shortlist` pushed-In
+   * rerank. With `residual = true` the codes quantize `v − centroid(cid)`
+   * ([[pqFitResidual]]'s books — pass books fitted the same way), the
+   * refinement that keeps compressed-domain ranking accurate as cells
+   * tighten; otherwise they quantize the raw vectors. Assign + subtract +
+   * encode fuse into one compiled narrow projection either way, so the
+   * build is a single shuffle-free corpus pass.
    */
   def ivfPqBuildIndex(
       emb: DataFrame, centroids: Array[Array[Double]],
@@ -904,17 +743,15 @@ object Ann {
   }
 
   /**
-   * Probe a prebuilt [[ivfPqBuildIndex]] index: rank the centroids
-   * driver-side (same fold as [[ivfQueryIndex]]), cut to `nprobe` cells —
-   * partition pruning under the `partitionBy("cid")` layout — rank the
-   * survivors by the ADC lookup sum over the CODES FRAME ALONE (per-cell
-   * residual tables when `residual = true`, one shared table otherwise),
-   * and exact-cosine rerank the collected shortlist against `corpus` via
-   * the shared pushed-In tail. With the same models and corpus this
-   * reproduces [[ivfPqTopK]]'s rows exactly (raw mode) /
-   * [[ivfPqResTopK]]'s (residual mode): same unrounded-adc shortlist cut,
-   * tie rules, and rerank fold — the [[pqQueryIndex]] discipline, with
-   * the cell cut in front.
+   * IVFADC top-k over an [[ivfPqBuildIndex]] frame (in memory or
+   * reloaded): rank the centroids driver-side (same fold as
+   * [[ivfQueryIndex]]), cut to `nprobe` cells — partition pruning under
+   * the `partitionBy("cid")` layout — rank the survivors by the ADC
+   * lookup sum over the CODES FRAME ALONE (per-cell residual tables when
+   * `residual = true`, one shared table otherwise), and exact-cosine
+   * rerank the collected shortlist against `corpus` via the shared
+   * pushed-In tail. Same output schema and tie rules as [[pqQueryIndex]],
+   * with the cell cut in front.
    */
   def ivfPqQueryIndex(
       index: DataFrame, corpus: DataFrame,
@@ -942,13 +779,9 @@ object Ann {
     val adcExpr =
       if (residual) perCellAdc(residualAdcTables(centroids, codebooks, probeVec, nprobe))
       else adcColumn(pqAdcTable(codebooks, probeVec))
-    index
-      .where(col("cid").isin(nearCids.toIndexedSeq: _*)) // partition pruning under the cid layout
-      .where(col("codes").isNotNull)
-      .select(col(idCol), adcExpr.as("adc"))
-      .orderBy(col("adc").asc_nulls_last, col(idCol)) // see pqTopK's NULLS LAST note
-      .limit(shortlist)
-      .where(col("adc").isNotNull)
+    adcShortlist(
+      index.where(col("cid").isin(nearCids: _*)), // partition pruning under the cid layout
+      adcExpr, shortlist, idCol)
   }
 
   /**
@@ -1073,32 +906,33 @@ object Ann {
   // ----- shard-local navigable-small-world graph ANN ------------------------
 
   /**
-   * Graph-ANN top-k over SHARD-LOCAL navigable-small-world graphs — the
-   * third ANN family next to [[lshTopK]] (hash buckets) and [[ivfTopK]]
-   * (coarse quantizer), covering the regime where graph indexes win:
-   * high-recall search without scanning a bucket/list's full contents.
+   * Build SHARD-LOCAL navigable-small-world graphs — the third ANN family
+   * next to [[lshTopK]] (hash buckets) and the IVF coarse quantizer,
+   * covering the regime where graph indexes win: high-recall search
+   * without scanning a bucket/list's full contents — as a self-contained,
+   * persistable index: one row per vector, `(shard_id, idCol, vecCol,
+   * neighbors)`, where `neighbors` holds the node's adjacency as GLOBAL
+   * ids in construction order (order is part of the beam's
+   * reproducibility contract — see [[NswShard]]). Plain parquet-writable;
+   * carrying the vectors in the index (the FAISS convention) makes the
+   * query side a single self-contained scan — no join back to the corpus.
    *
    * Spark-first distribution (the industrial shard-per-worker shape, cf.
    * the HNSW paper's flat predecessor NSW, Malkov et al.): each of
    * `shards` partitions builds ONE single-layer NSW graph over its rows
    * inside `mapPartitions` — greedy beam search finds each inserted
    * node's `m` nearest among the already-inserted, edges are
-   * bidirectional with degree capped at 2m (pruned by similarity) — then
-   * searches the probe with beam width `ef` and emits its LOCAL top-k.
-   * The global answer is the k best of the ≤ shards·k candidates (a
-   * TakeOrderedAndProject merge, rows ∝ shards·k, never the corpus).
-   *
+   * bidirectional with degree capped at 2m (pruned by similarity).
    * Everything is deterministic: hash sharding on the id, insertion in id
    * order, similarity ties broken by node index — same corpus, same
-   * graph, same answer. Construction is O(n·ef·m) per shard and stays
-   * executor-local; nothing but the final candidate rows moves.
+   * graph. Construction is O(n·ef·m) per shard and stays executor-local.
    *
    * Shard count grows with the corpus (`ceil(n / maxShardRows)`, floored
    * at `shards`) so per-shard n — and with it the O(n·ef·m) build — stays
-   * BOUNDED as data scales; the merge cost grows only as shards·k rows.
-   * With a fixed shard count the 100× rehearsal measured a 32× build
-   * blow-up; bounded shards is exactly how a cluster deployment holds
-   * per-executor graph size flat while executors scale with data.
+   * BOUNDED as data scales; the query's merge cost grows only as shards·k
+   * rows. With a fixed shard count the 100× rehearsal measured a 32×
+   * build blow-up; bounded shards is exactly how a cluster deployment
+   * holds per-executor graph size flat while executors scale with data.
    *
    * Recall improves as shards shrink (each local search covers a smaller
    * graph; at the limit shards·k ≥ n it is exhaustive), so `maxShardRows`
@@ -1107,57 +941,10 @@ object Ann {
    * shards) decayed to mean recall@10 = 0.61; (m=12, ef=96, 4096-row
    * shards) measured 80/80 hits across 8 probes — and builds faster,
    * because construction beams converge on the smaller graphs.
-   */
-  def nswTopK(
-      emb: DataFrame, probeId: Long, k: Int,
-      m: Int = 12, ef: Int = 96, shards: Int = 4, maxShardRows: Long = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val bcProbe = spark.sparkContext.broadcast(probeVector(emb, probeId, idCol, vecCol))
-
-    // zero-column scan (row-group counts only) — cheap relative to the build
-    val nShards = math.max(shards,
-      ((emb.count() + maxShardRows - 1) / maxShardRows).toInt)
-
-    // cast BEFORE repartition: all three shard paths (topK / buildIndex /
-    // insertIndex) must hash the id as the SAME type — insertIndex hashes
-    // the long-cast union, and Murmur3(int) != Murmur3(long), so a raw
-    // non-long id column here would give the increment a different shard
-    // layout than the build it extends (ADVICE r10)
-    val local = emb
-      .select(col(idCol).cast("long").as(idCol), col(vecCol).cast("array<double>").as(vecCol))
-      .repartition(nShards, col(idCol))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val items = it.toArray.sortBy(_._1) // deterministic insertion order
-        if (items.isEmpty) Iterator.empty
-        else NswShard.searchTopK(items, bcProbe.value, k, m, ef).iterator
-      }
-      .toDF(idCol, "sim")
-
-    local
-      .orderBy(desc("sim"), col(idCol))
-      .limit(k)
-      .select(col(idCol), round(col("sim"), 4).as("sim"))
-  }
-
-  /**
-   * Build the NSW shard graphs ONCE as a self-contained, persistable
-   * index: one row per vector, `(shard_id, idCol, vecCol, neighbors)`,
-   * where `neighbors` holds the node's adjacency as GLOBAL ids in
-   * construction order (order is part of the beam's reproducibility
-   * contract — see [[NswShard]]). Plain parquet-writable; carrying the
-   * vectors in the index (the FAISS convention) makes the query side a
-   * single self-contained scan — no join back to the corpus.
    *
-   * This is the amortization half of the q_hnsw cost story: the bench's
-   * per-query number deliberately pays the O(n·m·ef·d) build every time,
-   * while a serving deployment calls this once and answers every
-   * subsequent probe through [[nswQueryIndex]] at O(index scan + beam).
-   * Same sharding/params as [[nswTopK]], so (build → persist → reload →
-   * query) reproduces nswTopK's rows exactly — the equality
-   * q_hnsw_idx certifies.
+   * An ad-hoc top-k queries the in-memory build (q_hnsw pays the build
+   * per query); a serving deployment writes it once and answers every
+   * probe through [[nswQueryIndex]] at O(index scan + beam).
    */
   def nswBuildIndex(
       emb: DataFrame,
@@ -1165,11 +952,13 @@ object Ann {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
+    // zero-column scan (row-group counts only) — cheap relative to the build
     val nShards = math.max(shards,
       ((emb.count() + maxShardRows - 1) / maxShardRows).toInt)
     emb
-      // long-cast before repartition — same hash type as nswTopK and
-      // nswInsertIndex, so an increment re-hash reproduces this layout.
+      // long-cast before repartition — the same hash type as
+      // nswInsertIndex (Murmur3(int) != Murmur3(long)), so an increment
+      // re-hash reproduces this layout (ADVICE r10).
       // shard_id is DATA-derived (pmod(hash(id), n) — exactly
       // HashPartitioning's partition expression, so it equals the
       // physical partition the repartition sends the row to), NOT
@@ -1184,28 +973,28 @@ object Ann {
       .as[(Int, Long, Array[Double])]
       .mapPartitions { it =>
         val rows = it.toArray
-        val items = rows.map(r => (r._2, r._3)).sortBy(_._1) // deterministic insertion order
-        if (items.isEmpty) Iterator.empty
-        else {
-          val shardId = rows.head._1 // constant across the partition by construction
-          val vecs    = items.map(_._2)
-          val norms   = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-          val adj     = NswShard.buildAdj(vecs, norms, m, ef)
-          items.iterator.zipWithIndex.map { case ((id, vec), i) =>
-            (shardId, id, vec, adj(i).map(j => items(j)._1).toArray)
-          }
-        }
+        if (rows.isEmpty) Iterator.empty
+        // shard_id is constant across the partition by construction
+        else NswShard.buildShard(rows.head._1, rows.map(r => (r._2, r._3)), m, ef)
       }
       .toDF("shard_id", idCol, vecCol, "neighbors")
   }
 
+  /** `index` with a non-null `deleted` column: false where the index has
+    * none (a tombstone-free build) or where a mark is NULL. */
+  private def withDeleted(index: DataFrame): DataFrame =
+    index.withColumn("deleted",
+      if (index.columns.contains("deleted")) coalesce(col("deleted"), lit(false))
+      else lit(false))
+
   /**
-   * Probe a prebuilt [[nswBuildIndex]] index (fresh or reloaded from
-   * parquet) WITHOUT rebuilding any graph: regroup rows by the stored
-   * `shard_id`, beam-search each shard graph, merge shards·k candidates.
-   * Output schema and semantics match [[nswTopK]] row-for-row when the
-   * index was built with the same parameters over the same corpus.
-   * The probe vector is passed by value (it need not be in the corpus).
+   * Graph-ANN top-k over an [[nswBuildIndex]] frame (in memory or
+   * reloaded from parquet), WITHOUT rebuilding any graph: regroup rows by
+   * the stored `shard_id`, beam-search each shard graph with width `ef`
+   * for its LOCAL top-k, and keep the k best of the ≤ shards·k candidates
+   * (a TakeOrderedAndProject merge, rows ∝ shards·k, never the corpus).
+   * Output `(idCol, sim)`, sim rounded to 4 places. The probe vector is
+   * passed by value (it need not be in the corpus).
    */
   def nswQueryIndex(
       index: DataFrame, probeVec: Array[Double], k: Int, ef: Int = 96,
@@ -1213,19 +1002,15 @@ object Ann {
     val spark = index.sparkSession
     import spark.implicits._
     val bcProbe = spark.sparkContext.broadcast(probeVec)
-    // tombstone-aware (delete-tolerant serving): an index carrying a
-    // `deleted` column serves through the masked beam — deleted nodes
-    // still ROUTE (their edges keep the graph navigable) but are never
-    // emitted. A tombstone-free index takes the identical path with an
-    // all-false mask, which NswShard guarantees is bit-identical to the
-    // unmasked search (q_hnsw_idx / q_hnsw_incr equalities unchanged).
-    val withDel =
-      if (index.columns.contains("deleted")) index
-      else index.withColumn("deleted", lit(false))
-    withDel
+    // tombstone-aware (delete-tolerant serving): deleted nodes still
+    // ROUTE (their edges keep the graph navigable) but are never emitted.
+    // A tombstone-free index takes the identical path with an all-false
+    // mask, which NswShard guarantees is bit-identical to an unmasked
+    // search.
+    withDeleted(index)
       .select(col("shard_id").cast("int"), col(idCol).cast("long"),
         col(vecCol).cast("array<double>"), col("neighbors").cast("array<long>"),
-        coalesce(col("deleted"), lit(false)))
+        col("deleted"))
       .as[(Int, Long, Array[Double], Array[Long], Boolean)]
       .groupByKey(_._1)
       .flatMapGroups { (_, rows) =>
@@ -1255,41 +1040,34 @@ object Ann {
   def nswDeleteIndex(
       index: DataFrame, delIds: DataFrame,
       idCol: String = "vec_id"): DataFrame = {
-    val withDel =
-      if (index.columns.contains("deleted")) index
-      else index.withColumn("deleted", lit(false))
     val del = delIds.select(col(idCol).cast("long").as("__del_id")).distinct()
-    withDel
+    withDeleted(index)
       .join(del, col(idCol).cast("long") === col("__del_id"), "left")
-      .withColumn("deleted",
-        coalesce(col("deleted"), lit(false)) || col("__del_id").isNotNull)
+      .withColumn("deleted", col("deleted") || col("__del_id").isNotNull)
       .drop("__del_id")
   }
 
   /**
    * Reclaim tombstones: rebuild ONLY the shards that contain one — every
    * untouched shard's rows (graph included) pass through verbatim. The
-   * rebuilt shards re-run the exact fresh-build construction (sort by id,
-   * [[NswShard.buildAdj]]) over their survivors, and survivors keep their
-   * hash-determined shard, so the compacted index is BIT-IDENTICAL to a
-   * from-scratch [[nswBuildIndex]] over the post-delete corpus at the
-   * same shard count — the equality q_hnsw_del certifies. At scale this
-   * is the point: deleting 0.1% of a 10k-shard index re-graphs only the
-   * shards actually hit, not the corpus.
+   * rebuilt shards run the fresh-build construction
+   * ([[NswShard.buildShard]]) over their survivors, and survivors keep
+   * their hash-determined shard, so the compacted index is BIT-IDENTICAL
+   * to a from-scratch [[nswBuildIndex]] over the post-delete corpus at
+   * the same shard count — the equality q_hnsw_del certifies. At scale
+   * this is the point: deleting 0.1% of a 10k-shard index re-graphs only
+   * the shards actually hit, not the corpus.
    */
   def nswCompactIndex(
       index: DataFrame, m: Int = 12, ef: Int = 96,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    val withDel =
-      if (index.columns.contains("deleted")) index
-      else index.withColumn("deleted", lit(false))
-    val base = withDel.select(col("shard_id").cast("int").as("shard_id"),
+    val base = withDeleted(index).select(col("shard_id").cast("int").as("shard_id"),
       col(idCol).cast("long").as(idCol),
       col(vecCol).cast("array<double>").as(vecCol),
       col("neighbors").cast("array<long>").as("neighbors"),
-      coalesce(col("deleted"), lit(false)).as("deleted"))
+      col("deleted"))
     // the affected-shard set is tiny (≤ shards rows) — broadcast marker
     val affected = base.where(col("deleted"))
       .select(col("shard_id")).distinct()
@@ -1302,13 +1080,7 @@ object Ann {
       .as[(Int, Long, Array[Double])]
       .groupByKey(_._1)
       .flatMapGroups { (shardId, rows) =>
-        val items = rows.map(r => (r._2, r._3)).toArray.sortBy(_._1)
-        val vecs  = items.map(_._2)
-        val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-        val adj   = NswShard.buildAdj(vecs, norms, m, ef)
-        items.iterator.zipWithIndex.map { case ((id, vec), i) =>
-          (shardId, id, vec, adj(i).map(j => items(j)._1).toArray)
-        }
+        NswShard.buildShard(shardId, rows.map(r => (r._2, r._3)).toArray, m, ef)
       }
       .toDF("shard_id", idCol, vecCol, "neighbors")
     untouched.unionByName(rebuilt)
@@ -1381,7 +1153,6 @@ object Ann {
             s"shard $shardId holds duplicate ids — the increment must be " +
               "disjoint from the indexed corpus")
           val vecs    = items.map(_._2)
-          val norms   = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
           val adj     = Array.fill(items.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
           // a neighbor id missing from this partition means the re-hash
           // did not reproduce the build's shard layout (wrong nShards —
@@ -1394,10 +1165,8 @@ object Ann {
                 s"index's shard layout does not match nShards=$shards; " +
                 "pass the build's shard count explicitly")))
           }
-          NswShard.insertRange(vecs, norms, adj, from = old.length, m, ef)
-          items.iterator.zipWithIndex.map { case ((id, vec), i) =>
-            (shardId, id, vec, adj(i).map(j => items(j)._1).toArray)
-          }
+          NswShard.insertRange(vecs, NswShard.norms(vecs), adj, from = old.length, m, ef)
+          NswShard.shardRows(shardId, items, adj)
         }
       }
       .toDF("shard_id", idCol, vecCol, "neighbors")

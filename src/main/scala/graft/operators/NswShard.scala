@@ -3,17 +3,17 @@ package graft.operators
 import scala.collection.mutable
 
 /**
- * Executor-side core of [[Ann.nswTopK]] and the persistable-index pair
- * [[Ann.nswBuildIndex]]/[[Ann.nswQueryIndex]]: builds one single-layer
+ * Executor-side core of the NSW index ([[Ann.nswBuildIndex]],
+ * [[Ann.nswQueryIndex]] and their maintenance): builds one single-layer
  * navigable-small-world graph over a shard's vectors and beam-searches a
- * probe through it (the flat predecessor of HNSW — Malkov et al.; the
- * search loop below is the standard SEARCH-LAYER with a bounded result
- * beam). Pure JVM code running inside `mapPartitions` — no Spark types,
- * no driver round-trips; the shard never leaves its task.
+ * probe through a stored graph (the flat predecessor of HNSW — Malkov et
+ * al.; the search loop below is the standard SEARCH-LAYER with a bounded
+ * result beam). Pure JVM code running inside Spark tasks — no Spark
+ * types, no driver round-trips; the shard never leaves its task.
  *
  * Determinism contract (what makes the declared queries reproducible and
- * lets a reloaded index reproduce the fresh build's answers exactly):
- * vectors are inserted in caller-sorted order, the entry point is node 0,
+ * lets a reloaded index answer exactly as the in-memory build does):
+ * vectors are inserted in id-sorted order, the entry point is node 0,
  * every similarity tie breaks on the smaller node index, and adjacency
  * lists keep their construction order (the beam admits neighbors against
  * a result set that mutates mid-scan, so edge ORDER is part of the
@@ -66,14 +66,31 @@ private[operators] object NswShard {
     results.toArray.sortBy(i => (-s(i), i))
   }
 
-  /** Graph construction: connect each node to its m nearest among the
-    * already-inserted; bidirectional edges, degree capped at 2m. Returns
-    * the adjacency in LOCAL node indices, construction order preserved. */
-  def buildAdj(vecs: Array[Array[Double]], norms: Array[Double],
-               m: Int, ef: Int): Array[mutable.ArrayBuffer[Int]] = {
-    val adj = Array.fill(vecs.length)(mutable.ArrayBuffer.empty[Int])
-    insertRange(vecs, norms, adj, from = 1, m, ef)
-    adj
+  /** L2 norm of each vector (the cosine denominators). */
+  def norms(vecs: Array[Array[Double]]): Array[Double] =
+    vecs.map(v => math.sqrt(v.map(x => x * x).sum))
+
+  /** A shard graph as its persisted rows `(shardId, id, vec, neighbors)`:
+    * `items` in insertion order, `adj` in local indices; neighbors become
+    * GLOBAL ids, construction order kept. */
+  def shardRows(shardId: Int, items: Array[(Long, Array[Double])],
+                adj: Array[mutable.ArrayBuffer[Int]]): Iterator[(Int, Long, Array[Double], Array[Long])] =
+    items.iterator.zipWithIndex.map { case ((id, vec), i) =>
+      (shardId, id, vec, adj(i).map(j => items(j)._1).toArray)
+    }
+
+  /** The fresh graph of one shard: sort `items` by id (the insertion
+    * order), connect each node to its m nearest among the
+    * already-inserted — bidirectional edges, degree capped at 2m — and
+    * emit the [[shardRows]]. The one builder behind a fresh index build
+    * and the compaction of a tombstoned shard. */
+  def buildShard(shardId: Int, items: Array[(Long, Array[Double])],
+                 m: Int, ef: Int): Iterator[(Int, Long, Array[Double], Array[Long])] = {
+    val sorted = items.sortBy(_._1)
+    val vecs   = sorted.map(_._2)
+    val adj    = Array.fill(vecs.length)(mutable.ArrayBuffer.empty[Int])
+    insertRange(vecs, norms(vecs), adj, from = 1, m, ef)
+    shardRows(shardId, sorted, adj)
   }
 
   /** The NSW insertion loop from node `from` onward, mutating `adj` in
@@ -112,37 +129,14 @@ private[operators] object NswShard {
     }
   }
 
-  private def probeSearch(items: Array[(Long, Array[Double])],
-                          vecs: Array[Array[Double]], norms: Array[Double],
-                          adj: Array[_ <: scala.collection.Seq[Int]],
-                          probe: Array[Double], k: Int, ef: Int): Seq[(Long, Double)] = {
-    val qn = math.sqrt(probe.map(x => x * x).sum)
-    beam(adj, vecs, norms, probe, qn, bound = items.length, width = math.max(ef, k))
-      .take(k)
-      .map(idx => (items(idx)._1, cos(vecs, norms, probe, qn, idx)))
-      .toSeq
-  }
-
-  /** Build the shard graph over `items` and return the probe's local
-    * top-k as (id, cosine) rows, best first. */
-  def searchTopK(
-      items: Array[(Long, Array[Double])],
-      probe: Array[Double],
-      k: Int, m: Int, ef: Int): Seq[(Long, Double)] = {
-    val vecs  = items.map(_._2)
-    val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
-    val adj   = buildAdj(vecs, norms, m, ef)
-    probeSearch(items, vecs, norms, adj, probe, k, ef)
-  }
-
   /** Beam-search a PREBUILT, possibly TOMBSTONED shard graph (items in the
     * build's insertion order — sorted by id; `adj` in local indices with
     * construction-order edges). Deleted nodes stay fully traversable
     * (their edges keep the graph navigable — the standard mark-and-filter
-    * HNSW delete), they are only excluded from the EMITTED results. The
-    * beam explores with the same width as [[searchTopK]], so an all-false
-    * mask over the same graph returns bit-identical rows — which is what
-    * lets [[Ann.nswQueryIndex]] route every index through this one path. */
+    * HNSW delete), they are only excluded from the EMITTED results; with
+    * an all-false mask this is the plain beam search, so
+    * [[Ann.nswQueryIndex]] routes every index through this one path.
+    * Returns up to k (id, cosine) rows, best first. */
   def searchPrebuiltMasked(
       items: Array[(Long, Array[Double])],
       adj: Array[Array[Int]],
@@ -150,13 +144,13 @@ private[operators] object NswShard {
       probe: Array[Double],
       k: Int, ef: Int): Seq[(Long, Double)] = {
     val vecs  = items.map(_._2)
-    val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))
+    val ns    = norms(vecs)
     val qn    = math.sqrt(probe.map(x => x * x).sum)
-    beam(adj.map(_.toSeq), vecs, norms, probe, qn,
+    beam(adj.map(_.toSeq), vecs, ns, probe, qn,
         bound = items.length, width = math.max(ef, k))
       .filterNot(deleted)
       .take(k)
-      .map(idx => (items(idx)._1, cos(vecs, norms, probe, qn, idx)))
+      .map(idx => (items(idx)._1, cos(vecs, ns, probe, qn, idx)))
       .toSeq
   }
 }

@@ -186,12 +186,13 @@ class PlanSpec extends AnyFunSuite {
       s"banded join degraded to SMJ/cartesian:\n$p")
   }
 
-  test("q_ivf keeps the shuffle-free probe shape: broadcast rerank + top-k heaps") {
+  test("q_ivf keeps the shuffle-free probe shape: literal-probe rerank + top-k heaps") {
     val p = plan("q_ivf")
-    // nprobe filter is a narrow map, the 1-row probe broadcasts (BNLJ over
-    // IdentityBroadcastMode), the top-10 is per-partition heaps — the
-    // whole probe path plans ZERO hash shuffles.
-    assert(p.contains("BroadcastNestedLoopJoin"), s"expected broadcast probe join:\n$p")
+    // nprobe filter is a narrow map, the probe rides as a literal array in
+    // the rerank projection (no probe relation, so no join at all), the
+    // top-10 is per-partition heaps — the whole probe path plans ZERO
+    // hash shuffles.
+    assert(!p.contains("Join"), s"the literal probe needs no join:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"expected top-k heaps, not a global sort:\n$p")
     assert(!p.contains("Exchange hashpartitioning"),
       s"probe path should plan no hash shuffle:\n$p")

@@ -39,7 +39,7 @@ class StreamOwnersSpec extends AnyFunSuite {
     assert(uses("sparkContext.broadcast") === Map(
       "sources/Shipped.scala"  -> 1,
       "operators/Pack.scala"   -> 2, // per-partition bases, not rows
-      "operators/Ann.scala"    -> 2)) // one probe vector, not rows
+      "operators/Ann.scala"    -> 1)) // one probe vector, not rows
     assert(uses(".parallelize(") === Map.empty[String, Int])
   }
 

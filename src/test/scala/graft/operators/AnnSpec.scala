@@ -1,12 +1,108 @@
 package graft.operators
 
 import graft.{Tables, TestSpark}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 class AnnSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
+
+  // The ad-hoc top-10 of each index family: its one query over the
+  // in-memory build (nprobe 4, shortlist 50 unless given).
+  private def ivfQuery(emb: DataFrame, cents: Array[Array[Double]], p: Long): DataFrame =
+    Ann.ivfQueryIndex(Ann.ivfBuildIndex(emb, cents), cents, Ann.probeVector(emb, p), 10,
+      nprobe = 4)
+
+  private def nswQuery(emb: DataFrame, p: Long): DataFrame =
+    Ann.nswQueryIndex(Ann.nswBuildIndex(emb), Ann.probeVector(emb, p), 10)
+
+  private def pqQuery(emb: DataFrame, books: Array[Array[Array[Double]]], p: Long): DataFrame =
+    Ann.pqQueryIndex(Ann.pqBuildIndex(emb, books), emb, books, Ann.probeVector(emb, p), 10)
+
+  private def ivfPqQuery(emb: DataFrame, cents: Array[Array[Double]],
+      books: Array[Array[Array[Double]]], p: Long, shortlist: Int = 50,
+      residual: Boolean = false): DataFrame =
+    Ann.ivfPqQueryIndex(Ann.ivfPqBuildIndex(emb, cents, books, residual), emb, cents, books,
+      Ann.probeVector(emb, p), 10, nprobe = 4, shortlist = shortlist, residual = residual)
+
+  // Driver-side replays of the IVF and PQ queries: plain Scala over the
+  // collected vectors, at the engine's float-op order, so the one ranking
+  // path is checked against code that shares none of it.
+
+  /** Spark's round(x, 4) on a double: HALF_UP on the shortest decimal form. */
+  private def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** graft_cosine's fold: dot and both squared norms in one pass. */
+  private def cosine(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  private def vectors(emb: DataFrame): Map[Long, Array[Double]] =
+    emb.select(col("vec_id"), col("embedding").cast("array<double>")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+
+  /** The nprobe nearest cells: left-to-right squared-L2 fold, ties → lower cid. */
+  private def nearCells(cents: Array[Array[Double]], probe: Array[Double]): Set[Int] =
+    cents.zipWithIndex.map { case (cj, j) =>
+      var d = 0.0; var i = 0
+      while (i < cj.length) { val t = cj(i) - probe(i); d += t * t; i += 1 }
+      (j, d)
+    }.sortBy { case (j, d) => (d, j) }.take(4).map(_._1).toSet
+
+  /** IVF top-10: argmin of −2⟨v,c⟩ + ‖c‖² (first minimum), nprobe cut,
+    * cosine rerank ordered by (sim desc, id). */
+  private def ivfReplay(emb: DataFrame, cents: Array[Array[Double]], p: Long): Seq[(Long, Double)] = {
+    val vecs  = vectors(emb)
+    val probe = vecs(p)
+    val near  = nearCells(cents, probe)
+    val ccs   = cents.map(c => c.map(x => x * x).sum)
+    def cell(v: Array[Double]): Int = cents.indices.minBy { j =>
+      var dot = 0.0; var i = 0
+      while (i < v.length) { dot += v(i) * cents(j)(i); i += 1 }
+      -2.0 * dot + ccs(j)
+    }
+    vecs.toSeq.collect { case (id, v) if near(cell(v)) => id -> round4(cosine(v, probe)) }
+      .sortBy { case (id, sim) => (-sim, id) }.take(10)
+  }
+
+  /** PQ top-10: first-minimum codes, the 0.0-seeded ADC sum, the 50-row
+    * shortlist by (adc, id), cosine rerank ordered by (sim desc, id). */
+  private def pqReplay(emb: DataFrame, books: Array[Array[Array[Double]]],
+      p: Long): Seq[(Long, Double, Double)] = {
+    val vecs  = vectors(emb)
+    val probe = vecs(p)
+    val tab   = Ann.pqAdcTable(books, probe)
+    val dsub  = books.head.head.length
+    def code(v: Array[Double], s: Int): Int = {
+      val ds = books(s).map { cb =>
+        var d = 0.0; var i = 0
+        while (i < dsub) { val t = v(s * dsub + i) - cb(i); d += t * t; i += 1 }
+        d
+      }
+      ds.indexOf(ds.min)
+    }
+    vecs.toSeq
+      .map { case (id, v) => (id, books.indices.foldLeft(0.0)((a, s) => a + tab(s)(code(v, s)))) }
+      .sortBy { case (id, adc) => (adc, id) }.take(50)
+      .map { case (id, adc) => (id, round4(adc), round4(cosine(vecs(id), probe))) }
+      .sortBy { case (id, _, sim) => (-sim, id) }.take(10)
+  }
+
+  test("Ann keeps one ranking path per index family: no compute-path top-k") {
+    // each index family ranks only through its *QueryIndex; the two
+    // top-k functions left are the families without an index
+    def source(f: String) =
+      java.nio.file.Files.readString(java.nio.file.Paths.get(s"src/main/scala/graft/operators/$f"))
+    val topKs = "def (\\w*TopK)\\b".r.findAllMatchIn(source("Ann.scala")).map(_.group(1)).toSet
+    assert(topKs === Set("bruteForceTopK", "lshTopK"))
+    assert("def \\w*[Tt]opK".r.findFirstIn(source("NswShard.scala")).isEmpty)
+  }
 
   test("ivfPqFit is bit-identical to the standalone ivfFit + pqFit pair") {
     // the shared-sample combined fit (round 15) must train each model on
@@ -59,14 +155,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("IVF top-k recovers planted clusters and prunes to nprobe lists") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = for {
-      c <- 0 until 20
-      center = Array.fill(64)(rnd.nextGaussian().toFloat)
-      m <- 0 until 10
-    } yield ((c * 10 + m).toLong, center.map(x => x + 0.01f * rnd.nextGaussian().toFloat).toSeq)
-    val emb = rows.toDF("vec_id", "embedding")
+    val emb = plantedCorpus()
 
     val centroids = Ann.ivfFit(emb, c = 16, iters = 3)
     assert(centroids.length === 16 && centroids.forall(_.length === 64))
@@ -74,7 +163,7 @@ class AnnSpec extends AnyFunSuite {
     val probes = Seq(0L, 55L, 111L, 190L)
     val recalls = probes.map { p =>
       val exact  = Ann.bruteForceTopK(emb, p, 10).collect().map(_.getLong(0)).toSet
-      val approx = Ann.ivfTopK(emb, p, 10, centroids, nprobe = 4).collect().map(_.getLong(0)).toSet
+      val approx = ivfQuery(emb, centroids, p).collect().map(_.getLong(0)).toSet
       exact.intersect(approx).size.toDouble / exact.size
     }
     val mean = recalls.sum / recalls.size
@@ -86,19 +175,12 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("NSW graph top-k recovers planted clusters; deterministic across runs") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = for {
-      c <- 0 until 20
-      center = Array.fill(64)(rnd.nextGaussian().toFloat)
-      m <- 0 until 10
-    } yield ((c * 10 + m).toLong, center.map(x => x + 0.01f * rnd.nextGaussian().toFloat).toSeq)
-    val emb = rows.toDF("vec_id", "embedding")
+    val emb = plantedCorpus()
 
     val probes = Seq(0L, 55L, 111L, 190L)
     val recalls = probes.map { p =>
       val exact  = Ann.bruteForceTopK(emb, p, 10).collect().map(_.getLong(0)).toSet
-      val approx = Ann.nswTopK(emb, p, 10).collect().map(_.getLong(0)).toSet
+      val approx = nswQuery(emb, p).collect().map(_.getLong(0)).toSet
       exact.intersect(approx).size.toDouble / exact.size
     }
     val mean = recalls.sum / recalls.size
@@ -106,8 +188,8 @@ class AnnSpec extends AnyFunSuite {
 
     // probe ranks itself first at sim 1; result is bit-identical on re-run
     // (hash sharding + id-ordered insertion + id tie-breaks)
-    val a = Ann.nswTopK(emb, 0L, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val b = Ann.nswTopK(emb, 0L, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val a = nswQuery(emb, 0L).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val b = nswQuery(emb, 0L).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(a === b)
     assert(a.head._1 === 0L && a.head._2 === 1.0)
   }
@@ -116,36 +198,24 @@ class AnnSpec extends AnyFunSuite {
     // the (m, ef, maxShardRows) grid the q_hnsw parameter choice was made
     // from: a shard cap below the corpus size forces more, smaller graphs,
     // and the planted-cluster recall floor must hold for every setting
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = for {
-      c <- 0 until 20
-      center = Array.fill(64)(rnd.nextGaussian().toFloat)
-      m <- 0 until 10
-    } yield ((c * 10 + m).toLong, center.map(x => x + 0.01f * rnd.nextGaussian().toFloat).toSeq)
-    val emb = rows.toDF("vec_id", "embedding").cache()
+    val emb = plantedCorpus().cache()
     val probes = Seq(0L, 55L, 111L, 190L)
     val exact = probes.map(p =>
       Ann.bruteForceTopK(emb, p, 10).collect().map(_.getLong(0)).toSet)
     for ((m, ef, maxRows) <- Seq((12, 128, 8192L), (16, 160, 64L), (8, 48, 32L))) {
+      val index = Ann.nswBuildIndex(emb, m = m, ef = ef, maxShardRows = maxRows).cache()
       val hits = probes.zip(exact).map { case (p, ex) =>
-        Ann.nswTopK(emb, p, 10, m = m, ef = ef, maxShardRows = maxRows)
+        Ann.nswQueryIndex(index, Ann.probeVector(emb, p), 10, ef = ef)
           .collect().map(_.getLong(0)).count(ex)
       }
+      index.unpersist()
       val mean = hits.sum / (10.0 * hits.length)
       assert(mean >= 0.9, s"m=$m ef=$ef maxShardRows=$maxRows recall@10 $mean ($hits)")
     }
   }
 
   test("NSW index: persist/reload reproduces the fresh build's answers exactly") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = for {
-      c <- 0 until 20
-      center = Array.fill(64)(rnd.nextGaussian().toFloat)
-      m <- 0 until 10
-    } yield ((c * 10 + m).toLong, center.map(x => x + 0.01f * rnd.nextGaussian().toFloat).toSeq)
-    val emb = rows.toDF("vec_id", "embedding")
+    val emb = plantedCorpus()
 
     val out = graft.ScratchDirs.dir("nsw-idx")
     Ann.nswBuildIndex(emb).write.mode("overwrite").parquet(out)
@@ -156,14 +226,17 @@ class AnnSpec extends AnyFunSuite {
     assert(index.columns.sorted === Array("embedding", "neighbors", "shard_id", "vec_id"))
 
     // build-once/query-many: each reloaded-index probe must equal the
-    // fresh build-and-search result row-for-row (same sharding, same
-    // insertion order, same edge order — the determinism contract)
+    // in-memory build's answer row-for-row (same sharding, same insertion
+    // order, same edge order — persistence is lossless down to the edge
+    // lists), and both must find the exact scan's neighbours
     for (p <- Seq(0L, 55L, 111L, 190L)) {
-      val fresh = Ann.nswTopK(emb, p, 10)
+      val fresh = nswQuery(emb, p)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val viaIdx = Ann.nswQueryIndex(index, Ann.probeVector(emb, p), 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(viaIdx === fresh, s"probe $p: reloaded index diverged from fresh build")
+      assert(viaIdx === fresh, s"probe $p: reloaded index diverged from the in-memory build")
+      val exact = Ann.bruteForceTopK(emb, p, 10).collect().map(_.getLong(0)).toSet
+      assert(viaIdx.count(r => exact(r._1)) >= 8, s"probe $p recall: $viaIdx vs $exact")
     }
 
     // a probe OUTSIDE the corpus (the serving case) still recovers its
@@ -176,13 +249,7 @@ class AnnSpec extends AnyFunSuite {
 
   test("NSW incremental insert: append batch equals full rebuild; inference path works") {
     import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = for {
-      c <- 0 until 20
-      center = Array.fill(64)(rnd.nextGaussian().toFloat)
-      m <- 0 until 10
-    } yield ((c * 10 + m).toLong, center.map(x => x + 0.01f * rnd.nextGaussian().toFloat).toSeq)
-    val emb = rows.toDF("vec_id", "embedding")
+    val emb = plantedCorpus()
 
     val out = graft.ScratchDirs.dir("nsw-incr-spec")
     Ann.nswBuildIndex(emb.where($"vec_id" < 160)).write.mode("overwrite").parquet(out)
@@ -195,9 +262,9 @@ class AnnSpec extends AnyFunSuite {
     assert(updated.except(full).isEmpty && full.except(updated).isEmpty,
       "incrementally updated index diverged from the full rebuild")
 
-    // and the updated index answers probes like the fresh build-and-search
+    // and the updated index answers probes like the full rebuild
     for (p <- Seq(0L, 111L, 190L)) {
-      val fresh = Ann.nswTopK(emb, p, 10)
+      val fresh = Ann.nswQueryIndex(full, Ann.probeVector(emb, p), 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val viaIdx = Ann.nswQueryIndex(updated, Ann.probeVector(emb, p), 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -205,35 +272,31 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
-  test("IVF index: cell-partitioned persist/reload reproduces ivfTopK with pruning") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = for {
-      c <- 0 until 20
-      center = Array.fill(64)(rnd.nextGaussian().toFloat)
-      m <- 0 until 10
-    } yield ((c * 10 + m).toLong, center.map(x => x + 0.01f * rnd.nextGaussian().toFloat).toSeq)
-    val emb = rows.toDF("vec_id", "embedding")
+  test("IVF index: cell-partitioned persist/reload reproduces the in-memory index with pruning") {
+    val emb = plantedCorpus()
 
     val centroids = Ann.ivfFit(emb, c = 16, iters = 3)
     val out = graft.ScratchDirs.dir("ivf-idx-spec")
     Ann.ivfBuildIndex(emb, centroids)
       .write.mode("overwrite").partitionBy("cid").parquet(s"$out/cells")
-    Ann.centroidsToDF(spark, centroids).write.mode("overwrite").parquet(s"$out/model")
+    // an IVF quantizer is a one-subspace codebook in the model frame
+    Ann.codebooksToDF(spark, Array(centroids)).write.mode("overwrite").parquet(s"$out/model")
 
     // the model survives the frame round-trip exactly
-    val model = Ann.centroidsFromDF(spark.read.parquet(s"$out/model"))
+    val Array(model) = Ann.codebooksFromDF(spark.read.parquet(s"$out/model"))
     assert(model.length === centroids.length)
     assert(model.zip(centroids).forall { case (a, b) => a.sameElements(b) })
 
-    // each reloaded-index probe equals the assign-on-the-fly ivfTopK rows
+    // each reloaded-index probe equals the in-memory index's rows, and
+    // both equal a driver-side replay of the IVF query
     val index = spark.read.parquet(s"$out/cells")
     for (p <- Seq(0L, 55L, 111L, 190L)) {
-      val fresh = Ann.ivfTopK(emb, p, 10, centroids, nprobe = 4)
+      val fresh = ivfQuery(emb, centroids, p)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val viaIdx = Ann.ivfQueryIndex(index, model, Ann.probeVector(emb, p), 10, nprobe = 4)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(viaIdx === fresh, s"probe $p: reloaded IVF index diverged from ivfTopK")
+      assert(viaIdx === fresh, s"probe $p: reloaded IVF index diverged from the in-memory index")
+      assert(fresh === ivfReplay(emb, centroids, p), s"probe $p: IVF query diverged from the replay")
     }
 
     // the nprobe cell filter reaches the scan as PARTITION pruning (the
@@ -292,11 +355,10 @@ class AnnSpec extends AnyFunSuite {
   test("missing probe id throws a clear IllegalArgumentException, not 0 rows / AIOOBE") {
     val emb = Tables.embeddings(spark, dir)
     val missing = -999L
-    val centroids = Array.fill(4)(Array.fill(64)(0.1))
     Seq[() => Any](
       () => Ann.bruteForceTopK(emb, missing, 5),
       () => Ann.lshTopK(emb, missing, 5),
-      () => Ann.ivfTopK(emb, missing, 5, centroids)
+      () => Ann.probeVector(emb, missing)
     ).foreach { run =>
       val e = intercept[IllegalArgumentException](run())
       assert(e.getMessage.contains("-999"))
@@ -488,7 +550,6 @@ class AnnSpec extends AnyFunSuite {
     // of √c inline expressions. c = 16,384 ⇒ g = 128 routes through the
     // compiled branch; quantizer quality is irrelevant to the equality
     // (deterministic Gaussian centroids), only the regime switch is.
-    import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, dir).where(col("vec_id") < 500)
     val dim = emb.selectExpr("size(embedding)").first().getInt(0)
     val rnd = new scala.util.Random(7L)
@@ -518,12 +579,15 @@ class AnnSpec extends AnyFunSuite {
       .collect().map(_.getLong(0))
     assert(served.length === 10)
     assert(served.forall(_ % 3 != 1), s"deleted id emitted: ${served.mkString(",")}")
-    // no-delete index through the (all-false) masked path == plain index path
+    // an index without a `deleted` column and one whose marks are all
+    // false serve the same rows, and those find the exact scan's neighbours
     val plain  = Ann.nswQueryIndex(idx, probe, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val fresh  = Ann.nswTopK(emb, probeId = 0L, k = 10, shards = s)
+    val noDels = Ann.nswQueryIndex(Ann.nswDeleteIndex(idx, dels.limit(0)), probe, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(plain === fresh)
+    assert(plain === noDels)
+    val exact = Ann.bruteForceTopK(emb, 0L, 10).collect().map(_.getLong(0)).toSet
+    assert(plain.count(r => exact(r._1)) >= 8, s"recall: $plain vs $exact")
     // compaction == from-scratch rebuild over survivors, bit-exact
     // (persist both sides before the exceptAll — the q_hnsw_incr rule:
     // each EXCEPT direction re-evaluates its legs, re-running the graph
@@ -573,7 +637,6 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("pqEncode matches a driver-side argmin replay; null vectors get null codes") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val emb   = Tables.embeddings(spark, dir)
     val books = Ann.pqFit(emb, m = 8, ksub = 16, iters = 2)
@@ -597,13 +660,13 @@ class AnnSpec extends AnyFunSuite {
       }
       assert(codes === want, s"vec ${r.getLong(0)}")
     }
-    // null vector → null codes, and pqTopK never surfaces it
+    // null vector → null codes, and the PQ query never surfaces it
     val withNull = Seq((9999L, Option.empty[Seq[Float]]))
       .toDF("vec_id", "embedding")
       .unionByName(emb.select(col("vec_id"), col("embedding")))
     val encoded = Ann.pqEncode(withNull, books).where(col("vec_id") === 9999L).collect()
     assert(encoded.length === 1 && encoded.head.isNullAt(1))
-    val top = Ann.pqTopK(withNull, probeId = 0L, k = 10, books).collect()
+    val top = pqQuery(withNull, books, 0L).collect()
     assert(!top.exists(_.getLong(0) === 9999L))
   }
 
@@ -692,7 +755,6 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("ADC equals the exact distance when vectors are codebook-reconstructible") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     // integer-valued corpus drawn exactly from 2 subspaces × 4 codewords:
     // encode→decode is lossless, so adc = ‖q − x‖² exactly (all arithmetic
@@ -717,31 +779,36 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
-  test("PQ index: codes+model parquet round-trip reproduces pqTopK exactly") {
-    import org.apache.spark.sql.functions.col
+  test("PQ index: codes+model parquet round-trip reproduces the in-memory index exactly") {
     val emb   = Tables.embeddings(spark, dir)
     val books = Ann.pqFit(emb, m = 8, ksub = 16, iters = 2)
     val out   = graft.ScratchDirs.dir("pq-idx-spec")
     Ann.pqBuildIndex(emb, books).write.mode("overwrite").parquet(s"$out/codes")
-    Ann.pqCodebooksToDF(spark, books).write.mode("overwrite").parquet(s"$out/model")
-    val model = Ann.pqCodebooksFromDF(spark.read.parquet(s"$out/model"))
+    Ann.codebooksToDF(spark, books).write.mode("overwrite").parquet(s"$out/model")
+    val model = Ann.codebooksFromDF(spark.read.parquet(s"$out/model"))
     assert(model.map(_.map(_.toSeq).toSeq).toSeq === books.map(_.map(_.toSeq).toSeq).toSeq)
-    val fresh  = Ann.pqTopK(emb, 0L, 10, books).collect().map(_.toSeq)
+    val freshRows = pqQuery(emb, books, 0L).collect()
+    val fresh  = freshRows.map(_.toSeq)
     val served = Ann.pqQueryIndex(spark.read.parquet(s"$out/codes"), emb, model,
       Ann.probeVector(emb, 0L), k = 10).collect().map(_.toSeq)
     assert(served.toSeq === fresh.toSeq)
-    // a gapped model frame fails loud, never misattributes codewords
-    val gapped = Ann.pqCodebooksToDF(spark, books).where(col("code") =!= 3)
-    val e = intercept[IllegalArgumentException](Ann.pqCodebooksFromDF(gapped))
+    // and both equal a driver-side replay of shortlist + rerank
+    assert(freshRows.map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq ===
+      pqReplay(emb, books, 0L))
+    // a gapped or ragged model frame fails loud, never misattributes codewords
+    val gapped = Ann.codebooksToDF(spark, books).where(col("code") =!= 3)
+    val e = intercept[IllegalArgumentException](Ann.codebooksFromDF(gapped))
     assert(e.getMessage.contains("dense"))
+    val ragged = Ann.codebooksToDF(spark, books :+ Array(Array(1.0, 2.0)))
+    val e2 = intercept[IllegalArgumentException](Ann.codebooksFromDF(ragged))
+    assert(e2.getMessage.contains("ragged"))
   }
 
   test("IVFADC: every result comes from the nprobe nearest cells; contract holds") {
-    import org.apache.spark.sql.functions.col
     val emb   = Tables.embeddings(spark, dir)
     val cents = Ann.ivfFit(emb, c = 16, iters = 3)
     val books = Ann.pqFit(emb, m = 8, ksub = 16, iters = 2)
-    val top = Ann.ivfPqTopK(emb, 0L, 10, cents, books, nprobe = 4).collect()
+    val top = ivfPqQuery(emb, cents, books, 0L).collect()
     assert(top.length === 10)
     val sims = top.map(_.getDouble(2))
     assert(sims.zip(sims.tail).forall { case (a, b) => a >= b })
@@ -761,25 +828,18 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("PQ top-k recovers planted clusters through the compressed-domain scan") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = for {
-      c <- 0 until 20
-      center = Array.fill(64)(rnd.nextGaussian().toFloat)
-      m <- 0 until 10
-    } yield ((c * 10 + m).toLong, center.map(x => x + 0.01f * rnd.nextGaussian().toFloat).toSeq)
-    val emb   = rows.toDF("vec_id", "embedding")
+    val emb   = plantedCorpus()
     val books = Ann.pqFit(emb, m = 8, ksub = 16, iters = 3)
     val recalls = Seq(0L, 55L, 111L, 190L).map { p =>
       val exact  = Ann.bruteForceTopK(emb, p, 10).collect().map(_.getLong(0)).toSet
-      val approx = Ann.pqTopK(emb, p, 10, books).collect().map(_.getLong(0)).toSet
+      val approx = pqQuery(emb, books, p).collect().map(_.getLong(0)).toSet
       exact.intersect(approx).size.toDouble / exact.size
     }
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.9, s"mean recall@10 $mean (per-probe: $recalls)")
     // schema + ordering contract on the real corpus
-    val top = Ann.pqTopK(Tables.embeddings(spark, dir), 0L, 10,
-      Ann.pqFit(Tables.embeddings(spark, dir), m = 8, ksub = 16, iters = 2)).collect()
+    val real = Tables.embeddings(spark, dir)
+    val top = pqQuery(real, Ann.pqFit(real, m = 8, ksub = 16, iters = 2), 0L).collect()
     assert(top.length === 10)
     val sims = top.map(_.getDouble(2))
     assert(sims.zip(sims.tail).forall { case (a, b) => a >= b })
@@ -851,15 +911,15 @@ class AnnSpec extends AnyFunSuite {
       rs.sum / rs.size
     }
     val rawRecall = recall(p =>
-      Ann.ivfPqTopK(emb, p, 10, cents, rawBooks, nprobe = 4, shortlist = 12).collect())
+      ivfPqQuery(emb, cents, rawBooks, p, shortlist = 12).collect())
     val resRecall = recall(p =>
-      Ann.ivfPqResTopK(emb, p, 10, cents, resBooks, nprobe = 4, shortlist = 12).collect())
+      ivfPqQuery(emb, cents, resBooks, p, shortlist = 12, residual = true).collect())
     assert(resRecall >= rawRecall,
       s"residual recall $resRecall < raw recall $rawRecall")
     assert(resRecall >= 0.9, s"residual recall $resRecall below floor")
   }
 
-  test("IVFADC index: cid-partitioned persist/reload reproduces both compute paths with pruning") {
+  test("IVFADC index: cid-partitioned persist/reload reproduces the in-memory index, raw and residual") {
     val emb   = plantedCorpus()
     val cents = Ann.ivfFit(emb, c = 16, iters = 3)
     for (residual <- Seq(false, true)) {
@@ -872,10 +932,8 @@ class AnnSpec extends AnyFunSuite {
       val index = spark.read.parquet(out)
       for (p <- Seq(0L, 55L, 190L)) {
         val probe = Ann.probeVector(emb, p)
-        val fresh =
-          (if (residual) Ann.ivfPqResTopK(emb, p, 10, cents, books, nprobe = 4)
-           else Ann.ivfPqTopK(emb, p, 10, cents, books, nprobe = 4))
-            .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+        val fresh = ivfPqQuery(emb, cents, books, p, residual = residual)
+          .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
         val viaIdx = Ann.ivfPqQueryIndex(index, emb, cents, books, probe, k = 10,
             nprobe = 4, residual = residual)
           .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
@@ -894,7 +952,6 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("PQ append under a frozen codebook is bit-identical to a full rebuild") {
-    import org.apache.spark.sql.functions.col
     val emb   = plantedCorpus()
     val base  = emb.where(col("vec_id") < 180L)
     val batch = emb.where(col("vec_id") >= 180L)
@@ -913,7 +970,6 @@ class AnnSpec extends AnyFunSuite {
 
   test("cell-local compaction rewrites ONLY hit cells; emptied cells vanish; result equals rebuild") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val emb   = plantedCorpus()
     val cents = Ann.ivfFit(emb, c = 8, iters = 2)
     val books = Ann.pqFit(emb, m = 8, ksub = 16, iters = 2)
@@ -964,7 +1020,6 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("pqKnnJoin recovers the exact batch join's neighbors through the compressed pair pass") {
-    import org.apache.spark.sql.functions.col
     val emb   = plantedCorpus()
     val books = Ann.pqFit(emb, m = 8, ksub = 16, iters = 3)
     val probes = emb.where(col("vec_id").isin(0L, 55L, 111L, 190L))
@@ -987,7 +1042,6 @@ class AnnSpec extends AnyFunSuite {
 
   test("the maintenance pair also serves the plain-IVF index layout (append + compaction)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // ivfPqCompactCells and union-append are layout-generic: anything
     // cid-partitioned and keyed by idCol — pin it on q_ivf_idx's
     // (vec_id, embedding, cid) frame so the IVF index's maintenance
